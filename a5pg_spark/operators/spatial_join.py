@@ -2,24 +2,32 @@
 
 Re-expresses the reference's demonstrated pattern
 (tests/elephant_a5_cells.sql: polygon → sampled points → cells → DISTINCT)
-as a scale-first DataFrame program (SURVEY.md §2.4.1):
+as a scale-first DataFrame program (SURVEY.md §2.4.1), in the standard
+filter-and-refine shape:
 
-1. **cover**: each polygon → covering cell set at resolution R, classified
-   ``interior`` (cell fully inside — accepted without refinement) or
-   ``boundary`` (needs the exact test).  Computed distributed via
-   ``applyInPandas`` (one polygon per group), then materialized driver-side —
-   covers are the small dimension side, and broadcasting a raw
-   applyInPandas plan re-executes its Python stage inside the broadcast
-   exchange (measured 3× slower).
-2. **join**: points get their res-R cell (Arrow UDF) and equi-join the
-   broadcast cover on ``cell`` — Catalyst sees a plain broadcast-hash join;
-   payload columns are never touched (column pruning).
-3. **refine**: rows matched through *boundary* cells run an exact even-odd
-   crossing test **as a native Catalyst expression** (higher-order aggregate
-   over the polygon's edge list, carried on the broadcast row).  No Python
-   operator after the join: a pandas UDF downstream of a broadcast join
-   measured ~10× slower per stage than the native filter, and at 100 TB the
-   refinement must stay inside whole-stage codegen anyway.
+1. **MBR filter**: one inclusive lon/lat box per part (from the polygon
+   layer's edges, collected once) and the OR of the boxes as a plain filter
+   on the points, *below* the encode — it reaches the parquet scan as
+   PushedFilters, and only rows some part could contain are encoded.
+2. **native encode**: the surviving points get their res-R cell from the
+   JVM-native encode (functions_native.encode_native), no Python worker.
+3. **broadcast equi-join**: each polygon's covering cell set at resolution
+   R, classified ``interior`` (cell fully inside — accepted without
+   refinement) or ``boundary`` (needs the exact test), is built once per
+   layer (``applyInPandas``, one polygon per group), materialized driver-side
+   and broadcast as an Arrow-built local relation; points equi-join it on
+   ``cell``, then attach their part's edge list through a second tiny
+   broadcast.
+4. **native refine**: rows matched through *boundary* cells run an exact
+   even-odd crossing test as a native Catalyst expression (higher-order
+   aggregate over the part's edge list).  No Python operator after the
+   join: a pandas UDF downstream of a broadcast join measured ~10× slower
+   per stage than the native filter.
+
+The box filter is exact for the refine step: the even-odd test and the
+Point equality test are both planar in lon/lat, so a row outside every box
+fails both.  Rings that cross the antimeridian get a latitude-only band
+instead (see ``_mbr_filter``).
 """
 
 from __future__ import annotations
@@ -237,18 +245,14 @@ def _cover_cache_put(key, value):
     _COVER_CACHE[key] = value
 
 
-def polygon_cover(
-    polygons: DataFrame, res: int, segment_deg: float | None = None,
-    grid_n: int | None = None,
-) -> DataFrame:
+def polygon_cover(polygons: DataFrame, res: int) -> DataFrame:
     """(part, geom_json) → (part, cell, interior) covering cells at ``res``.
 
     EXACT (round 2): hierarchical descent with cell-vs-polygon intersection
     tests (vertex PIP + inclusive segment crossing + polygon-vertex-in-cell)
     replaces round 1's point sampling, which missed cells whose polygon
     overlap was smaller than the sampling density and accepted concave-edge
-    false positives.  ``segment_deg``/``grid_n`` are kept for API
-    compatibility and ignored.
+    false positives.
     """
 
     def cover_one(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -282,14 +286,24 @@ def polygon_cover(
     )
 
 
-def _edge_rows(polygons) -> list:
-    """Driver-side: (part, edges, is_point, px, py) — all rings' edges
-    concatenated (even-odd works across outer ring + holes).  Accepts the
-    polygon DataFrame or its already-collected rows (so callers that need
-    the rows for other purposes pay the collect() job once)."""
+EDGES_SCHEMA = StructType(
+    [
+        StructField("part", StringType()),
+        StructField("edges", EDGE_TYPE),
+        StructField("is_point", BooleanType()),
+        StructField("px", DoubleType()),
+        StructField("py", DoubleType()),
+    ]
+)
+
+
+def _edge_rows(poly_rows: list) -> pd.DataFrame:
+    """Driver-side, from the collected (part, geom_json) rows: one
+    (part, edges, is_point, px, py) row per feature — all rings' edges
+    concatenated (even-odd works across outer ring + holes and across
+    MultiPolygon members)."""
     rows = []
-    collected = polygons if isinstance(polygons, list) else polygons.collect()
-    for r in collected:
+    for r in poly_rows:
         geom = json.loads(r.geom_json)
         if geom["type"] == "Point":
             x, y = geom["coordinates"]
@@ -300,13 +314,50 @@ def _edge_rows(polygons) -> list:
         for poly in polys:
             for ring in poly:
                 arr = np.asarray(ring, dtype=np.float64)
-                for i in range(len(arr)):
-                    a, b = arr[i], arr[(i + 1) % len(arr)]
+                for a, b in zip(arr, np.roll(arr, -1, axis=0)):
                     if a[0] == b[0] and a[1] == b[1]:
                         continue
-                    edges.append((float(a[0]), float(a[1]), float(b[0]), float(b[1])))
+                    edges.append({"x1": float(a[0]), "y1": float(a[1]),
+                                  "x2": float(b[0]), "y2": float(b[1])})
         rows.append((r.part, edges, False, 0.0, 0.0))
-    return rows
+    return pd.DataFrame(rows, columns=EDGES_SCHEMA.fieldNames())
+
+
+def _local_relation(spark, pdf: pd.DataFrame, schema: StructType) -> DataFrame:
+    """A small driver-side table as a relation.  With Arrow on (the session
+    default) it plans as a LocalTableScan, so reading it starts no Python
+    worker; ``createDataFrame`` over a Python list or RDD plans a Python
+    RDD scan instead."""
+    return spark.createDataFrame(pdf, schema)
+
+
+def _mbr_filter(edge_rows: pd.DataFrame, lon: Column, lat: Column) -> Column:
+    """OR of one inclusive lon/lat box per part (a Point gets a degenerate
+    box).  A point outside every box matches no part: the even-odd test and
+    the Point equality test are both planar in lon/lat.
+
+    A part whose ring longitudes leave [-180, 180] gets a latitude-only band
+    instead, as in ``cell_bbox_prefilter``: its cover is classified with
+    longitudes wrapped around the ring's centre, so an interior cell can
+    accept a point whose longitude lies outside the ring's box.  That band
+    also drops NaN longitudes, which encode to a real cell (a box drops
+    them by itself: NaN sorts above every double)."""
+    pred = F.lit(False)
+    for part in edge_rows.itertuples(index=False):
+        if part.is_point:
+            xs, ys = [part.px], [part.py]
+        else:
+            xs = [v for e in part.edges for v in (e["x1"], e["x2"])]
+            ys = [v for e in part.edges for v in (e["y1"], e["y2"])]
+            if not xs:
+                continue
+        box = lat.between(min(ys), max(ys))
+        if -180.0 <= min(xs) and max(xs) <= 180.0:
+            box = box & lon.between(min(xs), max(xs))
+        else:
+            box = box & ~F.isnan(lon)
+        pred = pred | box
+    return pred
 
 
 def pip_native(lon: Column, lat: Column, edges: Column) -> Column:
@@ -341,34 +392,22 @@ def spatial_join(
     broadcast_cover: bool = True,
 ) -> DataFrame:
     """Join points (lon/lat) against polygons (part, geom_json) → points
-    annotated with the containing ``part``.  Exact: interior-cell fast path;
-    boundary cells refined by the native even-odd test (zero Python after
-    the join)."""
+    annotated with the containing ``part``.  Exact: MBR filter, then
+    interior-cell fast path; boundary cells refined by the native even-odd
+    test (zero Python after the join)."""
     spark = points.sparkSession
-    edges_schema = StructType(
-        [
-            StructField("part", StringType()),
-            StructField("edges", EDGE_TYPE),
-            StructField("is_point", BooleanType()),
-            StructField("px", DoubleType()),
-            StructField("py", DoubleType()),
-        ]
-    )
     poly_rows = polygons.collect()  # the ONE collect of the small layer
     edge_rows = _edge_rows(poly_rows)
-    full_schema = StructType(COVER_SCHEMA.fields + edges_schema.fields[1:])
     if broadcast_cover:
         # materialize + driver-cache the cover keyed by (polygon layer, res):
         # the cover is the small dimension side; recomputing it per call was
         # round 1's dominant fixed cost (~4 s).  Broadcasting a raw
         # applyInPandas plan would also re-run its Python stage inside the
-        # broadcast exchange.  The cover⋈edges attach happens DRIVER-SIDE
-        # (both sides are driver-resident and polygon-layer-sized) and the
-        # finished broadcast DataFrame is cached per session — the previous
-        # shape ran a Spark join job + toPandas + re-upload on every call
-        # (measured 0.8 s warm, pure fixed cost in the bench headline).
+        # broadcast exchange.  The finished broadcast DataFrames are cached
+        # per session.
         key = (_COVER_ALGO_VERSION,
-               tuple(sorted((r[0], len(r[1]), r[3], r[4]) for r in edge_rows)),
+               tuple(sorted((p, len(e), x, y) for p, e, _, x, y
+                            in edge_rows.itertuples(index=False))),
                json.dumps(sorted(r.geom_json for r in poly_rows)),
                res)
         cached = _COVER_DF_CACHE.get(key)
@@ -396,41 +435,32 @@ def spatial_join(
                 _cover_cache_put(("materialized",) + key, cover_pd)
             # r06: broadcast the cover SLIM (part, cell, interior) and attach
             # the per-part edge lists through a SECOND tiny broadcast join
-            # (|parts| rows) AFTER the cell equi-join.  The previous shape
-            # replicated every part's full edge array onto each of its cover
-            # rows inside one Python-built relation — measured 5.6 s of
-            # executor CPU per query just deserializing the pickled edge
-            # structs (32 parallelize tasks x ~180 ms), all of it redundant:
-            # only the |matched| rows ever read the edges, and the slim
-            # cover pickles in ~30 ms.  Results are identical (the attach is
-            # a key-preserving 1:1 join on part).
-            data = [
-                (str(p), int(c), bool(i))
-                for p, c, i in cover_pd[["part", "cell", "interior"]]
-                .itertuples(index=False)
-            ]
-            # r06: pin the local-data parallelize to ONE slice each —
-            # createDataFrame defaults to defaultParallelism slices, i.e.
-            # 2x32 near-empty tasks per broadcast build (~140 ms of task
-            # overhead each, 0.8 s wall per query just to re-upload a few
-            # thousand driver-resident rows)
-            cover_slim = F.broadcast(spark.createDataFrame(
-                spark.sparkContext.parallelize(data, 1), COVER_SCHEMA))
-            edges_df = F.broadcast(spark.createDataFrame(
-                spark.sparkContext.parallelize(edge_rows, 1), edges_schema))
+            # (|parts| rows) AFTER the cell equi-join: only the matched rows
+            # ever read the edges, so replicating each part's edge array onto
+            # every one of its cover rows was pure deserialization cost.
+            # Results are identical (the attach is a key-preserving 1:1 join
+            # on part).  Both sides are Arrow-built local relations.
+            cover_slim = F.broadcast(_local_relation(
+                spark, cover_pd[["part", "cell", "interior"]], COVER_SCHEMA))
+            edges_df = F.broadcast(_local_relation(spark, edge_rows, EDGES_SCHEMA))
             cover_full = (cover_slim, edges_df)
             if len(_COVER_DF_CACHE) >= _COVER_CACHE_MAX:
                 _COVER_DF_CACHE.pop(next(iter(_COVER_DF_CACHE)))
             _COVER_DF_CACHE[key] = (spark, cover_full)
     else:
-        edges_df = spark.createDataFrame(edge_rows, edges_schema)
+        edges_df = _local_relation(spark, edge_rows, EDGES_SCHEMA)
         cover_full = polygon_cover(polygons, res).join(edges_df, "part")
 
-    # JVM-native encode on the big side: no Python workers in the probe path
-    # (functions_native.py — bit-exact vs the Arrow-UDF kernel)
+    # filter step on the source columns, below the encode: it reaches the
+    # parquet scan as PushedFilters, and only rows some part could contain
+    # run the JVM-native encode (functions_native.py — bit-exact vs the
+    # Arrow-UDF kernel; no Python workers in the probe path)
     from ..functions_native import encode_native
 
-    pts = encode_native(points, lon_col, lat_col, res, "__cell")
+    lon = F.col(lon_col)
+    lat = F.col(lat_col)
+    candidates = points.filter(_mbr_filter(edge_rows, lon, lat))
+    pts = encode_native(candidates, lon_col, lat_col, res, "__cell")
     if isinstance(cover_full, tuple):
         cover_slim, edges_attach = cover_full
         joined = pts.join(
@@ -439,8 +469,6 @@ def spatial_join(
     else:
         joined = pts.join(cover_full, pts["__cell"] == cover_full["cell"], "inner")
 
-    lon = F.col(lon_col)
-    lat = F.col(lat_col)
     keep = (
         F.col("interior")
         | (F.col("is_point") & (lon == F.col("px")) & (lat == F.col("py")))

@@ -8,8 +8,8 @@ from __future__ import annotations
 import json
 import re
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 ELEPHANT_SQL = "/root/reference/tests/elephant_a5_cells.sql"
 
@@ -36,10 +36,11 @@ def from_feature_collection(spark: SparkSession, fc: dict,
         (f["properties"][part_prop], json.dumps(f["geometry"]))
         for f in fc["features"]
     ]
-    # one slice: a handful of driver rows must not fan into
-    # defaultParallelism near-empty parallelize tasks on every collect
+    # built through Arrow from pandas: the relation plans as a LocalTableScan,
+    # so collecting or joining it starts no Python worker
     return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), "part string, geom_json string"
+        pd.DataFrame(rows, columns=["part", "geom_json"]),
+        "part string, geom_json string",
     )
 
 

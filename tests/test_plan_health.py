@@ -317,3 +317,51 @@ def test_route_cells_single_data_shuffle(spark, sf_dir):
     # all hash exchanges cluster on the (rid, cell)/(rid) rollup chain
     keys = set(re.findall(r"Exchange hashpartitioning\((\w+)#", plan))
     assert keys <= {"rid", "cell"}, keys
+
+
+def test_spatial_join_box_filter_below_encode_and_local_relations(spark, tmp_path):
+    """spatial_join's MBR filter must sit below the native encode's
+    projections and reach the parquet scan as PushedFilters; and the small
+    relations (the FeatureCollection layer, the slim cover, the per-part
+    edges) must plan as LocalTableScan with no Python RDD scan, on both
+    cover paths.  Arrow's silent fallback
+    (spark.sql.execution.arrow.pyspark.fallback.enabled) would otherwise
+    bring the Python workers back unnoticed."""
+    from a5pg_spark.operators.spatial_join import spatial_join
+    from a5pg_spark.sources.polygons import from_feature_collection
+
+    src = str(tmp_path / "pts")
+    spark.range(2000).selectExpr(
+        "id AS pid",
+        "CAST(id % 360 AS DOUBLE) - 180.0 AS lon",
+        "CAST(id % 160 AS DOUBLE) / 2.0 - 40.0 AS lat",
+    ).write.parquet(src)
+    square = [[[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0], [0.0, 0.0]]]
+    polys = from_feature_collection(spark, {"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {"part": "sq"},
+         "geometry": {"type": "Polygon", "coordinates": square}},
+        {"type": "Feature", "properties": {"part": "pin"},
+         "geometry": {"type": "Point", "coordinates": [10.0, 5.0]}},
+    ]})
+    layer_plan = _physical(polys)
+    assert "LocalTableScan" in layer_plan and "ExistingRDD" not in layer_plan, layer_plan
+
+    q = spatial_join(spark.read.parquet(src), polys, res=6)
+    # optimized plan, top-down: the filter on lon/lat must appear below the
+    # deepest encode projection (the one computing __vx from lon/lat)
+    lines = _optimized(q).splitlines()
+    enc = max(i for i, ln in enumerate(lines) if "AS __vx" in ln)
+    below = [ln for ln in lines[enc + 1:] if "Filter" in ln]
+    assert below and "lon" in below[0] and "lat" in below[0], "\n".join(lines)
+    jvm = spark._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    m = re.search(r"PushedFilters: \[([^\]]*)\]",
+                  q._jdf.queryExecution().explainString(mode))
+    assert m is not None and "lat" in m.group(1) and "lon" in m.group(1)
+
+    plan = _physical(q)
+    assert "ExistingRDD" not in plan, plan
+    assert plan.count("LocalTableScan") >= 2, plan  # slim cover + edges
+    slow = _physical(spatial_join(spark.read.parquet(src), polys, res=6,
+                                  broadcast_cover=False))
+    assert "ExistingRDD" not in slow and "LocalTableScan" in slow, slow

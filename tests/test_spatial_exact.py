@@ -110,3 +110,159 @@ def test_dissolve_union(spark):
     out = {r.part: _json.loads(r.geom_json) for r in dissolve(df).collect()}
     assert set(out) == {"a", "b"}
     assert all(g["type"] == "MultiPolygon" for g in out.values())
+
+
+# ---------------------------------------------------------------------------
+# spatial_join against a per-point even-odd brute force, over the inputs that
+# pin the MBR filter's semantics: concave polygon with a hole, MultiPolygon,
+# Point feature, a ring past the antimeridian, NULL/NaN coordinates, and an
+# empty layer.
+
+JOIN_RES = 7
+
+
+def _star(cx, cy, r_out, r_in, spikes, turn=0.0):
+    """Closed concave star ring, counter-clockwise."""
+    ang = turn + np.arange(2 * spikes) * np.pi / spikes
+    rad = np.where(np.arange(2 * spikes) % 2 == 0, r_out, r_in)
+    ring = [[float(cx + r * np.cos(a)), float(cy + r * np.sin(a))]
+            for a, r in zip(ang, rad)]
+    return ring + [ring[0]]
+
+
+def _even_odd(x, y, rings) -> bool:
+    """One point against every ring (outer rings, holes and MultiPolygon
+    members alike), with the refine step's crossing formula."""
+    if x is None or y is None:
+        return False
+    inside = False
+    for ring in rings:
+        for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
+            if (y1 > y) != (y2 > y) and x < (x2 - x1) * (y - y1) / (y2 - y1) + x1:
+                inside = not inside
+    return inside
+
+
+@pytest.fixture(scope="module")
+def exact_layer(spark, tmp_path_factory):
+    """Layer + points written as parquet (the scan the box filter is pushed
+    into; parquet keeps NaN and NULL apart)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # NaN coordinates encode to a real cell near (159.3, 52.9); the holey
+    # polygon covers that cell as interior (checked below), so a NaN row
+    # reaching the join would be accepted without refinement
+    holey = [_star(160.0, 53.0, 3.0, 1.6, 7),
+             _star(160.8, 53.5, 0.3, 0.3, 3)[::-1]]
+    pair = [[_star(5.0, -10.0, 1.5, 0.7, 5)], [_star(9.0, -7.0, 1.2, 0.5, 6, 0.3)]]
+    # ring longitudes 174..186: the cover wraps cells around lon 180
+    wrap = [_star(180.0, 52.0, 6.0, 3.5, 6, 0.2)]
+
+    rng = np.random.default_rng(3)
+    lon, lat = [], []
+    for (x0, x1, y0, y1), n in (((156.5, 163.5, 49.5, 56.5), 900),
+                                ((3.0, 10.5, -12.0, -5.5), 900),
+                                ((172.0, 188.0, 45.0, 59.0), 900),
+                                ((-180.0, -172.0, 45.0, 59.0), 600)):
+        lon.append(rng.uniform(x0, x1, n))
+        lat.append(rng.uniform(y0, y1, n))
+    # just inside each outer ring's extreme vertices (on the segment to the
+    # star's centre), so a box tighter than the ring's own would drop them
+    for ring, (cx, cy) in ((holey[0], (160.0, 53.0)), (pair[0][0], (5.0, -10.0)),
+                           (pair[1][0], (9.0, -7.0)), (wrap[0], (180.0, 52.0))):
+        r = np.asarray(ring)
+        for v in r[[r[:, 0].argmin(), r[:, 0].argmax(),
+                    r[:, 1].argmin(), r[:, 1].argmax()]]:
+            lon.append([v[0] + 1e-7 * (cx - v[0])])
+            lat.append([v[1] + 1e-7 * (cy - v[1])])
+    lon, lat = list(np.concatenate(lon)), list(np.concatenate(lat))
+    # the Point lies outside every polygon's box: only its own degenerate box
+    # admits it, and not its near misses
+    pin = (-60.0, 10.0)
+    bad = [(np.nan, 53.0), (160.0, np.nan), (np.nan, np.nan), (np.nan, 52.9),
+           (None, 53.0), (160.0, None), (None, None)]
+    for x, y in [pin, (-60.0 + 1e-9, 10.0), (-60.0, 10.0 - 1e-9), *bad]:
+        lon.append(x)
+        lat.append(y)
+    src = str(tmp_path_factory.mktemp("exact") / "pts")
+    pq.write_table(pa.table({
+        "pid": np.arange(len(lon)),
+        "lon": pa.array(lon, pa.float64(), from_pandas=False),
+        "lat": pa.array(lat, pa.float64(), from_pandas=False),
+    }), src)
+
+    feats = {
+        "holey": {"type": "Polygon", "coordinates": holey},
+        "pair": {"type": "MultiPolygon", "coordinates": pair},
+        "wrap": {"type": "Polygon", "coordinates": wrap},
+        "pin": {"type": "Point", "coordinates": list(pin)},
+    }
+    rings = {"holey": holey, "pair": [r for p in pair for r in p], "wrap": wrap}
+    want = set()
+    for pid, (x, y) in enumerate(zip(lon, lat)):
+        for part, rs in rings.items():
+            if _even_odd(x, y, rs):
+                want.add((pid, part))
+        if (x, y) == pin:
+            want.add((pid, "pin"))
+
+    # The wrap ring's cover is classified with longitudes wrapped around
+    # lon 180, so a point given at lon < -174 is accepted through the
+    # ring's interior cells (and only through them: the planar refine
+    # rejects it).  These rows survive only via the latitude-only band.
+    cov, interior = exact_cover_cells(wrap, JOIN_RES)
+    wrap_inner = set(int(c) for c in cov[interior])
+    far = np.asarray([x is not None and x < -172.0 for x in lon])
+    idx = np.nonzero(far)[0]
+    ids = C.lonlat_to_cell(np.asarray(lon, dtype=float)[idx],
+                           np.asarray(lat, dtype=float)[idx],
+                           np.full(len(idx), JOIN_RES))
+    via_wrap = {(int(i), "wrap") for i, c in zip(idx, ids) if int(c) in wrap_inner}
+    assert via_wrap, "no far-side point lands in an interior wrap cell"
+
+    # and the NaN rows are a real trap: NaN encodes to an interior cell of
+    # the holey polygon (a VALUES relation, not a FROM-less SELECT, which the
+    # optimizer would fold through every encode projection)
+    from a5pg_spark.functions_native import encode_native
+
+    nan = spark.sql(
+        "SELECT * FROM VALUES (CAST('NaN' AS DOUBLE), 53.0D) AS t(lon, lat)")
+    nan_cell = encode_native(nan, "lon", "lat", JOIN_RES, "cell").first().cell
+    cov, interior = exact_cover_cells(holey, JOIN_RES)
+    assert nan_cell in set(int(c) for c in cov[interior])
+    return {"src": src, "feats": feats, "want": want | via_wrap}
+
+
+def _layer(spark, feats):
+    from a5pg_spark.sources.polygons import from_feature_collection
+
+    return from_feature_collection(spark, {
+        "type": "FeatureCollection",
+        "features": [{"type": "Feature", "properties": {"part": p}, "geometry": g}
+                     for p, g in feats.items()],
+    })
+
+
+@pytest.mark.parametrize("broadcast_cover", [True, False])
+def test_spatial_join_exact_edge_inputs(spark, exact_layer, broadcast_cover):
+    from a5pg_spark.operators.spatial_join import spatial_join
+
+    pts = spark.read.parquet(exact_layer["src"])
+    polys = _layer(spark, exact_layer["feats"])
+    out = spatial_join(pts, polys, res=JOIN_RES, broadcast_cover=broadcast_cover)
+    got = {(r.pid, r.part) for r in out.select("pid", "part").collect()}
+    want = exact_layer["want"]
+    assert {p for _, p in want} == {"holey", "pair", "wrap", "pin"}
+    assert got == want, (sorted(got - want)[:10], sorted(want - got)[:10])
+
+
+@pytest.mark.parametrize("broadcast_cover", [True, False])
+def test_spatial_join_empty_layer(spark, exact_layer, broadcast_cover):
+    from a5pg_spark.operators.spatial_join import spatial_join
+
+    pts = spark.read.parquet(exact_layer["src"])
+    out = spatial_join(pts, _layer(spark, {}), res=JOIN_RES,
+                       broadcast_cover=broadcast_cover)
+    assert out.count() == 0
+    assert set(out.columns) == {"part", "pid", "lon", "lat"}
