@@ -2122,32 +2122,9 @@ def _q_events_session_window(spark, sf_dir):
     in both, new session iff diff > gap).  Complements events_sessionize,
     which builds the same islands explicitly."""
     _prep(spark, sf_dir)
-    import pyspark.sql.functions as F
+    from a5pg_spark.operators.sessions import session_window_stats
 
-    from a5pg_spark.operators.sessions import epoch_us
-
-    # r06: same one-exchange layout trick as events_sessionize — range
-    # partition by user_id up front so the session-window state operator's
-    # required clustering AND the terminal (user_id, start_us) order are both
-    # served by ONE exchange; the final sort becomes partition-local.
-    ev = spark.table("events").repartitionByRange(
-        spark.sparkContext.defaultParallelism, "user_id"
-    )
-    out = (
-        ev
-        .groupBy("user_id", F.session_window(F.col("ts"), "30 minutes"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            epoch_us(F.col("session_window.start")).alias("start_us"),
-            "n_events",
-            "sum_value",
-        )
-    )
-    return out.sortWithinPartitions("user_id", "start_us")
+    return session_window_stats(spark.table("events"), "user_id", "ts", 1800, "value")
 
 
 ORACLES_SQL["events_session_window"] = """

@@ -23,6 +23,15 @@ def point_to_s(px, py, res: int, entry, apex, exit_) -> np.ndarray:
     """Sierpiński index (2·(res−1) bits) of each point within its triangle.
 
     px/py: (N,) sector-frame coords; entry/apex/exit_: (2,) canonical triangle.
+
+    Each step takes the second child iff the point lies strictly on the
+    other side of the bisector QM from P: ``cr_pt · cr_p < 0`` with
+    ``cr_pt = (M−Q)×(pt−Q)`` and ``cr_p = (M−Q)×(P−Q)``.  Since M is the
+    midpoint of PR, ``cr_p = ½·orient(P, Q, R)``, and both children have the
+    opposite orientation to their parent, so the sign of ``cr_p`` only
+    alternates by level.  The loop therefore tests ``cr_pt < 0`` on levels
+    where ``cr_p > 0`` and ``cr_pt > 0`` on the others — the same bit for
+    ±0 and NaN, and the product never underflows for projected points.
     """
     n = px.shape[0]
     Px = np.full(n, entry[0]); Py = np.full(n, entry[1])
@@ -36,9 +45,9 @@ def point_to_s(px, py, res: int, entry, apex, exit_) -> np.ndarray:
     Mx = np.empty(n); My = np.empty(n)
     dx = np.empty(n); dy = np.empty(n)
     t1 = np.empty(n); t2 = np.empty(n)
-    sb = np.empty(n, dtype=np.uint64)
-    depth = 2 * (res - 1)
-    for _ in range(depth):
+    b = np.empty(n, dtype=bool); nb = np.empty(n, dtype=bool)
+    cr_p_pos = cr_p_positive(entry, apex, exit_)
+    for _ in range(2 * (res - 1)):
         np.add(Px, Rx, out=Mx); Mx *= 0.5
         np.add(Py, Ry, out=My); My *= 0.5
         np.subtract(Mx, Qx, out=dx)
@@ -46,23 +55,28 @@ def point_to_s(px, py, res: int, entry, apex, exit_) -> np.ndarray:
         # cr_pt = dx·(py−Qy) − dy·(px−Qx)
         np.subtract(py, Qy, out=t1); t1 *= dx
         np.subtract(px, Qx, out=t2); t2 *= dy
-        t1 -= t2  # cr_pt
-        # cr_p = dx·(Py−Qy) − dy·(Px−Qx)
-        np.subtract(Py, Qy, out=t2); t2 *= dx
-        cr_p = t2
-        t3 = Px - Qx  # one temp per loop is acceptable
-        t3 *= dy
-        cr_p -= t3
-        b = (t1 * cr_p) < 0  # opposite side from P → second child
+        t1 -= t2
+        # opposite side from P → second child
+        (np.less if cr_p_pos else np.greater)(t1, 0.0, out=b)
+        cr_p_pos = not cr_p_pos
         s <<= np.uint64(1)
         np.add(s, b, out=s, casting="unsafe")
         # b==0 → (P, M, Q);  b==1 → (Q, M, R) — vectorized masked copies
         np.copyto(Px, Qx, where=b); np.copyto(Py, Qy, where=b)
-        nb = ~b
+        np.logical_not(b, out=nb)
         np.copyto(Rx, Qx, where=nb); np.copyto(Ry, Qy, where=nb)
         Qx, Mx = Mx, Qx  # swap buffers: Q ← M, old Q becomes scratch
         Qy, My = My, Qy
     return s
+
+
+def cr_p_positive(entry, apex, exit_) -> bool:
+    """Whether the first step's ``cr_p`` is positive for the triangle
+    (entry, apex, exit_); the sign flips on every later step."""
+    mx = (entry[0] + exit_[0]) * 0.5
+    my = (entry[1] + exit_[1]) * 0.5
+    return bool((mx - apex[0]) * (entry[1] - apex[1])
+                - (my - apex[1]) * (entry[0] - apex[0]) > 0)
 
 
 def s_to_triangle(s, res: int, entry, apex, exit_):

@@ -9,9 +9,10 @@ every encode stage.  This module builds the *same* math as
 
 * the dodecahedral forward projection as scalar expressions (trig functions
   are codegen'd built-ins; per-face constants are literal-array gathers);
-* the Sierpiński 2-bits-per-level loop as ONE ``aggregate()`` higher-order
-  function over a constant ``sequence`` with a struct accumulator — constant
-  expression size regardless of resolution (a naive unroll grows the tree
+* the Sierpiński 2-bits-per-level loop unrolled into one small ``select``
+  per bisection step (``_s_unrolled``), which whole-stage codegen fuses into
+  one span.  Each step reads the previous step's P/Q/R columns, so the
+  expression stays linear in the depth (a single-expression unroll grows
   exponentially through the P/Q/R dependencies).
 
 Exact equivalence with the NumPy kernel is asserted in
@@ -25,11 +26,11 @@ from __future__ import annotations
 import uuid
 
 import numpy as np
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .core import bits
 from .core.dodecahedron import FACE_AXES, FACE_ROT, TAN_DM
+from .core.hilbert import cr_p_positive
 from .core.projection import _ALPHAS, _SIGNS, AREA_TOT, TAN_36, TRI_APEX, TRI_ENTRY, TRI_EXIT, _K
 
 PI = float(np.pi)
@@ -37,22 +38,18 @@ PI_OVER_5 = PI / 5.0
 TWO_PI_OVER_5 = 2.0 * PI / 5.0
 
 
-def _gather(table: np.ndarray, idx: Column) -> Column:
-    """Literal-array gather: table[idx] as a Column (1-based element_at)."""
-    return F.element_at(F.array(*[F.lit(float(v)) for v in table]), idx + F.lit(1))
-
-
 def _s_unrolled(d7, keep: list, depth: int):
-    """Sierpiński quaternary loop unrolled into 2 selects per bisection step.
+    """Sierpiński quaternary loop unrolled into one select per bisection step.
 
     Each step stays a small codegen'd projection over the previous step's
     attributes, so the whole chain fuses into whole-stage codegen (the
     aggregate() HOF form is interpreted — measured ~4 k rows/s/core vs
-    ~10× here).  Two selects per step: the shared midpoint/orientation test
-    (``__bb``) is materialized once, then the P/Q/R update references it —
-    ``__bb`` is non-cheap and multiply-referenced, which is exactly what
-    keeps CollapseProject from re-merging the stages into an exponential
-    single projection.
+    ~10× here).  The side test ``bb`` is written out in every IF of a step
+    rather than materialized as a column of its own: runtime subexpression
+    elimination evaluates it once per row, and a separate ``__bb`` select
+    measured no lower job CPU.  The multiply-referenced non-cheap IFs keep
+    CollapseProject from merging the steps into an exponential single
+    projection.
     """
     kq = [f"`{c}`" for c in keep]
     cur = d7.selectExpr(
@@ -68,17 +65,18 @@ def _s_unrolled(d7, keep: list, depth: int):
     # SQL strings, not Column ops: one py4j round trip per stage instead of
     # hundreds (measured: plan build 3.8 s -> ~1 s warm for depth 18); the
     # arithmetic is the identical double-precision op order as the NumPy
-    # kernel, with shortest-repr literals (bit-exact through parse).  One
-    # select per bisection step; ``bb`` is textually repeated but runtime
-    # subexpression elimination evaluates it once per row, and the
-    # multiply-referenced non-cheap IFs keep CollapseProject from merging
-    # steps into an exponential single projection.
+    # kernel, with shortest-repr literals (bit-exact through parse).
     mx = "((__sax + __scx) * 0.5D)"
     my = "((__say + __scy) * 0.5D)"
-    bb = (f"((({mx} - __sbx) * (__py - __sby) - ({my} - __sby) * (__px - __sbx))"
-          f" * (({mx} - __sbx) * (__say - __sby) - ({my} - __sby) * (__sax - __sbx))"
-          " < 0.0D)")
+    cr_pt = f"(({mx} - __sbx) * (__py - __sby) - ({my} - __sby) * (__px - __sbx))"
+    # hilbert.point_to_s's orientation-parity test: the sign of cr_p is fixed
+    # per level, so a step tests cr_pt < 0 or cr_pt > 0.  The latter is
+    # written as -(cr_pt) < 0 because Spark orders NaN above every double:
+    # NaN > 0 is true in SQL, NaN < 0 is false, as in NumPy.
+    cr_p_pos = cr_p_positive(TRI_ENTRY, TRI_APEX, TRI_EXIT)
     for _ in range(depth):
+        bb = f"({cr_pt} < 0.0D)" if cr_p_pos else f"((-{cr_pt}) < 0.0D)"
+        cr_p_pos = not cr_p_pos
         cur = cur.selectExpr(
             *kq,
             f"IF({bb}, __sbx, __sax) AS __sax",
@@ -92,27 +90,25 @@ def _s_unrolled(d7, keep: list, depth: int):
     return cur
 
 
-def encode_native(df, lon_col: str, lat_col: str, res: int, out_col: str = "cell",
-                  s_mode: str = "unroll", barrier: bool = True):
+def encode_native(df, lon_col: str, lat_col: str, res: int, out_col: str = "cell"):
     """DataFrame transform: add ``out_col`` = A5 cell id of (lon, lat) at
     ``res`` — entirely JVM-side (no Python workers).
 
     Built as a chain of ``select``s so each stage stays a small codegen'd
     projection; a single-Column form would embed the (expensive, multiply
-    referenced) face/projection subtrees into the interpreted HOF and
-    re-evaluate them per copy (measured ~200 rows/s vs ~1M rows/s here).
-    CollapseProject keeps the boundaries because the reused intermediates are
-    non-cheap.
+    referenced) face/projection subtrees into every bisection step and
+    re-evaluate them per copy.  CollapseProject keeps the boundaries because
+    the reused intermediates are non-cheap.
 
-    Pushdown contract (``barrier=True``, the default for ``s_mode='unroll'``):
-    the result is wrapped in a ``CollectMetrics`` node (``df.observe``) that
-    ``PushPredicateThroughNonJoin`` cannot cross, so NO downstream predicate
-    — on ``out_col`` OR on untouched passthrough columns — is substituted
-    into the ~25 unrolled projections.  This barrier is STRUCTURAL: the
-    previous nondeterministic-alias fence (``when(rand(17) > -1, cell)``)
-    only protected the join path — Spark 4.1's PushPredicateThroughNonJoin
-    still substitutes a *Filter* condition through nondeterministic project
-    aliases, exploding the optimizer exponentially (measured: JVM
+    Pushdown contract: the result is wrapped in a ``CollectMetrics`` node
+    (``df.observe``) that ``PushPredicateThroughNonJoin`` cannot cross, so NO
+    downstream predicate — on ``out_col`` OR on untouched passthrough
+    columns — is substituted into the ~25 unrolled projections.  This
+    barrier is STRUCTURAL: the previous nondeterministic-alias fence
+    (``when(rand(17) > -1, cell)``) only protected the join path — Spark
+    4.1's PushPredicateThroughNonJoin still substitutes a *Filter* condition
+    through nondeterministic project aliases, exploding the optimizer
+    exponentially (measured: JVM
     StackOverflow in transformUp after 600 s+ on a res-5 encode with an
     equality filter on top).  CollectMetrics blocks both paths, keeps the
     column deterministic AND non-nullable, and costs one accumulator-only
@@ -125,9 +121,7 @@ def encode_native(df, lon_col: str, lat_col: str, res: int, out_col: str = "cell
     operators (spatial join, kNN, tiling) already do both.  To prune the
     *scan* by a cell region, use :func:`cell_bbox_prefilter` (translates
     cells into a lon/lat bounding predicate on the source columns — those
-    DO reach the parquet scan as PushedFilters).  ``barrier=False`` yields
-    a pushdown-transparent column — safe for ``s_mode='hof'`` (constant
-    plan size), or when nothing downstream filters/joins on the output.
+    DO reach the parquet scan as PushedFilters).
     """
     if res < 0 or res > bits.MAX_RES:
         raise ValueError(f"resolution out of range 0..{bits.MAX_RES}")
@@ -214,52 +208,12 @@ def encode_native(df, lon_col: str, lat_col: str, res: int, out_col: str = "cell
         f"{re} * {ratio} * sin(__ap) * __mirror AS __py",
     )
 
-    # Sierpinski quaternary loop: "unroll" = 2 codegen'd selects per step
-    # (default, whole-stage codegen); "hof" = ONE aggregate() with a struct
-    # accumulator (interpreted, constant plan size — kept for very high res)
     depth = 2 * (res - 1)
     if depth == 0:
-        s_col = F.lit(0).cast("bigint")
-    elif s_mode == "unroll":
+        d8 = d7.select(*others, "__face", "__q", F.lit(0).cast("bigint").alias("__s"))
+    else:
         cur = _s_unrolled(d7, [*others, "__face", "__q", "__px", "__py"], depth)
         d8 = cur.select(*others, "__face", "__q", F.col("__ss").alias("__s"))
-        s_col = None
-    else:
-        init = F.struct(
-            F.lit(float(TRI_ENTRY[0])).alias("Px"), F.lit(float(TRI_ENTRY[1])).alias("Py"),
-            F.lit(float(TRI_APEX[0])).alias("Qx"), F.lit(float(TRI_APEX[1])).alias("Qy"),
-            F.lit(float(TRI_EXIT[0])).alias("Rx"), F.lit(float(TRI_EXIT[1])).alias("Ry"),
-            F.lit(0).cast("bigint").alias("s"),
-            # carried point (names must not collide case-insensitively with Px/Py)
-            F.col("__px").alias("ptx"), F.col("__py").alias("pty"),
-        )
-
-        def step(acc: Column, _i: Column) -> Column:
-            Mx = (acc["Px"] + acc["Rx"]) * F.lit(0.5)
-            My = (acc["Py"] + acc["Ry"]) * F.lit(0.5)
-            dx = Mx - acc["Qx"]
-            dy = My - acc["Qy"]
-            cr_pt = dx * (acc["pty"] - acc["Qy"]) - dy * (acc["ptx"] - acc["Qx"])
-            cr_p = dx * (acc["Py"] - acc["Qy"]) - dy * (acc["Px"] - acc["Qx"])
-            bbit = (cr_pt * cr_p) < F.lit(0.0)
-            return F.struct(
-                F.when(bbit, acc["Qx"]).otherwise(acc["Px"]).alias("Px"),
-                F.when(bbit, acc["Qy"]).otherwise(acc["Py"]).alias("Py"),
-                Mx.alias("Qx"), My.alias("Qy"),
-                F.when(bbit, acc["Rx"]).otherwise(acc["Qx"]).alias("Rx"),
-                F.when(bbit, acc["Ry"]).otherwise(acc["Qy"]).alias("Ry"),
-                F.shiftleft(acc["s"], 1).bitwiseOR(
-                    F.when(bbit, F.lit(1)).otherwise(F.lit(0)).cast("bigint")
-                ).alias("s"),
-                acc["ptx"].alias("ptx"), acc["pty"].alias("pty"),
-            )
-
-        s_col = F.aggregate(
-            F.sequence(F.lit(1), F.lit(depth)), init, step, lambda acc: acc["s"]
-        )
-
-    if s_col is not None:
-        d8 = d7.select(*others, "__face", "__q", s_col.alias("__s"))
 
     origin = (F.lit(5) * F.col("__face") + F.col("__q")).cast("bigint")
     p = 59 - 2 * res
@@ -269,17 +223,14 @@ def encode_native(df, lon_col: str, lat_col: str, res: int, out_col: str = "cell
         .bitwiseOR(F.lit(1 << p).cast("bigint"))
     )
     cell = u.cast("long")
-    out = d8.select(*others, cell.alias(out_col))
-    if s_mode == "unroll" and barrier:
-        # Structural optimizer barrier (see the pushdown contract in the
-        # docstring): CollectMetrics is not in PushPredicateThroughNonJoin's
-        # match list, so no predicate is ever substituted into the unroll.
-        # The metric name must be unique per distinct plan subtree; a uuid
-        # keeps two different encodes in one query from colliding (the SAME
-        # node reused via self-join is fine).
-        out = out.observe(f"a5_encode_barrier_{uuid.uuid4().hex[:12]}",
-                          F.count(F.lit(1)).alias("rows"))
-    return out
+    # Structural optimizer barrier (see the pushdown contract in the
+    # docstring): CollectMetrics is not in PushPredicateThroughNonJoin's
+    # match list, so no predicate is ever substituted into the unroll.
+    # The metric name must be unique per distinct plan subtree; a uuid
+    # keeps two different encodes in one query from colliding (the SAME
+    # node reused via self-join is fine).
+    return d8.select(*others, cell.alias(out_col)).observe(
+        f"a5_encode_barrier_{uuid.uuid4().hex[:12]}", F.count(F.lit(1)).alias("rows"))
 
 
 def cell_bbox_prefilter(df, lon_col: str, lat_col: str, cells,

@@ -92,6 +92,39 @@ def session_stats(
     return s.groupBy(key_col, "session_no").agg(*aggs)
 
 
+def session_window_stats(
+    df: DataFrame,
+    key_col: str = "user_id",
+    ts_col: str = "ts",
+    gap_seconds: int = 1800,
+    value_col: str = "value",
+) -> DataFrame:
+    """Per-session rollup through Spark's native ``session_window`` operator
+    (merging windows), the independent counterpart of ``session_stats``.
+
+    Output: (key, start_us, n_events, sum_value), sorted by (key, start_us)
+    within each partition.  ONE exchange: the up-front range partitioning
+    on the key serves both the session-window state operator's required
+    clustering and the output order, so the final sort is partition-local.
+    """
+    spark = df.sparkSession
+    ev = df.repartitionByRange(spark.sparkContext.defaultParallelism, key_col)
+    return (
+        ev.groupBy(key_col, F.session_window(F.col(ts_col), f"{gap_seconds} seconds"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum(value_col), 6).alias("sum_value"),
+        )
+        .select(
+            key_col,
+            epoch_us(F.col("session_window.start")).alias("start_us"),
+            "n_events",
+            "sum_value",
+        )
+        .sortWithinPartitions(key_col, "start_us")
+    )
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -1,12 +1,19 @@
-"""Bit-exact equivalence of the JVM-native encode with the NumPy kernel."""
+"""Bit-exact equivalence of the JVM-native encode with the NumPy kernel, and
+of the kernel's orientation-parity bisection test with the product form."""
 import numpy as np
 import pandas as pd
 import pytest
 
+from a5pg_spark.core import cells as C
+from a5pg_spark.core.dodecahedron import FACE_AXES
+from a5pg_spark.core.hilbert import point_to_s, s_to_triangle
+from a5pg_spark.core.projection import TRI_APEX, TRI_ENTRY, TRI_EXIT, forward
+
+TRI = (TRI_ENTRY, TRI_APEX, TRI_EXIT)
+
 
 @pytest.mark.parametrize("res", [0, 1, 5, 10, 28])
 def test_native_encode_matches_kernel(spark, res):
-    from a5pg_spark.core import cells as C
     from a5pg_spark.functions_native import encode_native
 
     rng = np.random.default_rng(11 + res)
@@ -17,3 +24,103 @@ def test_native_encode_matches_kernel(spark, res):
     pdf = encode_native(df, "lon", "lat", res, "c").toPandas()
     ref = C.lonlat_to_cell(pdf.lon.to_numpy(), pdf.lat.to_numpy(), np.full(len(pdf), res))
     assert int((pdf.c.to_numpy() != ref).sum()) == 0
+
+
+def _point_to_s_product(px, py, res, entry, apex, exit_):
+    """Reference bisection: the second child iff ``cr_pt · cr_p < 0``, with
+    both cross products computed at every step (the form the parity test in
+    ``hilbert.point_to_s`` replaces)."""
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    n = px.shape[0]
+    P = [np.full(n, entry[0]), np.full(n, entry[1])]
+    Q = [np.full(n, apex[0]), np.full(n, apex[1])]
+    R = [np.full(n, exit_[0]), np.full(n, exit_[1])]
+    s = np.zeros(n, dtype=np.uint64)
+    for _ in range(2 * (res - 1)):
+        mx = (P[0] + R[0]) * 0.5
+        my = (P[1] + R[1]) * 0.5
+        dx, dy = mx - Q[0], my - Q[1]
+        cr_pt = (py - Q[1]) * dx - (px - Q[0]) * dy
+        cr_p = (P[1] - Q[1]) * dx - (P[0] - Q[0]) * dy
+        b = (cr_pt * cr_p) < 0
+        s = (s << np.uint64(1)) | b.astype(np.uint64)
+        P = [np.where(b, Q[0], P[0]), np.where(b, Q[1], P[1])]
+        R = [np.where(b, R[0], Q[0]), np.where(b, R[1], Q[1])]
+        Q = [mx, my]
+    return s
+
+
+def _edge_lonlat(cell_points: bool):
+    """Lon/lat rows on which an inexact bisection test would show: face
+    centres, poles, ±180, signed zeros and NaN, plus (with ``cell_points``)
+    the centres and corners of cells, which lie on bisection lines.  The
+    JVM's and libm's trig differ by an ulp on some of those, moving them
+    across a face, quintant or bisection edge, so only the NumPy-only test
+    uses them."""
+    ax = np.asarray(FACE_AXES, dtype=np.float64)
+    rows = list(zip(np.degrees(np.arctan2(ax[:, 1], ax[:, 0])),
+                    np.degrees(np.arcsin(np.clip(ax[:, 2], -1.0, 1.0)))))
+    rows += [(0.0, 90.0), (0.0, -90.0), (123.4, 90.0), (-180.0, -90.0),
+             (180.0, 0.0), (-180.0, 0.0), (180.0, 45.5), (-180.0, -45.5),
+             (0.0, 0.0), (-0.0, 0.0), (0.0, -0.0), (-0.0, -0.0),
+             (np.nan, 10.0), (10.0, np.nan), (np.nan, np.nan)]
+    rng = np.random.default_rng(3)
+    for res in (2, 5, 8, 14) if cell_points else ():
+        lon = rng.uniform(-180, 180, 40)
+        lat = np.degrees(np.arcsin(rng.uniform(-1, 1, 40)))
+        ids = C.lonlat_to_cell(lon, lat, np.full(40, res))
+        rows += list(zip(*C.cell_to_lonlat(ids)))
+        for ring in C.cell_to_boundary_batch(ids, closed_ring=False, segments=1):
+            rows += [tuple(v) for v in ring]
+    lon, lat = np.array(rows, dtype=np.float64).T
+    return lon, lat
+
+
+def _edge_sector_points():
+    """Sector-frame points exactly on triangle vertices and bisection lines
+    of random cells at several depths, plus signed zeros and NaN."""
+    rng = np.random.default_rng(5)
+    pts = [np.asarray(v, dtype=np.float64) for v in TRI]
+    for res in (2, 3, 8, 14, 22, 29):
+        s = rng.integers(0, 1 << (2 * (res - 1)), 64, dtype=np.uint64)
+        P, Q, R = s_to_triangle(s, res, *TRI)
+        M = 0.5 * (P + R)
+        pts += [P, Q, R, M, 0.5 * (Q + M), 0.5 * (P + Q), 0.5 * (Q + R)]
+    x, y = np.concatenate([np.atleast_2d(p) for p in pts]).T
+    z, nan = [0.0, -0.0], np.nan
+    x = np.concatenate([x, z, z, [nan, 0.0, nan, 0.3]])
+    y = np.concatenate([y, z, z[::-1], [0.0, nan, nan, nan]])
+    return x, y
+
+
+@pytest.mark.parametrize("res", range(1, 30))
+def test_parity_bisection_matches_product_form(res):
+    rng = np.random.default_rng(100 + res)
+    lon = rng.uniform(-180, 180, 20_000)
+    lat = np.degrees(np.arcsin(rng.uniform(-1, 1, 20_000)))
+    elon, elat = _edge_lonlat(cell_points=True)
+    _, _, x, y = forward(np.concatenate([lon, elon]), np.concatenate([lat, elat]))
+    sx, sy = _edge_sector_points()
+    x, y = np.concatenate([x, sx]), np.concatenate([y, sy])
+    got = point_to_s(x, y, res, *TRI)
+    want = _point_to_s_product(x, y, res, *TRI)
+    assert np.array_equal(got, want)
+
+
+@pytest.mark.parametrize("res", [1, 8, 14, 29])
+def test_native_encode_matches_kernel_on_edge_rows(spark, res):
+    """Pins Spark's NaN ordering: NaN > 0 is true in SQL, so a flipped side
+    test written as ``cr_pt > 0`` would give NaN rows a 1 bit."""
+    from a5pg_spark.functions_native import encode_native
+
+    lon, lat = _edge_lonlat(cell_points=False)
+    # pandas → Arrow turns NaN into NULL, so NaN is rebuilt in SQL
+    df = spark.createDataFrame(pd.DataFrame({
+        "k": np.arange(len(lon)), "lon": np.nan_to_num(lon), "lat": np.nan_to_num(lat),
+        "lon_nan": np.isnan(lon), "lat_nan": np.isnan(lat),
+    })).selectExpr("k", "IF(lon_nan, CAST('NaN' AS DOUBLE), lon) AS lon",
+                   "IF(lat_nan, CAST('NaN' AS DOUBLE), lat) AS lat")
+    got = encode_native(df, "lon", "lat", res, "c").toPandas().sort_values("k")
+    want = C.lonlat_to_cell(lon, lat, np.full(len(lon), res))
+    assert np.array_equal(got.c.to_numpy(), want)

@@ -44,6 +44,19 @@ def test_encode_rollup_single_codegen_span_no_python(spark):
     assert plan.count("Exchange") <= 2  # shuffle for the agg (AQE may show one reused)
 
 
+def test_res8_encode_optimized_plan_is_small(spark):
+    """The unrolled encode repeats its bisection side test 7× per step, so
+    the plan size tracks that expression: the orientation-parity test
+    (hilbert.point_to_s) took the res-8 optimized plan from 28,064 to
+    20,203 chars.  Expression ids are stripped so the length does not grow
+    with the session's history."""
+    from a5pg_spark.functions_native import encode_native
+
+    pts = spark.range(10).selectExpr("CAST(id AS DOUBLE) AS lon", "CAST(id AS DOUBLE) AS lat")
+    plan = re.sub(r"#\d+L?", "#", _optimized(encode_native(pts, "lon", "lat", 8, "cell")))
+    assert len(plan) <= 25_000, len(plan)
+
+
 def test_join_on_encoded_cell_plans_in_bounded_time(spark):
     from a5pg_spark.functions_native import encode_native
 
@@ -330,6 +343,11 @@ def test_spatial_join_box_filter_below_encode_and_local_relations(spark, tmp_pat
     from a5pg_spark.operators.spatial_join import spatial_join
     from a5pg_spark.sources.polygons import from_feature_collection
 
+    # session.get_spark turns parquet-mr's dictionary row-group filter off
+    # (it never drops a row group of distinct lon/lat floats); the box
+    # filter must still reach the scan's PushedFilters below
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    assert hconf.get("parquet.filter.dictionary.enabled") == "false"
     src = str(tmp_path / "pts")
     spark.range(2000).selectExpr(
         "id AS pid",

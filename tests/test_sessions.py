@@ -17,7 +17,12 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
-from a5pg_spark.operators.sessions import asof_join, session_stats, sessionize
+from a5pg_spark.operators.sessions import (
+    asof_join,
+    session_stats,
+    session_window_stats,
+    sessionize,
+)
 
 
 def _ts(minute: float) -> dt.datetime:
@@ -126,3 +131,22 @@ def test_sessionize_and_asof_cost_one_exchange(spark, sf_dir):
         .executedPlan().toString()
     assert plan.count("Exchange rangepartitioning") == 1, plan
     assert plan.count("Exchange hashpartitioning") == 0, plan
+
+
+def test_session_window_stats_costs_one_range_exchange(spark, sf_dir):
+    """events_session_window's layout, pinned like events_sessionize's: the
+    up-front range exchange on user_id is the only Exchange (no hash exchange
+    for the session-window aggregate, no second one for the output order),
+    and the native session_window agrees with the gaps-and-islands rollup."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = session_window_stats(ev, "user_id", "ts", 1800, "value")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan, plan
+    assert plan.count("Exchange rangepartitioning") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 0, plan
+
+    got = sorted((r.user_id, r.n_events, r.sum_value) for r in df.collect())
+    want = sorted((r.user_id, r.n_events, r.sum_value)
+                  for r in session_stats(ev, "user_id", "ts", 1800, "value").collect())
+    assert got and [g[:2] for g in got] == [w[:2] for w in want]
+    assert [g[2] for g in got] == pytest.approx([w[2] for w in want], abs=2e-6)
