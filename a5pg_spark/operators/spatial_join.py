@@ -13,8 +13,8 @@ filter-and-refine shape:
    JVM-native encode (functions_native.encode_native), no Python worker.
 3. **broadcast equi-join**: each polygon's covering cell set at resolution
    R, classified ``interior`` (cell fully inside — accepted without
-   refinement) or ``boundary`` (needs the exact test), is built once per
-   layer (``applyInPandas``, one polygon per group), materialized driver-side
+   refinement) or ``boundary`` (needs the exact test), is built in NumPy on
+   the driver from the same collected layer, once per (layer, res, session),
    and broadcast as an Arrow-built local relation; points equi-join it on
    ``cell``, then attach their part's edge list through a second tiny
    broadcast.
@@ -221,32 +221,36 @@ def exact_cover_cells(poly: list, res: int) -> tuple:
     return np.concatenate(out_cells), np.concatenate(out_int)
 
 
-# bumped whenever exact_cover_cells/_classify_cells semantics change — part
-# of the disk-cache key so stale covers from spark-warehouse/covers/ are
-# never served across algorithm revisions (round-3 ADVICE)
-_COVER_ALGO_VERSION = 2
-
-# (geom_json, res) → cover pandas DataFrame; covers are polygon-layer-sized
-# (the small dimension side) and reused across spatial_join calls — the ~4 s
-# per-call cover cost measured in round 1 is paid once per layer now.
-_COVER_CACHE: dict = {}
-_COVER_CACHE_MAX = 32  # keys embed full geom_json strings — bound the memory
-
-# finished broadcast-ready cover DataFrames, keyed per (cover key, session).
-# Kept OUT of _COVER_CACHE: cover_one() below is cloudpickled to executors
-# and closes over _COVER_CACHE, so session-bound JVM handles stored there
-# would break applyInPandas serialization (SPARK-5063).
-_COVER_DF_CACHE: dict = {}
+def _members(geom: dict) -> list:
+    """A Polygon or MultiPolygon geometry → its polygons (lists of rings)."""
+    return [geom["coordinates"]] if geom["type"] == "Polygon" else geom["coordinates"]
 
 
-def _cover_cache_put(key, value):
-    if len(_COVER_CACHE) >= _COVER_CACHE_MAX:
-        _COVER_CACHE.pop(next(iter(_COVER_CACHE)))  # FIFO: oldest insertion
-    _COVER_CACHE[key] = value
+def _layer_cover(feats: list, res: int) -> pd.DataFrame:
+    """Driver-side, from the parsed (part, geometry) features: one
+    (part, cell, interior) row per covering cell of each part at ``res``.  A
+    Point covers its own cell as boundary.  Where two members of a part
+    disagree on a cell, boundary wins (the cell is refined exactly)."""
+    frames = []
+    for part, geom in feats:
+        if geom["type"] == "Point":
+            lon, lat = geom["coordinates"]
+            covers = [(_cells.lonlat_to_cell(np.array([lon]), np.array([lat]), res),
+                       np.zeros(1, dtype=bool))]
+        else:
+            covers = [exact_cover_cells(poly, res) for poly in _members(geom)]
+        frames += [pd.DataFrame({"part": part, "cell": np.asarray(ids, dtype=np.int64),
+                                 "interior": interior}) for ids, interior in covers]
+    if not frames:  # an empty layer
+        return pd.DataFrame({"part": [], "cell": [], "interior": []}).astype(
+            {"part": object, "cell": np.int64, "interior": bool})
+    return (pd.concat(frames, ignore_index=True)
+            .groupby(["part", "cell"], as_index=False, sort=False)["interior"].all())
 
 
 def polygon_cover(polygons: DataFrame, res: int) -> DataFrame:
-    """(part, geom_json) → (part, cell, interior) covering cells at ``res``.
+    """(part, geom_json) → (part, cell, interior) covering cells at ``res``,
+    built on the driver (the layer is the small side) as a local relation.
 
     EXACT (round 2): hierarchical descent with cell-vs-polygon intersection
     tests (vertex PIP + inclusive segment crossing + polygon-vertex-in-cell)
@@ -254,36 +258,8 @@ def polygon_cover(polygons: DataFrame, res: int) -> DataFrame:
     overlap was smaller than the sampling density and accepted concave-edge
     false positives.
     """
-
-    def cover_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_part, out_cell, out_int = [], [], []
-        for _, row in pdf.iterrows():
-            geom = json.loads(row.geom_json)
-            part = row.part
-            if geom["type"] == "Point":
-                lon, lat = geom["coordinates"]
-                cid = int(_cells.lonlat_to_cell(np.array([lon]), np.array([lat]), res)[0])
-                out_part.append(part); out_cell.append(cid); out_int.append(False)
-                continue
-            polys = [geom["coordinates"]] if geom["type"] == "Polygon" else geom["coordinates"]
-            for poly in polys:
-                key = (row.geom_json, json.dumps(poly[0][0]), res)
-                hit = _COVER_CACHE.get(key)
-                if hit is None:
-                    hit = exact_cover_cells(poly, res)
-                    _cover_cache_put(key, hit)
-                ids, interior = hit
-                out_part.extend([part] * len(ids))
-                out_cell.extend(int(c) for c in ids)
-                out_int.extend(bool(b) for b in interior)
-        return pd.DataFrame({"part": out_part, "cell": out_cell, "interior": out_int})
-
-    return (
-        polygons.repartition("part")
-        .groupBy("part")
-        .applyInPandas(lambda _key, pdf: cover_one(pdf), COVER_SCHEMA)
-        .dropDuplicates(["part", "cell"])
-    )
+    feats = [(r.part, json.loads(r.geom_json)) for r in polygons.collect()]
+    return _local_relation(polygons.sparkSession, _layer_cover(feats, res), COVER_SCHEMA)
 
 
 EDGES_SCHEMA = StructType(
@@ -297,21 +273,19 @@ EDGES_SCHEMA = StructType(
 )
 
 
-def _edge_rows(poly_rows: list) -> pd.DataFrame:
-    """Driver-side, from the collected (part, geom_json) rows: one
+def _edge_rows(feats: list) -> pd.DataFrame:
+    """Driver-side, from the parsed (part, geometry) features: one
     (part, edges, is_point, px, py) row per feature — all rings' edges
     concatenated (even-odd works across outer ring + holes and across
     MultiPolygon members)."""
     rows = []
-    for r in poly_rows:
-        geom = json.loads(r.geom_json)
+    for part, geom in feats:
         if geom["type"] == "Point":
             x, y = geom["coordinates"]
-            rows.append((r.part, [], True, float(x), float(y)))
+            rows.append((part, [], True, float(x), float(y)))
             continue
-        polys = [geom["coordinates"]] if geom["type"] == "Polygon" else geom["coordinates"]
         edges = []
-        for poly in polys:
+        for poly in _members(geom):
             for ring in poly:
                 arr = np.asarray(ring, dtype=np.float64)
                 for a, b in zip(arr, np.roll(arr, -1, axis=0)):
@@ -319,7 +293,7 @@ def _edge_rows(poly_rows: list) -> pd.DataFrame:
                         continue
                     edges.append({"x1": float(a[0]), "y1": float(a[1]),
                                   "x2": float(b[0]), "y2": float(b[1])})
-        rows.append((r.part, edges, False, 0.0, 0.0))
+        rows.append((part, edges, False, 0.0, 0.0))
     return pd.DataFrame(rows, columns=EDGES_SCHEMA.fieldNames())
 
 
@@ -383,73 +357,40 @@ def pip_native(lon: Column, lat: Column, edges: Column) -> Column:
     return (crossing % 2) == 1
 
 
+# (layer rows, res) → (session, broadcast cover, broadcast per-part edges).
+# Rebuilding the two Arrow-built relations costs ~0.1–0.2 s of CPU per call.
+_JOIN_SIDES: dict = {}
+_JOIN_SIDES_MAX = 32  # keys embed full geom_json strings — bound the memory
+
+
 def spatial_join(
     points: DataFrame,
     polygons: DataFrame,
     res: int,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    broadcast_cover: bool = True,
 ) -> DataFrame:
     """Join points (lon/lat) against polygons (part, geom_json) → points
     annotated with the containing ``part``.  Exact: MBR filter, then
     interior-cell fast path; boundary cells refined by the native even-odd
     test (zero Python after the join)."""
     spark = points.sparkSession
-    poly_rows = polygons.collect()  # the ONE collect of the small layer
-    edge_rows = _edge_rows(poly_rows)
-    if broadcast_cover:
-        # materialize + driver-cache the cover keyed by (polygon layer, res):
-        # the cover is the small dimension side; recomputing it per call was
-        # round 1's dominant fixed cost (~4 s).  Broadcasting a raw
-        # applyInPandas plan would also re-run its Python stage inside the
-        # broadcast exchange.  The finished broadcast DataFrames are cached
-        # per session.
-        key = (_COVER_ALGO_VERSION,
-               tuple(sorted((p, len(e), x, y) for p, e, _, x, y
-                            in edge_rows.itertuples(index=False))),
-               json.dumps(sorted(r.geom_json for r in poly_rows)),
-               res)
-        cached = _COVER_DF_CACHE.get(key)
-        if cached is not None and cached[0] is spark:
-            cover_full = cached[1]
-        else:
-            cover_pd = _COVER_CACHE.get(("materialized",) + key)
-            if cover_pd is None:
-                # disk-backed across processes: the cover depends only on the
-                # polygon layer + res, so persist it keyed by a content hash —
-                # bench/driver runs stop re-paying the exact-cover construction
-                import hashlib as _hl
-                import os as _os
-
-                digest = _hl.sha256(repr(key).encode()).hexdigest()[:16]
-                cache_path = _os.path.join("spark-warehouse", "covers", f"{digest}.parquet")
-                if _os.path.exists(cache_path):
-                    cover_pd = pd.read_parquet(cache_path)
-                else:
-                    cover_pd = polygon_cover(polygons, res).toPandas()
-                    _os.makedirs(_os.path.dirname(cache_path), exist_ok=True)
-                    tmp = cache_path + ".tmp"
-                    cover_pd.to_parquet(tmp)
-                    _os.replace(tmp, cache_path)
-                _cover_cache_put(("materialized",) + key, cover_pd)
-            # r06: broadcast the cover SLIM (part, cell, interior) and attach
-            # the per-part edge lists through a SECOND tiny broadcast join
-            # (|parts| rows) AFTER the cell equi-join: only the matched rows
-            # ever read the edges, so replicating each part's edge array onto
-            # every one of its cover rows was pure deserialization cost.
-            # Results are identical (the attach is a key-preserving 1:1 join
-            # on part).  Both sides are Arrow-built local relations.
-            cover_slim = F.broadcast(_local_relation(
-                spark, cover_pd[["part", "cell", "interior"]], COVER_SCHEMA))
-            edges_df = F.broadcast(_local_relation(spark, edge_rows, EDGES_SCHEMA))
-            cover_full = (cover_slim, edges_df)
-            if len(_COVER_DF_CACHE) >= _COVER_CACHE_MAX:
-                _COVER_DF_CACHE.pop(next(iter(_COVER_DF_CACHE)))
-            _COVER_DF_CACHE[key] = (spark, cover_full)
-    else:
-        edges_df = _local_relation(spark, edge_rows, EDGES_SCHEMA)
-        cover_full = polygon_cover(polygons, res).join(edges_df, "part")
+    rows = polygons.collect()  # the ONE collect of the small layer
+    feats = [(r.part, json.loads(r.geom_json)) for r in rows]
+    edge_rows = _edge_rows(feats)
+    key = (tuple((r.part, r.geom_json) for r in rows), res)
+    sides = _JOIN_SIDES.pop(key, None)
+    if sides is None or sides[0] is not spark:
+        # the cover goes out slim (part, cell, interior); the per-part edge
+        # lists attach through a second tiny broadcast AFTER the cell
+        # equi-join, so only the matched rows ever read them
+        sides = (spark,
+                 F.broadcast(_local_relation(spark, _layer_cover(feats, res), COVER_SCHEMA)),
+                 F.broadcast(_local_relation(spark, edge_rows, EDGES_SCHEMA)))
+        if len(_JOIN_SIDES) >= _JOIN_SIDES_MAX:
+            _JOIN_SIDES.pop(next(iter(_JOIN_SIDES)))  # least recently used
+    _JOIN_SIDES[key] = sides
+    _, cover, edges = sides
 
     # filter step on the source columns, below the encode: it reaches the
     # parquet scan as PushedFilters, and only rows some part could contain
@@ -461,13 +402,7 @@ def spatial_join(
     lat = F.col(lat_col)
     candidates = points.filter(_mbr_filter(edge_rows, lon, lat))
     pts = encode_native(candidates, lon_col, lat_col, res, "__cell")
-    if isinstance(cover_full, tuple):
-        cover_slim, edges_attach = cover_full
-        joined = pts.join(
-            cover_slim, pts["__cell"] == cover_slim["cell"], "inner"
-        ).join(edges_attach, "part")
-    else:
-        joined = pts.join(cover_full, pts["__cell"] == cover_full["cell"], "inner")
+    joined = pts.join(cover, pts["__cell"] == cover["cell"], "inner").join(edges, "part")
 
     keep = (
         F.col("interior")

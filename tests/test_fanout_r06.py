@@ -47,17 +47,16 @@ def test_fan_out_scan_is_row_neutral_and_gated(spark, tmp_path):
 
 def test_spatial_join_slim_cover_same_result(spark):
     """The r06 two-stage broadcast (slim cover join + per-part edge attach)
-    must give the identical point->part assignment as a non-broadcast cover
-    join (broadcast_cover=False exercises the old single-relation path)."""
+    must give the same point->part assignment as a NumPy even-odd test."""
     import json
 
+    import numpy as np
+
+    from a5pg_spark.operators.geometry import point_in_polygon
     from a5pg_spark.operators.spatial_join import spatial_join
 
-    square = {
-        "type": "Polygon",
-        "coordinates": [[[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0],
-                         [0.0, 0.0]]],
-    }
+    ring = [[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0], [0.0, 0.0]]
+    square = {"type": "Polygon", "coordinates": [ring]}
     polys = spark.createDataFrame(
         [("sq", json.dumps(square))], "part string, geom_json string"
     )
@@ -66,14 +65,12 @@ def test_spatial_join_slim_cover_same_result(spark):
         "CAST(id % 80 AS DOUBLE) / 10.0 - 2.0 AS lon",
         "CAST(id % 63 AS DOUBLE) / 10.0 - 1.0 AS lat",
     )
-    fast = spatial_join(pts, polys, res=6).select("pid", "part")
-    slow = spatial_join(pts, polys, res=6, broadcast_cover=False).select(
-        "pid", "part"
-    )
-    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
+    got = spatial_join(pts, polys, res=6).select("pid", "part").collect()
+    pid = np.arange(500)
+    inside = point_in_polygon((pid % 80) / 10.0 - 2.0, (pid % 63) / 10.0 - 1.0, [ring])
+    assert sorted(map(tuple, got)) == [(int(i), "sq") for i in pid[inside]]
     # sanity: some but not all points are inside
-    n = fast.count()
-    assert 0 < n < 500
+    assert 0 < len(got) < 500
 
 
 def test_queries_window_order_covers_unchecked():

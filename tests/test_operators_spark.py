@@ -29,20 +29,6 @@ class TestSpatialJoin:
         # every cover cell's origin is on face 3 quintant 4 (golden region)
         assert all(bits.origin_of(int(c)) == 19 for c in cover.cell)
 
-    def test_cover_after_join_still_pickles(self, spark, elephant):
-        """Regression: spatial_join caches the session-bound broadcast
-        DataFrame; that cache must live OUTSIDE _COVER_CACHE, which the
-        executor-pickled cover_one closure references — a JVM handle there
-        breaks applyInPandas serialization (SPARK-5063) only when a join
-        ran first."""
-        import pandas as pd
-        pts = spark.createDataFrame(
-            pd.DataFrame({"pid": [0], "lon": [0.1], "lat": [0.1]}))
-        spatial_join.spatial_join(pts, elephant, res=7).count()  # fills cache
-        assert any(isinstance(k, tuple) for k in spatial_join._COVER_DF_CACHE)
-        cover = spatial_join.polygon_cover(elephant, res=7).toPandas()
-        assert len(cover) > 0
-
     def test_spatial_join_matches_numpy_truth(self, spark, elephant):
         # deterministic probe grid over the elephant bbox (plus far-away noise)
         xs = np.linspace(-1.3, 1.3, 27)

@@ -336,8 +336,8 @@ def test_spatial_join_box_filter_below_encode_and_local_relations(spark, tmp_pat
     """spatial_join's MBR filter must sit below the native encode's
     projections and reach the parquet scan as PushedFilters; and the small
     relations (the FeatureCollection layer, the slim cover, the per-part
-    edges) must plan as LocalTableScan with no Python RDD scan, on both
-    cover paths.  Arrow's silent fallback
+    edges) must plan as LocalTableScan with no Python RDD scan.  Arrow's
+    silent fallback
     (spark.sql.execution.arrow.pyspark.fallback.enabled) would otherwise
     bring the Python workers back unnoticed."""
     from a5pg_spark.operators.spatial_join import spatial_join
@@ -380,6 +380,3 @@ def test_spatial_join_box_filter_below_encode_and_local_relations(spark, tmp_pat
     plan = _physical(q)
     assert "ExistingRDD" not in plan, plan
     assert plan.count("LocalTableScan") >= 2, plan  # slim cover + edges
-    slow = _physical(spatial_join(spark.read.parquet(src), polys, res=6,
-                                  broadcast_cover=False))
-    assert "ExistingRDD" not in slow and "LocalTableScan" in slow, slow

@@ -244,25 +244,98 @@ def _layer(spark, feats):
     })
 
 
-@pytest.mark.parametrize("broadcast_cover", [True, False])
-def test_spatial_join_exact_edge_inputs(spark, exact_layer, broadcast_cover):
+def test_spatial_join_exact_edge_inputs(spark, exact_layer):
     from a5pg_spark.operators.spatial_join import spatial_join
 
     pts = spark.read.parquet(exact_layer["src"])
     polys = _layer(spark, exact_layer["feats"])
-    out = spatial_join(pts, polys, res=JOIN_RES, broadcast_cover=broadcast_cover)
+    out = spatial_join(pts, polys, res=JOIN_RES)
     got = {(r.pid, r.part) for r in out.select("pid", "part").collect()}
     want = exact_layer["want"]
     assert {p for _, p in want} == {"holey", "pair", "wrap", "pin"}
     assert got == want, (sorted(got - want)[:10], sorted(want - got)[:10])
 
 
-@pytest.mark.parametrize("broadcast_cover", [True, False])
-def test_spatial_join_empty_layer(spark, exact_layer, broadcast_cover):
+def test_spatial_join_empty_layer(spark, exact_layer):
     from a5pg_spark.operators.spatial_join import spatial_join
 
     pts = spark.read.parquet(exact_layer["src"])
-    out = spatial_join(pts, _layer(spark, {}), res=JOIN_RES,
-                       broadcast_cover=broadcast_cover)
+    out = spatial_join(pts, _layer(spark, {}), res=JOIN_RES)
     assert out.count() == 0
     assert set(out.columns) == {"part", "pid", "lon", "lat"}
+
+
+# per part: (cover rows, interior rows) at JOIN_RES, as built by the
+# distributed applyInPandas cover this driver-side build replaced
+COVER_COUNTS = {"holey": (78, 15), "pair": (66, 8), "pin": (1, 0), "wrap": (300, 178)}
+
+
+def _cover_counts(cover) -> dict:
+    pdf = cover.toPandas()
+    return {p: (len(g), int(g.interior.sum())) for p, g in pdf.groupby("part")}
+
+
+def test_polygon_cover_counts(spark, exact_layer):
+    from a5pg_spark.operators.spatial_join import polygon_cover
+
+    cover = polygon_cover(_layer(spark, exact_layer["feats"]), JOIN_RES)
+    assert _cover_counts(cover) == COVER_COUNTS
+
+
+def test_cover_and_join_plan_without_python(spark, exact_layer):
+    """The cover is built on the driver: neither the cover nor the join
+    plans a Python worker."""
+    from a5pg_spark.operators.spatial_join import polygon_cover, spatial_join
+
+    polys = _layer(spark, exact_layer["feats"])
+    for df in (polygon_cover(polys, JOIN_RES),
+               spatial_join(spark.read.parquet(exact_layer["src"]), polys, res=JOIN_RES)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
+
+
+def test_join_builds_each_cover_once(spark, exact_layer, monkeypatch, tmp_path):
+    """One cover build per (layer, res, session), and nothing written
+    under the cwd."""
+    from a5pg_spark.operators import spatial_join as SJ
+
+    built = []
+
+    def counting(poly, res):
+        built.append(res)
+        return exact_cover_cells(poly, res)
+
+    monkeypatch.setattr(SJ, "exact_cover_cells", counting)
+    monkeypatch.setattr(SJ, "_JOIN_SIDES", {})
+    monkeypatch.chdir(tmp_path)
+    pts = spark.read.parquet(exact_layer["src"])
+    polys = _layer(spark, exact_layer["feats"])
+    members = 4  # holey, the pair's two polygons, wrap
+    first = {(r.pid, r.part) for r in SJ.spatial_join(pts, polys, JOIN_RES).collect()}
+    assert built == [JOIN_RES] * members
+    again = {(r.pid, r.part) for r in SJ.spatial_join(pts, polys, JOIN_RES).collect()}
+    assert again == first and len(built) == members
+    SJ.spatial_join(pts, polys, JOIN_RES - 1).count()
+    assert built[members:] == [JOIN_RES - 1] * members
+    assert _cover_counts(SJ.polygon_cover(polys, JOIN_RES)) == COVER_COUNTS
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_layer_cover_boundary_wins():
+    """Members of one part that disagree on a cell give one row for it, as
+    boundary."""
+    from a5pg_spark.operators.spatial_join import _layer_cover
+
+    big, small = [_star(5.0, -10.0, 1.5, 0.7, 5)], [_star(5.0, -10.0, 0.3, 0.3, 4)]
+    got = _layer_cover([("p", {"type": "MultiPolygon", "coordinates": [big, small]})],
+                       JOIN_RES)
+    covers = [{int(c): bool(i) for c, i in zip(*exact_cover_cells(m, JOIN_RES))}
+              for m in (big, small)]
+    assert any(covers[0].get(c) for c, i in covers[1].items() if not i)
+    want = {}
+    for cov in covers:
+        for c, i in cov.items():
+            want[c] = want.get(c, True) and i
+    assert len(got) == len(want)
+    assert {int(c): bool(i) for c, i in zip(got.cell, got.interior)} == want
