@@ -168,15 +168,11 @@ def rasterize_cells(spark, cell_values: DataFrame, bbox: tuple, w: int, h: int,
     )
     px = encode_native(grid.select("x", "y", "lon", "lat"),
                        "lon", "lat", res, "__cell")
-    # MATERIALIZE the values side before joining (localCheckpoint: executor
-    # blocks, no driver round-trip).  Joining a LIVE aggregate whose child is
-    # the ~25-stage unrolled encode spins the optimizer indefinitely
-    # (measured: >10 min at sf0.001 vs 1 s checkpointed — a join-side
-    # canonicalization walks the huge projection chain; the CollectMetrics
-    # barrier does not protect the AGGREGATE-above-encode shape).  The
-    # values layer is the small side by construction, so the checkpoint is
-    # cover-sized; callers with a huge layer should pre-materialize it
-    # themselves and pass broadcast_values=False.
+    # Materialize the values side before joining (localCheckpoint: executor
+    # blocks, no driver round-trip).  A live aggregate over the unrolled
+    # Catalyst encode spun the optimizer (>10 min at sf0.001 vs 1 s); that
+    # encode is gone, and ROADMAP item 3 A/Bs removing the checkpoint.  The
+    # values layer is the small side; pass broadcast_values=False for a huge one.
     vals = cell_values.withColumnRenamed(cell_col, "__vc").localCheckpoint()
     if broadcast_values:
         vals = F.broadcast(vals)

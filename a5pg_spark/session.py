@@ -29,6 +29,19 @@ os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
 
 from pyspark.sql import SparkSession
 
+from . import jvm
+
+
+def host_cpus() -> int:
+    """Cores the session may use: ``SPARK_GRAFT_CPUS``, else all of them."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+
+
+def _driver_memory() -> str:
+    """Half of physical RAM, at most 16g (Python workers need the rest)."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, ram // 2 // 2**30))}g"
+
 
 def get_spark(
     master: str | None = None,
@@ -36,7 +49,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    """The engine's session, with the encode kernel (``a5pg_spark/jvm``)
+    registered as ``a5_encode_jvm``."""
+    conf = dict(extra_conf or {})
+    # the jar must be on spark.jars before the JVM starts, so it is built first
+    conf["spark.jars"] = ",".join(filter(None, [conf.get("spark.jars"), jvm.build_jar()]))
+    cpus = host_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 32)
@@ -63,18 +81,16 @@ def get_spark(
         # 0.47 s of a job's 0.86 s of executor-task CPU.  Min/max statistics
         # still prune row groups.
         .config("spark.hadoop.parquet.filter.dictionary.enabled", "false")
-        # constraint propagation substitutes full alias chains into inferred
-        # join/filter constraints; with the deep native-encode expressions
-        # (functions_native.py) this explodes the optimized plan ~300×
-        # (measured: 7.4 MB plan / 199k duplicated subtrees, 388 s for a 40k-row
-        # broadcast join that runs in 0.5 s with this off)
+        # constraint propagation substituted the unrolled Catalyst encode's
+        # alias chains into inferred join/filter constraints (measured: 7.4 MB
+        # plan, 388 s for a 40k-row broadcast join that ran in 0.5 s with this
+        # off).  The encode is now one kernel call; ROADMAP item 3 A/Bs this.
         .config("spark.sql.constraintPropagation.enabled", "false")
-        # Dynamic partition pruning spends its time canonicalizing the join
-        # keys' full projection chains: ONE PartitionPruning invocation on a
-        # depth-2 unrolled-encode join measured 22 s (zero effect), and the
-        # depth-12 spatial join OOM'd the 16g driver during optimization.
-        # This engine reads unpartitioned parquet — file-level pruning comes
-        # from the snapshot layer's footer stats — so DPP can never fire.
+        # Dynamic partition pruning canonicalized the unrolled encode's join
+        # keys: ONE PartitionPruning invocation on a depth-2 join measured
+        # 22 s (zero effect), and the depth-12 spatial join OOM'd the 16g
+        # driver.  That chain is gone; ROADMAP item 3 A/Bs this.  DPP never
+        # fires on this engine's unpartitioned parquet anyway.
         .config("spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
         # same substitution pathology, different rule: InferFiltersFromGenerate
         # adds size(<generator input>)>0, and when the array is an expression
@@ -87,25 +103,37 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
-        # NOTE: spark.sql.streaming.noDataMicroBatches.enabled is NOT set
-        # here.  Disabling it session-wide (round 2/3) fixed availableNow
-        # termination for the stateful-dedup TTL path, but silently changed
-        # append-mode watermarked aggregations too (final windows are never
-        # emitted without a no-data batch to advance the watermark).  The
-        # conf is runtime-settable, so it is now scoped to the one path that
-        # needs it: streaming/ingest.streaming_dedup sets it on the stream's
-        # own session just before the query is built.
+        # spark.sql.streaming.noDataMicroBatches.enabled is not set here: it
+        # would change every watermarked aggregation, so only the stream that
+        # needs it sets it (streaming/ingest.streaming_dedup).
         # HotSpot refuses to JIT-compile methods over ~8 KB of bytecode
-        # (DontCompileHugeMethods): the unrolled res>=9 encode fuses ~25
-        # projections into one whole-stage-codegen method that crosses that
-        # line and silently runs interpreted — measured 4x cliff (2.5M ->
-        # 0.6M rows/s) between depth 14 and 16.  Disabling the guard restores
-        # compiled execution: 1.8M rows/s at res 10, flat through res 12.
-        .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # (DontCompileHugeMethods): the unrolled res>=9 Catalyst encode fused
+        # ~25 projections into one such method that silently ran interpreted
+        # (measured 4x cliff between depth 14 and 16).  The encode is now one
+        # small kernel call; ROADMAP item 3 A/Bs this flag.
+        # ParallelGC: G1's concurrent marking, started by humongous
+        # allocations, landed 0.13-0.2 s of GC-thread CPU on about one
+        # query in four; ParallelGC does no work outside its pauses.
+        # Tier4*Threshold x3: Spark's planner, scheduler and py4j code runs
+        # a few thousand times per query, so with the default thresholds C2
+        # kept compiling that long tail for dozens of queries (1-2 s of
+        # compile CPU per 1.3 s spatial-join job after three warm-up jobs).
+        # Per-row loops cross the raised thresholds within the first query.
+        .config("spark.driver.extraJavaOptions",
+                "-XX:-DontCompileHugeMethods -XX:+UseParallelGC "
+                "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
+                "-XX:Tier4CompileThreshold=45000")
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # PySpark records the Python call site of every Column and DataFrame
+        # call for error messages, at about eight py4j round trips each: a
+        # spatial_join plan build made ~1,400 round trips with it, 240-570
+        # without.  Errors still carry the JVM's message and plan context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    jvm.ensure(spark)
+    return spark

@@ -2,10 +2,6 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ..., "throughput_pts_per_sec": ...}.
-
-The same harness powers the two-parallelism scaling protocol
-(BASELINE.md): tools/run_scaling.py invokes it at SPARK_GRAFT_CPUS=8 and =32
-and reports throughput scaling efficiency.
 """
 
 from __future__ import annotations
@@ -101,22 +97,19 @@ def main() -> None:
         timings[name] = round(min(per_run), 3)
 
     # throughput metric: points/sec through the encode+rollup pipeline.
-    # Primary path is the JVM-native encode (functions_native.py — the shape
-    # that scales past 8 cores, see BENCH/BASELINE.md); the Arrow-UDF path is
-    # timed alongside for comparison.
+    # Primary path is the JVM-native encode (functions_native.py, the
+    # compiled kernel); the Arrow-UDF path is timed alongside for comparison.
     from pyspark.sql import functions as F
 
     from a5pg_spark.functions_native import encode_native
 
     # 2M JVM-generated points (orders at sf0.1 is only 150k rows — too small
     # to see past stage-launch fixed costs).  Plan BUILD is clocked
-    # separately from execution: building the ~25-stage unrolled encode
-    # costs ~1-3 s of driver-side py4j round trips ONCE per job, while a
-    # production job plans once and executes over 100 TB — folding the two
-    # into one rate understated the engine ~4x (r4: 3.9 s total of which
-    # 3.0 s build).  encode_sec/throughput keep single-shot (build+run)
-    # semantics for cross-round comparability; the *_exec fields are the
-    # plan-amortized rate (min of 2 runs of the same built plan).
+    # separately from execution (the old unrolled Catalyst encode spent 1-3 s
+    # building per job; the compiled kernel plans in milliseconds).
+    # encode_sec/throughput keep single-shot (build+run) semantics for
+    # cross-round comparability; the *_exec fields are the plan-amortized
+    # rate (min of 2 runs of the same built plan).
     n_points = 2_000_000
     pts = spark.range(n_points).selectExpr(
         "((id * 2654435761) % 360000000) / 1e6 - 180.0 AS lon",

@@ -9,10 +9,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 @pytest.fixture(scope="session")
 def spark():
     from a5pg_spark import functions as A
-    from a5pg_spark.session import get_spark
+    from a5pg_spark.session import get_spark, host_cpus
 
-    s = get_spark(master="local[8]", app_name="a5pg_spark_tests",
-                  shuffle_partitions=8)
+    s = get_spark(app_name="a5pg_spark_tests", shuffle_partitions=host_cpus())
     s.sparkContext.setLogLevel("ERROR")
     A.register(s)
     yield s

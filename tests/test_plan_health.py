@@ -3,8 +3,8 @@
 Each test pins a measured pathology (DESIGN.md §7) so a config or code
 change that reintroduces it fails loudly:
 
-* the unrolled native encode must stay one fused codegen span with zero
-  Python stages and exactly one Exchange for an encode+rollup;
+* the native encode must plan with zero Python stages and exactly one
+  Exchange for an encode+rollup;
 * joining on the encoded cell must PLAN in bounded time (dynamic partition
   pruning once spent 22 s/invocation at depth 2 and OOM'd at depth 12);
 * exploding ``a5_cell_to_children`` must not evaluate the children HOF
@@ -45,16 +45,16 @@ def test_encode_rollup_single_codegen_span_no_python(spark):
 
 
 def test_res8_encode_optimized_plan_is_small(spark):
-    """The unrolled encode repeats its bisection side test 7× per step, so
-    the plan size tracks that expression: the orientation-parity test
-    (hilbert.point_to_s) took the res-8 optimized plan from 28,064 to
-    20,203 chars.  Expression ids are stripped so the length does not grow
-    with the session's history."""
+    """The encode is one call of the compiled kernel, so its optimized plan
+    stays a few hundred chars at any resolution (the unrolled Catalyst
+    encode it replaced planned ~22,700 chars at res 8, growing with the
+    depth).  Expression ids are stripped so the length does not grow with
+    the session's history."""
     from a5pg_spark.functions_native import encode_native
 
     pts = spark.range(10).selectExpr("CAST(id AS DOUBLE) AS lon", "CAST(id AS DOUBLE) AS lat")
     plan = re.sub(r"#\d+L?", "#", _optimized(encode_native(pts, "lon", "lat", 8, "cell")))
-    assert len(plan) <= 25_000, len(plan)
+    assert len(plan) <= 1_000, len(plan)
 
 
 def test_join_on_encoded_cell_plans_in_bounded_time(spark):
@@ -93,7 +93,7 @@ def test_cell_bbox_prefilter_reaches_scan_and_fence_holds(spark, tmp_path):
     """cell_bbox_prefilter's lon/lat predicate must reach the parquet scan as
     PushedFilters (the pushdown-safe route around the encode barrier), and an
     exact post-encode cell filter on top must still plan in bounded time
-    (the barrier keeps the predicate from substituting through the unroll)."""
+    (the barrier keeps the predicate above the encode)."""
     import time as _t
 
     from a5pg_spark.core import cells as C
@@ -233,7 +233,7 @@ def test_cell_bbox_prefilter_completeness_random(spark):
 
 
 def test_rasterize_cells_plans_and_runs_bounded(spark, sf_dir):
-    """Joining a LIVE aggregate-over-the-unrolled-encode spins the optimizer
+    """Joining a LIVE aggregate over the old unrolled encode spun the optimizer
     indefinitely (>10 min measured); rasterize_cells materializes its values
     side (localCheckpoint) before the join, so the whole vector→raster query
     must finish in bounded time, cover the grid fully, and hit the region."""
@@ -334,7 +334,7 @@ def test_route_cells_single_data_shuffle(spark, sf_dir):
 
 def test_spatial_join_box_filter_below_encode_and_local_relations(spark, tmp_path):
     """spatial_join's MBR filter must sit below the native encode's
-    projections and reach the parquet scan as PushedFilters; and the small
+    projection and reach the parquet scan as PushedFilters; and the small
     relations (the FeatureCollection layer, the slim cover, the per-part
     edges) must plan as LocalTableScan with no Python RDD scan.  Arrow's
     silent fallback
@@ -366,9 +366,9 @@ def test_spatial_join_box_filter_below_encode_and_local_relations(spark, tmp_pat
 
     q = spatial_join(spark.read.parquet(src), polys, res=6)
     # optimized plan, top-down: the filter on lon/lat must appear below the
-    # deepest encode projection (the one computing __vx from lon/lat)
+    # projection that calls the encode kernel on lon/lat
     lines = _optimized(q).splitlines()
-    enc = max(i for i, ln in enumerate(lines) if "AS __vx" in ln)
+    enc = max(i for i, ln in enumerate(lines) if "a5_encode_jvm(" in ln)
     below = [ln for ln in lines[enc + 1:] if "Filter" in ln]
     assert below and "lon" in below[0] and "lat" in below[0], "\n".join(lines)
     jvm = spark._jvm

@@ -73,7 +73,14 @@ def test_commit_failure_leaves_pointer_unchanged(spark, tmp_path_factory, cells_
 
 def test_range_scan_prunes_files_exactly(spark, tmp_path_factory, cells_df):
     root = str(tmp_path_factory.mktemp("snap5"))
-    t = SnapshotTable.create(root, cells_df, sort_col="cell")
+    # the table writes one file per shuffle partition; pin 8 whatever the
+    # session's core count, so there are files to prune
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        t = SnapshotTable.create(root, cells_df, sort_col="cell")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
     m = t.manifest()
     assert m["metrics"]["n_files"] > 4, "need multiple files for pruning"
     # pick a range covering ~1 file
