@@ -30,53 +30,56 @@ def lonlat_to_cell(lon, lat, res, strict_i64: bool = False) -> np.ndarray:
 
     Mirrors ``a5_lonlat_to_cell`` (``src/lib.rs:25-39``).  Longitudes wrap
     (±360 accepted, ``tests/pg_regress/sql/errors.sql:29-32``); poles are
-    valid.  With ``strict_i64`` raises on ids above i64::MAX, matching the
-    reference's BIGINT overflow error; default wraps to two's complement.
+    valid; a NaN or infinite coordinate raises ``ValueError``.  ``res`` is
+    one resolution or one per point.  With ``strict_i64`` raises on ids
+    above i64::MAX, matching the reference's BIGINT overflow error; default
+    wraps to two's complement.
     """
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    res_arr = np.broadcast_to(np.asarray(res, dtype=np.int64), lon.shape)
-    if np.any(res_arr < 0) or np.any(res_arr > bits.MAX_RES):
+    lon, lat = np.broadcast_arrays(np.asarray(lon, dtype=np.float64),
+                                   np.asarray(lat, dtype=np.float64))
+    finite = np.isfinite(lon) & np.isfinite(lat)
+    if not finite.all():
+        i = np.unravel_index(np.argmin(finite), finite.shape)
+        raise ValueError(f"non-finite coordinate at {tuple(map(int, i))}: "
+                         f"lon={lon[i]!r}, lat={lat[i]!r}")
+    res = np.asarray(res, dtype=np.int64)
+    if res.size and (res.min() < 0 or res.max() > bits.MAX_RES):
         raise ValueError(f"resolution out of range 0..{bits.MAX_RES}")
 
-    # chunk large batches: the projection + Hilbert loop touch ~20 float64
-    # temporaries per point (~2 KB of stream traffic each); a 16 Ki chunk keeps
-    # the ~2.5 MB working set L2-resident, which measures 32×-parallel encode
-    # at near-perfect scaling (131 Ki chunks go DRAM-bound: 2× per-core CPU
-    # inflation at 32 workers)
-    chunk = 16384
-    if lon.ndim == 1 and lon.shape[0] > chunk:
-        out = np.empty(lon.shape[0], dtype=np.int64)
-        for lo in range(0, lon.shape[0], chunk):
-            hi = lo + chunk
-            out[lo:hi] = lonlat_to_cell(
-                lon[lo:hi], lat[lo:hi], res_arr[lo:hi], strict_i64=strict_i64
-            )
-        return out
-
-    face, q, x, y = forward(lon, lat)
-    origin = (5 * face + q).astype(np.uint64)
-
-    out = np.zeros(lon.shape, dtype=np.uint64)
-    # res 0: face cell
-    m0 = res_arr == 0
-    if np.any(m0):
-        out[m0] = (face[m0].astype(np.uint64) << np.uint64(58)) | np.uint64(1 << 57)
-    for r in np.unique(res_arr[~m0]):
-        m = res_arr == r
-        s = point_to_s(x[m], y[m], int(r), TRI_ENTRY, TRI_APEX, TRI_EXIT)
-        p = np.uint64(59 - 2 * int(r))
-        out[m] = (
-            (origin[m] << np.uint64(58))
-            | (s << (p + np.uint64(1)))
-            | (np.uint64(1) << p)
-        )
+    if res.ndim == 0:
+        out = _encode(lon.ravel(), lat.ravel(), int(res)).reshape(lon.shape)
+    else:
+        lon, lat, res = np.broadcast_arrays(lon, lat, res)
+        out = np.empty(lon.shape, dtype=np.uint64)
+        for r in np.unique(res):
+            m = res == r
+            out[m] = _encode(lon[m], lat[m], int(r))
     if strict_i64 and np.any(out > I64_MAX):
         bad = out[out > I64_MAX][0]
         raise OverflowError(
             f"A5 cell id {int(bad)} does not fit into BIGINT (signed 64-bit)"
         )
     return out.view(np.int64)
+
+
+def _encode(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
+    """Finite (N,) lon/lat → unsigned cell ids at one resolution."""
+    out = np.empty(lon.shape[0], dtype=np.uint64)
+    # chunked: the projection and the bisection loop stream ~20 arrays per
+    # point, and a 16 Ki chunk keeps that working set (~2.5 MB) in L2
+    # (131 Ki chunks go DRAM-bound and measured ~2× the CPU per point)
+    chunk = 16384
+    p = np.uint64(59 - 2 * res)
+    for lo in range(0, lon.shape[0], chunk):
+        face, q, x, y = forward(lon[lo:lo + chunk], lat[lo:lo + chunk])
+        if res == 0:
+            out[lo:lo + chunk] = (face.astype(np.uint64) << np.uint64(58)) | np.uint64(1 << 57)
+            continue
+        ids = (5 * face + q).astype(np.uint64) << np.uint64(58)
+        ids |= point_to_s(x, y, res) << (p + np.uint64(1))
+        ids |= np.uint64(1) << p
+        out[lo:lo + chunk] = ids
+    return out
 
 
 def _decode(cells) -> tuple:

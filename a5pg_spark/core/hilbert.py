@@ -12,71 +12,72 @@ is area-uniform in the plane; the plane is an equal-area image of the sphere —
 projection.py).  The reference's a5 crate instead tiles pentagons on a lattice
 (its source is unavailable here); the cell-id algebra, face/quintant layout,
 and areas agree — the intra-quintant vertex geometry differs.  See DESIGN.md §4.
+
+The encode (:func:`point_to_s`) bisects in integer barycentric coordinates.
+A point p = α·P + β·Q + γ·R lies on P's side of the bisector QM iff α ≥ γ,
+and the children's weights are linear in the parent's:
+
+* digit 0, (P, M, Q):  (α, β, γ) ← (α − γ, 2γ, β)
+* digit 1, (Q, M, R):  (α, β, γ) ← (β, 2α, γ − α)
+
+Rounded half-even once to fixed point (``ONE`` = 2^62), every level is exact
+integer arithmetic, so the bisections of the NumPy kernel, the JVM kernel
+(``jvm/A5Encode.java``) and the DuckDB oracle (``oracle_gen.py``) agree bit
+for bit on the same sector point, and a point on a bisector (α = γ) takes
+digit 0 in all three.  DESIGN.md §7 has the measurements.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from .projection import TRI_EXIT
 
-def point_to_s(px, py, res: int, entry, apex, exit_) -> np.ndarray:
-    """Sierpiński index (2·(res−1) bits) of each point within its triangle.
+ONE = 1 << 62
+# the canonical triangle has its apex at the origin and its entry and exit
+# vertices mirrored about the x axis, so a sector point's entry and exit
+# weights are α·ONE = px·WX − py·WY and γ·ONE = px·WX + py·WY
+WX = ONE / 2 / TRI_EXIT[0]
+WY = ONE / 2 / TRI_EXIT[1]
 
-    px/py: (N,) sector-frame coords; entry/apex/exit_: (2,) canonical triangle.
 
-    Each step takes the second child iff the point lies strictly on the
-    other side of the bisector QM from P: ``cr_pt · cr_p < 0`` with
-    ``cr_pt = (M−Q)×(pt−Q)`` and ``cr_p = (M−Q)×(P−Q)``.  Since M is the
-    midpoint of PR, ``cr_p = ½·orient(P, Q, R)``, and both children have the
-    opposite orientation to their parent, so the sign of ``cr_p`` only
-    alternates by level.  The loop therefore tests ``cr_pt < 0`` on levels
-    where ``cr_p > 0`` and ``cr_pt > 0`` on the others — the same bit for
-    ±0 and NaN, and the product never underflows for projected points.
+def point_to_s(px, py, res: int) -> np.ndarray:
+    """Sierpiński index (2·(res−1) bits) of each sector-frame point within
+    the canonical quintant triangle; px/py are finite (N,) float64 arrays.
+
+    The weights α and γ are rounded half-even once to multiples of 1/ONE
+    and clamped to the triangle (α, γ ≥ 0 and α + γ ≤ ONE).  The loop then
+    carries D = α − γ and β instead of (α, γ), and is branchless: with
+    m = D >> 63 (−1 for digit 1, else 0) and e = |D| − β, the next level
+    has D' = ±e (sign from m) and β' = ONE − β − |D|.
     """
-    n = px.shape[0]
-    Px = np.full(n, entry[0]); Py = np.full(n, entry[1])
-    Qx = np.full(n, apex[0]); Qy = np.full(n, apex[1])
-    Rx = np.full(n, exit_[0]); Ry = np.full(n, exit_[1])
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    s = np.zeros(n, dtype=np.uint64)
-    # preallocated scratch — the loop below runs up to 56× per call and fresh
-    # temporaries would dominate (first-touch faults are expensive here)
-    Mx = np.empty(n); My = np.empty(n)
-    dx = np.empty(n); dy = np.empty(n)
-    t1 = np.empty(n); t2 = np.empty(n)
-    b = np.empty(n, dtype=bool); nb = np.empty(n, dtype=bool)
-    cr_p_pos = cr_p_positive(entry, apex, exit_)
+    t = np.multiply(px, WX)
+    u = np.multiply(py, WY)
+    a = np.subtract(t, u)
+    np.add(t, u, out=t)
+    for w in (a, t):
+        np.maximum(w, 0.0, out=w)
+        np.minimum(w, float(ONE), out=w)
+        np.rint(w, out=w)
+    alpha, gamma = a.astype(np.int64), t.astype(np.int64)
+    np.minimum(gamma, ONE - alpha, out=gamma)
+    d = alpha - gamma
+    b = ONE - alpha
+    b -= gamma
+    s = np.zeros(d.shape[0], dtype=np.int64)
+    m = np.empty_like(d)
+    u = np.empty_like(d)
     for _ in range(2 * (res - 1)):
-        np.add(Px, Rx, out=Mx); Mx *= 0.5
-        np.add(Py, Ry, out=My); My *= 0.5
-        np.subtract(Mx, Qx, out=dx)
-        np.subtract(My, Qy, out=dy)
-        # cr_pt = dx·(py−Qy) − dy·(px−Qx)
-        np.subtract(py, Qy, out=t1); t1 *= dx
-        np.subtract(px, Qx, out=t2); t2 *= dy
-        t1 -= t2
-        # opposite side from P → second child
-        (np.less if cr_p_pos else np.greater)(t1, 0.0, out=b)
-        cr_p_pos = not cr_p_pos
-        s <<= np.uint64(1)
-        np.add(s, b, out=s, casting="unsafe")
-        # b==0 → (P, M, Q);  b==1 → (Q, M, R) — vectorized masked copies
-        np.copyto(Px, Qx, where=b); np.copyto(Py, Qy, where=b)
-        np.logical_not(b, out=nb)
-        np.copyto(Rx, Qx, where=nb); np.copyto(Ry, Qy, where=nb)
-        Qx, Mx = Mx, Qx  # swap buffers: Q ← M, old Q becomes scratch
-        Qy, My = My, Qy
-    return s
-
-
-def cr_p_positive(entry, apex, exit_) -> bool:
-    """Whether the first step's ``cr_p`` is positive for the triangle
-    (entry, apex, exit_); the sign flips on every later step."""
-    mx = (entry[0] + exit_[0]) * 0.5
-    my = (entry[1] + exit_[1]) * 0.5
-    return bool((mx - apex[0]) * (entry[1] - apex[1])
-                - (my - apex[1]) * (entry[0] - apex[0]) > 0)
+        np.right_shift(d, 63, out=m)
+        np.abs(d, out=u)
+        s += s
+        s -= m
+        np.subtract(u, b, out=d)
+        np.subtract(ONE, b, out=b)
+        b -= u
+        d ^= m
+        d -= m
+    return s.view(np.uint64)
 
 
 def s_to_triangle(s, res: int, entry, apex, exit_):

@@ -183,13 +183,6 @@ def register(spark: SparkSession) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _strict_mask(*series) -> pd.Series:
-    m = series[0].isna()
-    for s in series[1:]:
-        m = m | s.isna()
-    return m
-
-
 def _ids_i64(cell: pd.Series, validate: bool = True) -> tuple:
     """LongType series → ``(int64 ndarray, invalid bool ndarray)``.
 
@@ -235,16 +228,23 @@ def _ids_i64(cell: pd.Series, validate: bool = True) -> tuple:
     return ids, invalid
 
 
+def _encode_batch(lon: pd.Series, lat: pd.Series, res: pd.Series, strict_i64: bool) -> pd.Series:
+    """One Arrow batch of the encode: a NULL, NaN or infinite coordinate
+    (which ``cells.lonlat_to_cell`` refuses) or a NULL res gives NULL."""
+    lo = lon.to_numpy(dtype=np.float64, na_value=np.nan)
+    la = lat.to_numpy(dtype=np.float64, na_value=np.nan)
+    na = ~(np.isfinite(lo) & np.isfinite(la)) | res.isna().to_numpy()
+    rs = res.to_numpy(dtype=np.float64, na_value=2.0).astype(np.int64)
+    ids = cells.lonlat_to_cell(np.where(na, 0.0, lo), np.where(na, 0.0, la), rs,
+                               strict_i64=strict_i64)
+    out = pd.Series(ids, dtype="Int64")
+    out[na] = pd.NA
+    return out
+
+
 @pandas_udf(LongType())
 def _lonlat_to_cell_udf(lon: pd.Series, lat: pd.Series, res: pd.Series) -> pd.Series:
-    na = _strict_mask(lon, lat, res)
-    lo = lon.to_numpy(dtype=np.float64, na_value=0.0)
-    la = lat.to_numpy(dtype=np.float64, na_value=0.0)
-    rs = res.to_numpy(dtype=np.float64, na_value=2.0).astype(np.int64)
-    ids = cells.lonlat_to_cell(lo, la, rs)
-    out = pd.Series(ids, dtype="Int64")
-    out[na.to_numpy()] = pd.NA
-    return out
+    return _encode_batch(lon, lat, res, strict_i64=False)
 
 
 @pandas_udf(LongType())
@@ -252,14 +252,7 @@ def _lonlat_to_cell_strict_udf(lon: pd.Series, lat: pd.Series, res: pd.Series) -
     """Reference-parity overflow mode: errors on ids above i64::MAX exactly
     like a5pg's BIGINT guard (``src/lib.rs:32-37``) instead of wrapping to
     two's complement (the engine default, DESIGN.md §2.4)."""
-    na = _strict_mask(lon, lat, res)
-    lo = lon.to_numpy(dtype=np.float64, na_value=0.0)
-    la = lat.to_numpy(dtype=np.float64, na_value=0.0)
-    rs = res.to_numpy(dtype=np.float64, na_value=2.0).astype(np.int64)
-    ids = cells.lonlat_to_cell(lo, la, rs, strict_i64=True)
-    out = pd.Series(ids, dtype="Int64")
-    out[na.to_numpy()] = pd.NA
-    return out
+    return _encode_batch(lon, lat, res, strict_i64=True)
 
 
 @pandas_udf(ArrayType(DoubleType()))

@@ -5,9 +5,10 @@
 use): one scalar function inside the task's generated code, so a call plans
 in milliseconds at any resolution and no Python worker starts (the Arrow-UDF
 encode ``functions.a5_lonlat_to_cell`` runs one beside every task).  The
-kernel performs the NumPy kernel's double-precision operations in the same
-order with constants generated from ``core/``; tests/test_native_encode.py
-asserts bit-exact equality at every resolution, edge rows included.
+kernel's projection performs the NumPy kernel's double-precision operations
+in the same order, and its bisection is the same exact integer recurrence,
+with constants generated from ``core/``; tests/test_native_encode.py asserts
+bit-exact equality at every resolution, edge rows included.
 """
 
 from __future__ import annotations
@@ -23,8 +24,8 @@ from .core import bits
 
 def encode_native(df, lon_col: str, lat_col: str, res: int, out_col: str = "cell"):
     """DataFrame transform: add ``out_col`` = A5 cell id of (lon, lat) at
-    ``res``, computed in the JVM (no Python workers).  A NULL lon or lat
-    gives a NULL cell.
+    ``res``, computed in the JVM (no Python workers).  A NULL, NaN or
+    infinite lon or lat gives a NULL cell.
 
     Pushdown contract: the result is wrapped in a ``CollectMetrics`` node
     (``df.observe``), which ``PushPredicateThroughNonJoin`` cannot cross, so

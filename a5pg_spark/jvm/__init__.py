@@ -33,18 +33,15 @@ def source() -> str:
     """The kernel's Java source with the constants of ``core/`` filled in."""
     from ..core.bits import MAX_RES
     from ..core.dodecahedron import FACE_AXES, FACE_ROT, TAN_DM
-    from ..core.hilbert import cr_p_positive
-    from ..core.projection import (_ALPHAS, _K, _SIGNS, AREA_TOT, TAN_36, TRI_APEX,
-                                   TRI_ENTRY, TRI_EXIT)
+    from ..core.hilbert import ONE, WX, WY
+    from ..core.projection import _ALPHAS, _K, _SIGNS, AREA_TOT, TAN_36
 
     consts = {"double[][] FACE_AXES": FACE_AXES, "double[][][] FACE_ROT": FACE_ROT,
               "double[] ALPHAS": _ALPHAS, "double[] SIGNS": _SIGNS, "double K": _K,
-              "double TAN_36": TAN_36, "double AREA_TOT": AREA_TOT, "double TAN_DM": TAN_DM}
-    for name, v in (("ENTRY", TRI_ENTRY), ("APEX", TRI_APEX), ("EXIT", TRI_EXIT)):
-        consts[f"double {name}_X"], consts[f"double {name}_Y"] = v
+              "double TAN_36": TAN_36, "double AREA_TOT": AREA_TOT, "double TAN_DM": TAN_DM,
+              "double WX": WX, "double WY": WY}
     lines = [f"private static final {k} = {_java(v)};" for k, v in consts.items()]
-    positive = cr_p_positive(TRI_ENTRY, TRI_APEX, TRI_EXIT)
-    lines += [f"private static final boolean CR_P_POSITIVE = {str(positive).lower()};",
+    lines += [f"private static final long ONE = {ONE}L;",
               f"private static final int MAX_RES = {MAX_RES};"]
     with open(os.path.join(HERE, f"{CLASS}.java")) as f:
         return f.read().replace("/*CONSTANTS*/", "\n    ".join(lines))

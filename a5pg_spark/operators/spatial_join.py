@@ -314,8 +314,8 @@ def _mbr_filter(edge_rows: pd.DataFrame, lon: Column, lat: Column) -> Column:
     instead, as in ``cell_bbox_prefilter``: its cover is classified with
     longitudes wrapped around the ring's centre, so an interior cell can
     accept a point whose longitude lies outside the ring's box.  That band
-    also drops NaN longitudes, which encode to a real cell (a box drops
-    them by itself: NaN sorts above every double)."""
+    also drops NaN longitudes, as a box does by itself (NaN sorts above
+    every double), so no NaN row reaches the encode."""
     pred = F.lit(False)
     for part in edge_rows.itertuples(index=False):
         if part.is_point:
@@ -357,10 +357,28 @@ def pip_native(lon: Column, lat: Column, edges: Column) -> Column:
     return (crossing % 2) == 1
 
 
-# (layer rows, res) → (session, broadcast cover, broadcast per-part edges).
-# Rebuilding the two Arrow-built relations costs ~0.1–0.2 s of CPU per call.
+# (layer rows, res, lon_col, lat_col) → (session, broadcast cover, broadcast
+# per-part edges, box filter, refine predicate).  Rebuilding the two
+# Arrow-built relations costs ~0.1–0.2 s of CPU per call, and the two
+# Columns ~0.05 s of py4j round trips each.
 _JOIN_SIDES: dict = {}
 _JOIN_SIDES_MAX = 32  # keys embed full geom_json strings — bound the memory
+
+
+def _join_sides(spark, feats: list, res: int, lon: Column, lat: Column) -> tuple:
+    """The layer's side of the join: both broadcasts and both predicates."""
+    edge_rows = _edge_rows(feats)
+    # the cover goes out slim (part, cell, interior); the per-part edge
+    # lists attach through a second tiny broadcast AFTER the cell
+    # equi-join, so only the matched rows ever read them
+    cover = F.broadcast(_local_relation(spark, _layer_cover(feats, res), COVER_SCHEMA))
+    edges = F.broadcast(_local_relation(spark, edge_rows, EDGES_SCHEMA))
+    keep = (
+        F.col("interior")
+        | (F.col("is_point") & (lon == F.col("px")) & (lat == F.col("py")))
+        | (~F.col("is_point") & pip_native(lon, lat, F.col("edges")))
+    )
+    return spark, cover, edges, _mbr_filter(edge_rows, lon, lat), keep
 
 
 def spatial_join(
@@ -373,24 +391,19 @@ def spatial_join(
     """Join points (lon/lat) against polygons (part, geom_json) → points
     annotated with the containing ``part``.  Exact: MBR filter, then
     interior-cell fast path; boundary cells refined by the native even-odd
-    test (zero Python after the join)."""
+    test (zero Python after the join).  A NULL, NaN or infinite coordinate
+    matches no part."""
     spark = points.sparkSession
     rows = polygons.collect()  # the ONE collect of the small layer
-    feats = [(r.part, json.loads(r.geom_json)) for r in rows]
-    edge_rows = _edge_rows(feats)
-    key = (tuple((r.part, r.geom_json) for r in rows), res)
+    key = (tuple((r.part, r.geom_json) for r in rows), res, lon_col, lat_col)
     sides = _JOIN_SIDES.pop(key, None)
     if sides is None or sides[0] is not spark:
-        # the cover goes out slim (part, cell, interior); the per-part edge
-        # lists attach through a second tiny broadcast AFTER the cell
-        # equi-join, so only the matched rows ever read them
-        sides = (spark,
-                 F.broadcast(_local_relation(spark, _layer_cover(feats, res), COVER_SCHEMA)),
-                 F.broadcast(_local_relation(spark, edge_rows, EDGES_SCHEMA)))
+        feats = [(r.part, json.loads(r.geom_json)) for r in rows]
+        sides = _join_sides(spark, feats, res, F.col(lon_col), F.col(lat_col))
         if len(_JOIN_SIDES) >= _JOIN_SIDES_MAX:
             _JOIN_SIDES.pop(next(iter(_JOIN_SIDES)))  # least recently used
     _JOIN_SIDES[key] = sides
-    _, cover, edges = sides
+    _, cover, edges, box, keep = sides
 
     # filter step on the source columns, below the encode: it reaches the
     # parquet scan as PushedFilters, and only rows some part could contain
@@ -398,17 +411,8 @@ def spatial_join(
     # Arrow-UDF kernel; no Python workers in the probe path)
     from ..functions_native import encode_native
 
-    lon = F.col(lon_col)
-    lat = F.col(lat_col)
-    candidates = points.filter(_mbr_filter(edge_rows, lon, lat))
-    pts = encode_native(candidates, lon_col, lat_col, res, "__cell")
+    pts = encode_native(points.filter(box), lon_col, lat_col, res, "__cell")
     joined = pts.join(cover, pts["__cell"] == cover["cell"], "inner").join(edges, "part")
-
-    keep = (
-        F.col("interior")
-        | (F.col("is_point") & (lon == F.col("px")) & (lat == F.col("py")))
-        | (~F.col("is_point") & pip_native(lon, lat, F.col("edges")))
-    )
     return joined.filter(keep).drop(
         "cell", "interior", "edges", "is_point", "px", "py", "__cell"
     )

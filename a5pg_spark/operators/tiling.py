@@ -56,66 +56,73 @@ def pixels_to_cells(
     def tile(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for big in batches:
             for lo in range(0, len(big), SUB_BATCH):
-                yield from _tile_one(big.iloc[lo : lo + SUB_BATCH])
-
-    def _tile_one(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        for pdf in [pdf]:
-            # decode is per-image (variable shapes); everything downstream is
-            # vectorized across ALL pixels of the batch in single NumPy calls
-            imgs = [decode_image(bytes(r.bytes), r.fmt) for r in pdf.itertuples()]
-            if not imgs:
-                continue
-            lon0, lat0 = capture_point(pdf.phash.to_numpy())
-            # group images by shape: coordinate grids are built with ONE
-            # broadcast per (h, w) group instead of per image
-            by_shape: dict = {}
-            for i, im in enumerate(imgs):
-                by_shape.setdefault(im.shape, []).append(i)
-            parts_idx, parts_lon, parts_lat, parts_val = [], [], [], []
-            for (h, w), idxs in by_shape.items():
-                idxs = np.asarray(idxs)
-                k = len(idxs)
-                mesh_x = (np.arange(w) - w / 2.0) * pixel_deg  # (w,)
-                mesh_y = (h / 2.0 - np.arange(h)) * pixel_deg  # (h,)
-                gl = (lon0[idxs][:, None, None] + mesh_x[None, None, :])
-                ga = (lat0[idxs][:, None, None] + mesh_y[None, :, None])
-                parts_lon.append(np.broadcast_to(gl, (k, h, w)).reshape(-1))
-                parts_lat.append(np.broadcast_to(ga, (k, h, w)).reshape(-1))
-                parts_val.append(
-                    np.stack([imgs[i] for i in idxs]).reshape(-1).astype(np.float64)
-                )
-                parts_idx.append(np.repeat(idxs, h * w))
-            glon = np.concatenate(parts_lon)
-            glat = np.concatenate(parts_lat)
-            vals = np.concatenate(parts_val)
-            img_idx = np.concatenate(parts_idx)
-            ids = _cells.lonlat_to_cell(glon, glat, res)
-
-            # map-side combine across the batch: group by (image, cell) via
-            # lexsort + reduceat — no per-image Python loop
-            order = np.lexsort((ids, img_idx))
-            gi, gc, gv = img_idx[order], ids[order], vals[order]
-            bnd = np.empty(len(gi), dtype=bool)
-            bnd[0] = True
-            np.logical_or(gi[1:] != gi[:-1], gc[1:] != gc[:-1], out=bnd[1:])
-            starts = np.nonzero(bnd)[0]
-            n = np.diff(np.append(starts, len(gi)))
-            s = np.add.reduceat(gv, starts)
-            mn = np.minimum.reduceat(gv, starts)
-            mx = np.maximum.reduceat(gv, starts)
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf.image_id.to_numpy()[gi[starts]],
-                    "cell": gc[starts],
-                    "n_pixels": n,
-                    "sum_value": s,
-                    "min_value": mn,
-                    "max_value": mx,
-                }
-            )
+                out = tile_batch(big.iloc[lo : lo + SUB_BATCH], res, pixel_deg)
+                if out is not None:
+                    yield out
 
     cols = ["image_id", "bytes", "w", "h", "fmt", "phash"]
     return images.select(*cols).mapInPandas(tile, TILE_SCHEMA)
+
+
+def tile_batch(pdf: pd.DataFrame, res: int, pixel_deg: float) -> pd.DataFrame | None:
+    """One batch of images → its ``TILE_SCHEMA`` rows (None for no images)."""
+    # decode is per-image (variable shapes); everything downstream is
+    # vectorized across ALL pixels of the batch in single NumPy calls
+    imgs = [decode_image(bytes(r.bytes), r.fmt) for r in pdf.itertuples()]
+    if not imgs:
+        return None
+    lon0, lat0 = capture_point(pdf.phash.to_numpy())
+    # group images by shape: coordinate grids are built with ONE broadcast
+    # per (h, w) group instead of per image
+    by_shape: dict = {}
+    for i, im in enumerate(imgs):
+        by_shape.setdefault(im.shape, []).append(i)
+    parts_idx, parts_lon, parts_lat, parts_val = [], [], [], []
+    for (h, w), idxs in by_shape.items():
+        idxs = np.asarray(idxs)
+        k = len(idxs)
+        mesh_x = (np.arange(w) - w / 2.0) * pixel_deg  # (w,)
+        mesh_y = (h / 2.0 - np.arange(h)) * pixel_deg  # (h,)
+        gl = (lon0[idxs][:, None, None] + mesh_x[None, None, :])
+        ga = (lat0[idxs][:, None, None] + mesh_y[None, :, None])
+        parts_lon.append(np.broadcast_to(gl, (k, h, w)).reshape(-1))
+        parts_lat.append(np.broadcast_to(ga, (k, h, w)).reshape(-1))
+        parts_val.append(np.stack([imgs[i] for i in idxs]).reshape(-1).astype(np.float64))
+        parts_idx.append(np.repeat(idxs, h * w))
+    img_idx = np.concatenate(parts_idx)
+    ids = _cells.lonlat_to_cell(np.concatenate(parts_lon), np.concatenate(parts_lat), res)
+    gi, gc, n, s, mn, mx = combine_pixels(img_idx, ids, np.concatenate(parts_val))
+    return pd.DataFrame({"image_id": pdf.image_id.to_numpy()[gi], "cell": gc, "n_pixels": n,
+                         "sum_value": s, "min_value": mn, "max_value": mx})
+
+
+def _run_starts(img: np.ndarray, cell: np.ndarray) -> np.ndarray:
+    """Indices where a run of equal (img, cell) begins."""
+    cut = np.empty(len(img), dtype=bool)
+    cut[:1] = True
+    np.not_equal(cell[1:], cell[:-1], out=cut[1:])
+    cut[1:] |= img[1:] != img[:-1]
+    return np.flatnonzero(cut)
+
+
+def combine_pixels(img: np.ndarray, cell: np.ndarray, vals: np.ndarray) -> tuple:
+    """Map-side combine: per distinct (img, cell), sorted by (img, cell) →
+    (img, cell, n, sum, min, max).
+
+    Pixels arrive in raster order per image and a cell spans many adjacent
+    pixels, so runs of equal (img, cell) are reduced first and only the
+    runs are sorted and reduced again.  Exact: min and max do not depend on
+    order, and the sums add integer pixel values far below 2^53."""
+    r = _run_starts(img, cell)
+    n = np.diff(np.append(r, len(img)))
+    s = np.add.reduceat(vals, r)
+    mn = np.minimum.reduceat(vals, r)
+    mx = np.maximum.reduceat(vals, r)
+    order = np.lexsort((cell[r], img[r]))
+    gi, gc, n, s, mn, mx = (a[order] for a in (img[r], cell[r], n, s, mn, mx))
+    g = _run_starts(gi, gc)
+    return (gi[g], gc[g], np.add.reduceat(n, g), np.add.reduceat(s, g),
+            np.minimum.reduceat(mn, g), np.maximum.reduceat(mx, g))
 
 
 def cell_mosaic(tiles: DataFrame, target_res: int) -> DataFrame:

@@ -1,13 +1,13 @@
 """DuckDB-SQL generator for the A5 forward encode (oracle side).
 
-Emits ANSI-ish SQL that reproduces ``core.cells.lonlat_to_cell`` bit-for-bit
-for the driver's correctness gate: the same closed-form projection
-(``core/projection.py:forward``) and Sierpinski bisection loop
-(``core/hilbert.py:point_to_s``), with float constants serialized via
-``repr`` (round-trip exact) and every expression mirroring the NumPy
-operation order so both sides round identically (both use the platform
-libm).  Cell-id assembly goes through HUGEINT to reproduce the engine's
-two's-complement wrap for origins >= 32 (DESIGN.md §2.4).
+Emits SQL that reproduces ``core.cells.lonlat_to_cell`` bit-for-bit.  The
+projection mirrors ``core/projection.py:forward`` expression by expression,
+with float constants serialized via ``repr`` (round-trip exact), so both
+sides round identically (both use the platform libm).  The bisection is ``core/hilbert.py:point_to_s``'s
+integer recurrence on the point's fixed-point entry/exit weights, rounded once
+by the DOUBLE -> BIGINT cast (half to even, as NumPy's ``rint``) and exact
+from there on.  Cell-id assembly goes through HUGEINT to reproduce the
+engine's two's-complement wrap for origins >= 32 (DESIGN.md §2.4).
 
 Used by ``__spark_entry__.oracle_sql`` to turn the projection queries from
 rows-only checks into exact value-hash oracles.
@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from .core import hilbert as H
 from .core import projection as P
 from .core.dodecahedron import FACE_AXES, FACE_ROT, TAN_DM
 
@@ -119,36 +120,8 @@ def encode_cte_chain(res: int, pts: str = "pts") -> tuple[str, str]:
     # NB: NumPy computes r = re * ratio then x = r * cos(ap): (re*ratio)*cos —
     # the parenthesization above matches ((tdm/cos)*sqrt(...)) * cos exactly.
 
-    # bisection loop
-    ex, ey = P.TRI_ENTRY
-    ax_, ay_ = P.TRI_APEX
-    rx, ry = P.TRI_EXIT
-    ctes.append(
-        f"""bis0 AS (
-      SELECT key, face, q, ppx, ppy, CAST(0 AS BIGINT) AS s,
-             CAST({_f(ex)} AS DOUBLE) AS pax, CAST({_f(ey)} AS DOUBLE) AS pay,
-             CAST({_f(ax_)} AS DOUBLE) AS qax, CAST({_f(ay_)} AS DOUBLE) AS qay,
-             CAST({_f(rx)} AS DOUBLE) AS rax, CAST({_f(ry)} AS DOUBLE) AS ray
-      FROM xy_)"""
-    )
+    ctes += bisection_ctes(res, "xy_")
     depth = 2 * (res - 1)
-    for i in range(1, depth + 1):
-        ctes.append(
-            f"""bis{i} AS (
-      SELECT key, face, q, ppx, ppy,
-             s * 2 + b AS s,
-             CASE WHEN b = 1 THEN qax ELSE pax END AS pax,
-             CASE WHEN b = 1 THEN qay ELSE pay END AS pay,
-             mx AS qax, my AS qay,
-             CASE WHEN b = 1 THEN rax ELSE qax END AS rax,
-             CASE WHEN b = 1 THEN ray ELSE qay END AS ray
-      FROM (
-        SELECT *, CASE WHEN (((mx - qax) * (ppy - qay) - (my - qay) * (ppx - qax))
-                           * ((mx - qax) * (pay - qay) - (my - qay) * (pax - qax))) < 0
-                       THEN 1 ELSE 0 END AS b
-        FROM (SELECT *, (pax + rax) * 0.5 AS mx, (pay + ray) * 0.5 AS my
-              FROM bis{i - 1})))"""
-        )
     p = 59 - 2 * res
     ctes.append(
         f"""enc AS (
@@ -162,6 +135,35 @@ def encode_cte_chain(res: int, pts: str = "pts") -> tuple[str, str]:
             FROM bis{depth}))"""
     )
     return ",\n    ".join(ctes), "enc"
+
+
+def bisection_ctes(res: int, src: str) -> list:
+    """CTEs ``bis0`` … ``bis{2·(res−1)}`` giving ``(key, face, q, s)`` from
+    ``src(key, face, q, ppx, ppy)``: ``core/hilbert.py:point_to_s``'s
+    integer recurrence on the fixed-point entry/exit weights, rounded once
+    and exact from there on.  DuckDB's DOUBLE -> BIGINT cast rounds half to
+    even like ``np.rint``; its ``round_even()`` does not (it rounds x.5 up
+    above 2^50)."""
+    one = H.ONE
+    ctes = [
+        f"""bis0 AS (
+      SELECT key, face, q, CAST(0 AS BIGINT) AS s, al, LEAST(ga, {one} - al) AS ga
+      FROM (SELECT key, face, q,
+                   CAST(LEAST(GREATEST(ppx * {_f(H.WX)} - ppy * {_f(H.WY)}, 0.0), {_f(one)})
+                        AS BIGINT) AS al,
+                   CAST(LEAST(GREATEST(ppx * {_f(H.WX)} + ppy * {_f(H.WY)}, 0.0), {_f(one)})
+                        AS BIGINT) AS ga
+            FROM {src}))"""
+    ]
+    for i in range(1, 2 * (res - 1) + 1):
+        ctes.append(
+            f"""bis{i} AS (
+      SELECT key, face, q, s * 2 + CASE WHEN al < ga THEN 1 ELSE 0 END AS s,
+             CASE WHEN al < ga THEN {one} - al - ga ELSE al - ga END AS al,
+             CASE WHEN al < ga THEN ga - al ELSE {one} - al - ga END AS ga
+      FROM bis{i - 1})"""
+        )
+    return ctes
 
 
 def decode_center_cte_chain(res: int, src: str = "encfq") -> tuple[str, str]:

@@ -182,3 +182,44 @@ class TestTiling:
             "cell")
         same = back.filter(F.col("caption") == F.col("caption2")).count()
         assert same >= imgs.count()  # every row at least rejoins itself
+
+
+def _lexsort_combine(img, cell, vals):
+    """The one-pass combine the run-length pre-combine replaced: lexsort
+    every pixel by (img, cell), then reduce each group."""
+    order = np.lexsort((cell, img))
+    gi, gc, gv = img[order], cell[order], vals[order]
+    starts = np.flatnonzero(np.r_[True, (gi[1:] != gi[:-1]) | (gc[1:] != gc[:-1])])
+    return (gi[starts], gc[starts], np.diff(np.append(starts, len(gi))),
+            np.add.reduceat(gv, starts), np.minimum.reduceat(gv, starts),
+            np.maximum.reduceat(gv, starts))
+
+
+@pytest.mark.parametrize("repeat", [False, True])
+def test_tile_batch_equals_one_pass_combine(repeat):
+    """The benchmark's images (and a batch that repeats image ids) tile to
+    the rows of the lexsort combine over independently georeferenced
+    pixels."""
+    import pandas as pd
+
+    from a5pg_spark.core import cells
+    from perfbench import inputs
+
+    rows = inputs.image_rows(1, 120)
+    if repeat:
+        rows = pd.concat([rows, rows.iloc[[3, 0, 3]]], ignore_index=True)
+    got = tiling.tile_batch(rows, 14, inputs.PIXEL_DEG)
+    img, lon, lat, vals = [], [], [], []
+    for i, r in enumerate(rows.itertuples()):
+        glon, glat = inputs.pixel_lonlat(r)
+        img.append(np.full(len(glon), i))
+        lon.append(glon)
+        lat.append(glat)
+        vals.append(inputs.true_pixels(inputs.image_index(r.image_id), r.w, r.h, r.fmt).ravel())
+    ids = cells.lonlat_to_cell(np.concatenate(lon), np.concatenate(lat), 14)
+    gi, gc, n, s, mn, mx = _lexsort_combine(np.concatenate(img), ids, np.concatenate(vals))
+    assert len(gi) < sum(map(len, vals)) // 10  # a real combine
+    assert got.image_id.tolist() == rows.image_id.to_numpy()[gi].tolist()
+    for col, want in (("cell", gc), ("n_pixels", n), ("sum_value", s),
+                      ("min_value", mn), ("max_value", mx)):
+        assert np.array_equal(got[col].to_numpy(), want), col

@@ -6,6 +6,7 @@ import json
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from a5pg_spark.core import cells as C
 from a5pg_spark.operators import geometry as G
@@ -150,9 +151,8 @@ def exact_layer(spark, tmp_path_factory):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    # NaN coordinates encode to a real cell near (159.3, 52.9); the holey
-    # polygon covers that cell as interior (checked below), so a NaN row
-    # reaching the join would be accepted without refinement
+    # NaN rows sit inside the holey polygon's latitude band, so only the
+    # box filter's NaN rule (and the encode's NULL) keeps them out
     holey = [_star(160.0, 53.0, 3.0, 1.6, 7),
              _star(160.8, 53.5, 0.3, 0.3, 3)[::-1]]
     pair = [[_star(5.0, -10.0, 1.5, 0.7, 5)], [_star(9.0, -7.0, 1.2, 0.5, 6, 0.3)]]
@@ -221,16 +221,13 @@ def exact_layer(spark, tmp_path_factory):
     via_wrap = {(int(i), "wrap") for i, c in zip(idx, ids) if int(c) in wrap_inner}
     assert via_wrap, "no far-side point lands in an interior wrap cell"
 
-    # and the NaN rows are a real trap: NaN encodes to an interior cell of
-    # the holey polygon (a VALUES relation, not a FROM-less SELECT, which the
-    # optimizer would fold through every encode projection)
+    # and a NaN coordinate has no cell (a VALUES relation, not a FROM-less
+    # SELECT, which the optimizer would fold through the encode)
     from a5pg_spark.functions_native import encode_native
 
     nan = spark.sql(
         "SELECT * FROM VALUES (CAST('NaN' AS DOUBLE), 53.0D) AS t(lon, lat)")
-    nan_cell = encode_native(nan, "lon", "lat", JOIN_RES, "cell").first().cell
-    cov, interior = exact_cover_cells(holey, JOIN_RES)
-    assert nan_cell in set(int(c) for c in cov[interior])
+    assert encode_native(nan, "lon", "lat", JOIN_RES, "cell").first().cell is None
     return {"src": src, "feats": feats, "want": want | via_wrap}
 
 
@@ -254,6 +251,20 @@ def test_spatial_join_exact_edge_inputs(spark, exact_layer):
     want = exact_layer["want"]
     assert {p for _, p in want} == {"holey", "pair", "wrap", "pin"}
     assert got == want, (sorted(got - want)[:10], sorted(want - got)[:10])
+
+
+def test_box_filter_drops_nan_rows(spark, exact_layer):
+    """No NaN coordinate passes the box filter, so none reaches the encode:
+    the latitude-only band of the wrap ring tests lon for NaN.  (A NULL lon
+    passes that band and encodes to a NULL cell, which joins nothing.)"""
+    from a5pg_spark.operators import spatial_join as SJ
+
+    feats = [(p, g) for p, g in exact_layer["feats"].items()]
+    lon, lat = F.col("lon"), F.col("lat")
+    kept = spark.read.parquet(exact_layer["src"]).filter(
+        SJ._mbr_filter(SJ._edge_rows(feats), lon, lat))
+    assert kept.count() > 0
+    assert kept.filter(F.isnan(lon) | F.isnan(lat)).collect() == []
 
 
 def test_spatial_join_empty_layer(spark, exact_layer):
@@ -320,6 +331,29 @@ def test_join_builds_each_cover_once(spark, exact_layer, monkeypatch, tmp_path):
     assert built[members:] == [JOIN_RES - 1] * members
     assert _cover_counts(SJ.polygon_cover(polys, JOIN_RES)) == COVER_COUNTS
     assert list(tmp_path.iterdir()) == []
+
+
+def test_repeated_join_reuses_its_predicates(spark, exact_layer, monkeypatch):
+    """The box filter and the refine predicate are built once per cached
+    layer side, and a different coordinate column builds them anew."""
+    from a5pg_spark.operators import spatial_join as SJ
+
+    calls = []
+    for name in ("_edge_rows", "_mbr_filter", "pip_native"):
+        def counting(*args, _f=getattr(SJ, name), _n=name):
+            calls.append(_n)
+            return _f(*args)
+        monkeypatch.setattr(SJ, name, counting)
+    monkeypatch.setattr(SJ, "_JOIN_SIDES", {})
+    pts = spark.read.parquet(exact_layer["src"])
+    polys = _layer(spark, exact_layer["feats"])
+    first = SJ.spatial_join(pts, polys, JOIN_RES).count()
+    assert sorted(calls) == ["_edge_rows", "_mbr_filter", "pip_native"]
+    assert SJ.spatial_join(pts, polys, JOIN_RES).count() == first
+    assert len(calls) == 3
+    moved = pts.withColumnRenamed("lon", "x")
+    assert SJ.spatial_join(moved, polys, JOIN_RES, lon_col="x").count() == first
+    assert len(calls) == 6
 
 
 def test_layer_cover_boundary_wins():
