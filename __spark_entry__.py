@@ -4,6 +4,11 @@
 ``queries()`` / ``oracle_sql()`` — one entry per implemented operator
 (SURVEY.md §2); the driver runs Spark vs DuckDB side-by-side at sf0.01.
 
+Importing this module reads no input file.  The elephant layer
+(``sources/polygons.ELEPHANT_SQL``) is read only when
+``spatial_join_elephant`` or ``a5_dissolve_export`` runs, and when
+``oracle_sql()`` builds their two oracles.
+
 Conventions shared by both sides (so value-hashes match):
 * synthetic valid A5 cells from integer keys (the parquet corpus has no
   coordinates):  origin = key mod 32, Hilbert S = key·48271 mod 4^(res−1),
@@ -646,11 +651,6 @@ ORACLES_SQL["embed_knn_bruteforce"] = """
 """
 
 
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(ORACLES_SQL)
-
 # -- operator-backed queries (DataFrame programs, not single SQL) ------------
 
 
@@ -1186,9 +1186,6 @@ def _spatial_join_oracle_sql() -> str:
     SELECT part, COUNT(*) AS n_points FROM cnt WHERE c % 2 = 1
     GROUP BY part ORDER BY part
 """
-
-
-ORACLES_SQL["spatial_join_elephant"] = _spatial_join_oracle_sql()
 
 
 # kNN oracle: the engine's ring-expansion kNN is provably exact (clearance
@@ -2755,9 +2752,6 @@ def _dissolve_oracle_sql(res: int = 8) -> str:
 """
 
 
-ORACLES_SQL["a5_dissolve_export"] = _dissolve_oracle_sql()
-
-
 def _q_stream_dedup(spark, sf_dir):
     """Stateful streaming first-seen dedup (applyInPandasWithState) driven
     deterministically: orders-derived events written as two parquet files
@@ -3324,4 +3318,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(ORACLES_SQL)
+    """All 59 DuckDB oracles.  The two over the elephant layer are built
+    here, on each call, so importing this module reads no input file; where
+    the layer is absent they raise its ``FileNotFoundError``."""
+    return {
+        **ORACLES_SQL,
+        "spatial_join_elephant": _spatial_join_oracle_sql(),
+        "a5_dissolve_export": _dissolve_oracle_sql(),
+    }

@@ -18,6 +18,7 @@ Full-id parity is blocked on the a5 crate's intra-quintant pentagon lattice
 
 import csv
 import json
+import os
 import re
 
 import numpy as np
@@ -30,8 +31,14 @@ GOLDEN_CSV = "/root/reference/tests/elephant_cells.csv"
 ELEPHANT_SQL = "/root/reference/tests/elephant_a5_cells.sql"
 
 
+def _require(path):
+    if not os.path.exists(path):
+        pytest.skip(f"reference corpus not available: {path}")
+
+
 @pytest.fixture(scope="module")
 def features():
+    _require(ELEPHANT_SQL)
     sql = open(ELEPHANT_SQL).read()
     fc = json.loads(
         re.search(r"'(\{\"type\":\"FeatureCollection\".*?\})'::jsonb", sql, re.S).group(1)
@@ -41,6 +48,7 @@ def features():
 
 @pytest.fixture(scope="module")
 def golden():
+    _require(GOLDEN_CSV)
     rows = list(csv.DictReader(open(GOLDEN_CSV)))
     return [(r["part"], int(r["cell_id"])) for r in rows]
 
