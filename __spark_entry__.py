@@ -36,23 +36,14 @@ _REGISTERED: set = set()
 def _prep(spark: SparkSession, sf_dir: str) -> None:
     """Register A5 functions + parquet views once per (session, sf_dir)."""
     from a5pg_spark import functions as A
+    from a5pg_spark.session import SQL_CONF
 
     key = (id(spark), sf_dir)
     if key in _REGISTERED:
         return
-    # the harness may hand us a session without session.py's defaults; these
-    # two are runtime-settable and load-bearing for plan health (session.py
-    # documents both pathologies: constraint propagation and inferred
-    # generator filters substitute deep expressions through the plan)
-    # timestamp_ntz arithmetic (events_sessionize / events_asof_join) must
-    # not depend on the harness session's local timezone
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    )
+    # the harness may hand us a session that get_spark did not make
+    for k, v in SQL_CONF.items():
+        spark.conf.set(k, v)
     A.register(spark)
     for t in TABLES:
         df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
@@ -1869,20 +1860,11 @@ def _q_rel_bucketed_join(spark, sf_dir):
     _prep(spark, sf_dir)
     key = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
     root = os.path.abspath(f"spark-warehouse/bucketed_{key}")
-    # r06 (round-5 ADVICE): the previous shape collected `out` inside a
-    # scoped-conf try block and restored the confs before returning, so the
-    # harness's own collect re-planned AND re-executed the whole join under
-    # the restored confs — every bench invocation ran the query twice, and
-    # the measured plan was not the bucketed one.  Now the query executes
-    # exactly once, by the caller.  The scan-ordering flag (which only
-    # affects bucketed-table scans — there are none elsewhere in this
-    # engine) stays set on the session so the caller's plan is the
-    # Exchange-free, Sort-free co-located join; the broadcast threshold is
-    # left at the session default, which simply means a tiny-SF driver run
-    # may pick a (equally correct, faster) broadcast join while sf >= 0.1
-    # planning exceeds the 10 MB threshold and exercises the zero-shuffle
-    # bucketed path that tests/test_bucketing.py pins.
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    # The query executes once, by the caller.  The broadcast threshold is
+    # left at the session default: a tiny-sf run may pick an (equally
+    # correct) broadcast join, while sf >= 0.1 exceeds the 10 MB threshold
+    # and plans the zero-shuffle bucketed join that tests/test_bucketing.py
+    # pins (session.SQL_CONF sets the scan-ordering flag it needs).
     lt, rt = f"li_bkt_{key}", f"od_bkt_{key}"
     if not spark.catalog.tableExists(lt):
         write_bucketed(

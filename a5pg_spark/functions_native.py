@@ -13,8 +13,6 @@ bit-exact equality at every resolution, edge rows included.
 
 from __future__ import annotations
 
-import uuid
-
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -27,31 +25,19 @@ def encode_native(df, lon_col: str, lat_col: str, res: int, out_col: str = "cell
     ``res``, computed in the JVM (no Python workers).  A NULL, NaN or
     infinite lon or lat gives a NULL cell.
 
-    Pushdown contract: the result is wrapped in a ``CollectMetrics`` node
-    (``df.observe``), which ``PushPredicateThroughNonJoin`` cannot cross, so
-    no downstream predicate (on ``out_col`` or on a passthrough column) is
-    pushed below the encode.  The barrier dates from the unrolled Catalyst
-    encode that the kernel replaced; ROADMAP item 3 A/Bs removing it.  It
-    costs one accumulator-only exec node (no shuffle).
-
-    Column-pruning note: the barrier also stops column pruning from above,
-    so **select only the columns you need BEFORE calling encode_native**;
-    passthrough columns survive to the scan read otherwise.  Internal
-    operators (spatial join, kNN, tiling) already do both.  To prune the
-    *scan* by a cell region, use :func:`cell_bbox_prefilter` (a lon/lat
-    bounding predicate on the source columns, which DOES reach the parquet
-    scan as PushedFilters), and filter below this call.
+    The encode is one scalar call in a projection, so Catalyst prunes
+    columns and pushes predicates through it as through any projection.  A
+    predicate on ``out_col`` is pushed as a filter on the kernel call itself,
+    so the kernel runs in that filter and again in the projection for the
+    rows that pass; it cannot reach the scan, which only has lon/lat.  To
+    prune the *scan* by a cell region, use :func:`cell_bbox_prefilter`.
     """
     if res < 0 or res > bits.MAX_RES:
         raise ValueError(f"resolution out of range 0..{bits.MAX_RES}")
     jvm.ensure(df.sparkSession)
     cell = F.call_function(jvm.FUNCTION, F.col(lon_col).cast("double"),
                            F.col(lat_col).cast("double"), F.lit(res))
-    # The metric name must be unique per distinct plan subtree; a uuid
-    # keeps two different encodes in one query from colliding (the SAME
-    # node reused via self-join is fine).
-    return df.select(*df.columns, cell.alias(out_col)).observe(
-        f"a5_encode_barrier_{uuid.uuid4().hex[:12]}", F.count(F.lit(1)).alias("rows"))
+    return df.select(*df.columns, cell.alias(out_col))
 
 
 def cell_bbox_prefilter(df, lon_col: str, lat_col: str, cells,
@@ -59,17 +45,16 @@ def cell_bbox_prefilter(df, lon_col: str, lat_col: str, cells,
     """Scan-prunable region filter: keep rows whose (lon, lat) falls inside
     the bounding box of any of ``cells`` (int A5 ids, any resolutions).
 
-    This is the pushdown-safe companion to :func:`encode_native`'s barrier:
-    a predicate on the *encoded* column can never reach the parquet scan
-    anyway (the scan only has lon/lat), so region pruning must be expressed
-    on the source columns.  The boxes are computed driver-side from the
+    A predicate on the *encoded* column can never reach the parquet scan
+    (the scan only has lon/lat), so region pruning is expressed on the
+    source columns.  The boxes are computed driver-side from the
     cells' densified boundaries (tiny: O(len(cells)) NumPy) and emitted as a
     plain OR-of-ranges predicate — Catalyst pushes it into the scan as
-    PushedFilters, so file/row-group stats prune at 100 TB.
+    PushedFilters, so file and row-group statistics prune.
 
     Superset semantics: a bbox keeps every point of the cell plus a fringe;
     follow with an exact equality/contains filter on the encoded cell (cheap
-    — it runs above the encode on the already-pruned rows).  Cells whose
+    — it runs on the already-pruned rows).  Cells whose
     boundary spans the antimeridian fall back to a latitude-only band for
     that cell (correct, just less selective).  ``margin_deg`` widens every
     box, e.g. to retain kNN ring candidates around the region.

@@ -314,8 +314,8 @@ def _mbr_filter(edge_rows: pd.DataFrame, lon: Column, lat: Column) -> Column:
     instead, as in ``cell_bbox_prefilter``: its cover is classified with
     longitudes wrapped around the ring's centre, so an interior cell can
     accept a point whose longitude lies outside the ring's box.  That band
-    also drops NaN longitudes, as a box does by itself (NaN sorts above
-    every double), so no NaN row reaches the encode."""
+    also drops NULL and NaN longitudes, as a box does by itself (NaN sorts
+    above every double), so neither reaches the encode."""
     pred = F.lit(False)
     for part in edge_rows.itertuples(index=False):
         if part.is_point:
@@ -329,7 +329,7 @@ def _mbr_filter(edge_rows: pd.DataFrame, lon: Column, lat: Column) -> Column:
         if -180.0 <= min(xs) and max(xs) <= 180.0:
             box = box & lon.between(min(xs), max(xs))
         else:
-            box = box & ~F.isnan(lon)
+            box = box & lon.isNotNull() & ~F.isnan(lon)
         pred = pred | box
     return pred
 

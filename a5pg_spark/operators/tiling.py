@@ -145,8 +145,7 @@ def cell_mosaic(tiles: DataFrame, target_res: int) -> DataFrame:
 
 
 def rasterize_cells(spark, cell_values: DataFrame, bbox: tuple, w: int, h: int,
-                    res: int, cell_col: str = "cell",
-                    broadcast_values: bool = True) -> DataFrame:
+                    res: int, cell_col: str = "cell") -> DataFrame:
     """Vector→raster: render per-cell values onto a w×h pixel grid — the
     inverse of :func:`pixels_to_cells`/:func:`cell_mosaic` (together they
     close the north-rule's raster↔vector tiling loop).
@@ -156,9 +155,7 @@ def rasterize_cells(spark, cell_values: DataFrame, bbox: tuple, w: int, h: int,
     left-joined to ``cell_values`` (uncovered pixels keep NULLs).  100 TB
     shape: the grid is generated distributed from ``range(w·h)`` (never
     collected), the encode is one codegen span, and the cell layer — the
-    small side by construction (a cover / aggregate) — broadcasts; a giant
-    value layer can set ``broadcast_values=False`` for a shuffle join keyed
-    on the cell.
+    small side by construction (a cover / aggregate) — broadcasts.
     """
     from pyspark.sql import functions as F
 
@@ -175,14 +172,7 @@ def rasterize_cells(spark, cell_values: DataFrame, bbox: tuple, w: int, h: int,
     )
     px = encode_native(grid.select("x", "y", "lon", "lat"),
                        "lon", "lat", res, "__cell")
-    # Materialize the values side before joining (localCheckpoint: executor
-    # blocks, no driver round-trip).  A live aggregate over the unrolled
-    # Catalyst encode spun the optimizer (>10 min at sf0.001 vs 1 s); that
-    # encode is gone, and ROADMAP item 3 A/Bs removing the checkpoint.  The
-    # values layer is the small side; pass broadcast_values=False for a huge one.
-    vals = cell_values.withColumnRenamed(cell_col, "__vc").localCheckpoint()
-    if broadcast_values:
-        vals = F.broadcast(vals)
+    vals = F.broadcast(cell_values.withColumnRenamed(cell_col, "__vc"))
     return (
         px.join(vals, px["__cell"] == vals["__vc"], "left")
         .drop("__vc")

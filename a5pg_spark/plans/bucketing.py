@@ -28,9 +28,10 @@ benefit) — both sides bucketed is the zero-shuffle case.  Sort elimination
 (not just Exchange elimination) additionally needs ONE file per bucket —
 ``write_bucketed`` guarantees that by pre-repartitioning on the bucket
 hash — and, since Spark 3.0, the scan only advertises its write-time order
-under ``spark.sql.legacy.bucketedTableScan.outputOrdering=true`` (off by
-default because proving one-file-per-bucket costs a listing); with it the
-joint plan is Exchange-free AND Sort-free (both pinned in tests).
+with the legacy bucketed-scan output-ordering flag on (off in Spark
+because proving one-file-per-bucket costs a listing; on in
+``session.SQL_CONF``); with it the joint plan is Exchange-free AND
+Sort-free (both pinned in tests).
 """
 
 from __future__ import annotations

@@ -1,8 +1,12 @@
-"""SparkSession factory tuned for the A5 workloads.
+"""SparkSession factory for the A5 workloads.
 
-Every knob here exists for the 100 TB target (BASELINE.md): AQE + skew-join
-for hot-cell skew, Arrow for the NumPy kernels, capped Arrow batch size so
-image-bytes batches fit executor memory, shuffle partitions sized to cores.
+``get_spark`` builds the engine's session: Arrow for the NumPy kernels, a
+capped Arrow batch so image-bytes batches fit executor memory, AQE with
+skew-join splitting for hot cells, shuffle partitions sized to the cores,
+the JVM flags of the driver, and the encode kernel's jar.  ``SQL_CONF``
+holds the SQL values that can also be set on a running session; ``get_spark``
+puts them in its builder and ``__spark_entry__._prep`` sets them on a session
+it did not make, so both read the same values.
 """
 
 from __future__ import annotations
@@ -30,6 +34,33 @@ os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
 from pyspark.sql import SparkSession
 
 from . import jvm
+
+# The runtime-settable SQL values every session of the engine needs.
+SQL_CONF = {
+    # timestamp_ntz arithmetic (events_sessionize / events_asof_join) must
+    # not depend on the host's local time zone
+    "spark.sql.session.timeZone": "UTC",
+    # With constraint propagation on, InferFiltersFromConstraints adds
+    # isnotnull(<cell>) above a join on the encoded cell, and
+    # PushPredicateThroughNonJoin moves it through the encode's projection
+    # as isnotnull(a5_encode_jvm(lon, lat, res)): the plan then calls the
+    # encode twice for each row that passes spatial_join's box filter.
+    "spark.sql.constraintPropagation.enabled": "false",
+    # InferFiltersFromGenerate adds size(<generator input>) > 0, and when the
+    # array is an expression over grouping keys the filter is substituted
+    # through the aggregate down to the scan: the interpreted
+    # children/uncompact HOF then runs per INPUT row instead of per group
+    # (measured: a5_children_expand 5.0 s -> 1.0 s at sf0.1).  The engine's
+    # generator arrays are never empty, so the rule gains nothing here.
+    "spark.sql.optimizer.excludedRules":
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    # A bucketed scan reports its write-time sort order only with this on
+    # (off by default since Spark 3.0: proving one file per bucket costs a
+    # listing).  plans/bucketing.write_bucketed writes one sorted file per
+    # bucket, so rel_bucketed_join plans with no Exchange and no Sort.  It
+    # changes nothing but bucketed-table scans.
+    "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
+}
 
 
 def host_cpus() -> int:
@@ -81,36 +112,9 @@ def get_spark(
         # 0.47 s of a job's 0.86 s of executor-task CPU.  Min/max statistics
         # still prune row groups.
         .config("spark.hadoop.parquet.filter.dictionary.enabled", "false")
-        # constraint propagation substituted the unrolled Catalyst encode's
-        # alias chains into inferred join/filter constraints (measured: 7.4 MB
-        # plan, 388 s for a 40k-row broadcast join that ran in 0.5 s with this
-        # off).  The encode is now one kernel call; ROADMAP item 3 A/Bs this.
-        .config("spark.sql.constraintPropagation.enabled", "false")
-        # Dynamic partition pruning canonicalized the unrolled encode's join
-        # keys: ONE PartitionPruning invocation on a depth-2 join measured
-        # 22 s (zero effect), and the depth-12 spatial join OOM'd the 16g
-        # driver.  That chain is gone; ROADMAP item 3 A/Bs this.  DPP never
-        # fires on this engine's unpartitioned parquet anyway.
-        .config("spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
-        # same substitution pathology, different rule: InferFiltersFromGenerate
-        # adds size(<generator input>)>0, and when the array is an expression
-        # over grouping keys the filter is substituted through the aggregate
-        # down to the scan — the interpreted children/uncompact HOF then runs
-        # per INPUT row instead of per group (measured: a5_children_expand
-        # 5.0 s -> 1.0 s at sf0.1; our generator arrays are never empty, so
-        # the rule's benefit is nil for this engine)
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         # spark.sql.streaming.noDataMicroBatches.enabled is not set here: it
         # would change every watermarked aggregation, so only the stream that
         # needs it sets it (streaming/ingest.streaming_dedup).
-        # HotSpot refuses to JIT-compile methods over ~8 KB of bytecode
-        # (DontCompileHugeMethods): the unrolled res>=9 Catalyst encode fused
-        # ~25 projections into one such method that silently ran interpreted
-        # (measured 4x cliff between depth 14 and 16).  The encode is now one
-        # small kernel call; ROADMAP item 3 A/Bs this flag.
         # ParallelGC: G1's concurrent marking, started by humongous
         # allocations, landed 0.13-0.2 s of GC-thread CPU on about one
         # query in four; ParallelGC does no work outside its pauses.
@@ -120,11 +124,9 @@ def get_spark(
         # compile CPU per 1.3 s spatial-join job after three warm-up jobs).
         # Per-row loops cross the raised thresholds within the first query.
         .config("spark.driver.extraJavaOptions",
-                "-XX:-DontCompileHugeMethods -XX:+UseParallelGC "
-                "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
-                "-XX:Tier4CompileThreshold=45000")
+                "-XX:+UseParallelGC -XX:Tier4InvocationThreshold=15000 "
+                "-XX:Tier4MinInvocationThreshold=1800 -XX:Tier4CompileThreshold=45000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _driver_memory())
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         # PySpark records the Python call site of every Column and DataFrame
         # call for error messages, at about eight py4j round trips each: a
@@ -132,7 +134,7 @@ def get_spark(
         # without.  Errors still carry the JVM's message and plan context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    for k, v in conf.items():
+    for k, v in {**SQL_CONF, **conf}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     jvm.ensure(spark)

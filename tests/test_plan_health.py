@@ -91,9 +91,8 @@ def test_children_explode_hof_stays_above_aggregate(spark):
 
 def test_cell_bbox_prefilter_reaches_scan_and_fence_holds(spark, tmp_path):
     """cell_bbox_prefilter's lon/lat predicate must reach the parquet scan as
-    PushedFilters (the pushdown-safe route around the encode barrier), and an
-    exact post-encode cell filter on top must still plan in bounded time
-    (the barrier keeps the predicate above the encode)."""
+    PushedFilters (a predicate on the encoded cell cannot), and an exact
+    post-encode cell filter on top must still plan in bounded time."""
     import time as _t
 
     from a5pg_spark.core import cells as C
@@ -116,7 +115,7 @@ def test_cell_bbox_prefilter_reaches_scan_and_fence_holds(spark, tmp_path):
 
     t0 = _t.time()
     _physical(q)
-    assert _t.time() - t0 < 30.0  # barrier holds: no substitution explosion
+    assert _t.time() - t0 < 30.0  # no substitution explosion
     # simple-mode toString truncates the scan line, so read the formatted
     # explain for the full PushedFilters list
     jvm = spark._jvm
@@ -135,11 +134,11 @@ def test_cell_bbox_prefilter_reaches_scan_and_fence_holds(spark, tmp_path):
 
 def test_encode_native_barrier_survives_filter_planning(spark):
     """A FILTER (not just a join) on the encode output must plan in bounded
-    time.  This is the case the old nondeterministic rand()-fence did NOT
-    cover: Spark 4.1's PushPredicateThroughNonJoin substitutes a Filter
-    condition through nondeterministic project aliases (measured: JVM
-    StackOverflow after 600 s+); the CollectMetrics barrier blocks it
-    structurally."""
+    time.  PushPredicateThroughNonJoin substitutes the filter condition
+    through the encode's projection; over the unrolled Catalyst encode that
+    the kernel replaced this measured 600 s+ and then a JVM StackOverflow.
+    With no barrier between the filter and the one kernel call, the bound
+    guards that substitution's plan time."""
     import time as _t
 
     from a5pg_spark.functions_native import encode_native
@@ -234,9 +233,10 @@ def test_cell_bbox_prefilter_completeness_random(spark):
 
 def test_rasterize_cells_plans_and_runs_bounded(spark, sf_dir):
     """Joining a LIVE aggregate over the old unrolled encode spun the optimizer
-    indefinitely (>10 min measured); rasterize_cells materializes its values
-    side (localCheckpoint) before the join, so the whole vector→raster query
-    must finish in bounded time, cover the grid fully, and hit the region."""
+    indefinitely (>10 min measured).  rasterize_cells now joins the live
+    aggregate over the kernel call with no checkpoint between, so the whole
+    vector→raster query must finish in bounded time, cover the grid fully,
+    and hit the region."""
     import time as _t
 
     import __spark_entry__ as E
@@ -367,7 +367,12 @@ def test_spatial_join_box_filter_below_encode_and_local_relations(spark, tmp_pat
     q = spatial_join(spark.read.parquet(src), polys, res=6)
     # optimized plan, top-down: the filter on lon/lat must appear below the
     # projection that calls the encode kernel on lon/lat
-    lines = _optimized(q).splitlines()
+    opt = _optimized(q)
+    # one encode per point and no barrier node: with constraint propagation
+    # on, an inferred isnotnull(cell) is pushed through the projection and
+    # runs the encode a second time
+    assert opt.count("a5_encode_jvm(") == 1 and "CollectMetrics" not in opt, opt
+    lines = opt.splitlines()
     enc = max(i for i, ln in enumerate(lines) if "a5_encode_jvm(" in ln)
     below = [ln for ln in lines[enc + 1:] if "Filter" in ln]
     assert below and "lon" in below[0] and "lat" in below[0], "\n".join(lines)
@@ -380,3 +385,44 @@ def test_spatial_join_box_filter_below_encode_and_local_relations(spark, tmp_pat
     plan = _physical(q)
     assert "ExistingRDD" not in plan, plan
     assert plan.count("LocalTableScan") >= 2, plan  # slim cover + edges
+
+
+def test_prep_sets_the_session_defaults(spark, sf_dir):
+    """``_prep`` gives a session that get_spark did not make the SQL values
+    that get_spark sets: both read the one dict, ``session.SQL_CONF``."""
+    import __spark_entry__ as E
+    from a5pg_spark.session import SQL_CONF
+
+    s = spark.newSession()
+    for k in SQL_CONF:
+        s.conf.unset(k)
+    E._prep(s, sf_dir)
+    assert {k: s.conf.get(k) for k in SQL_CONF} == SQL_CONF
+
+
+def test_generated_methods_stay_below_the_huge_method_limit(spark):
+    """HotSpot does not JIT-compile a method over 8,000 bytes of bytecode
+    (DontCompileHugeMethods).  The session keeps that default, so the
+    methods Spark generates for the spatial join and the tile rollup must
+    stay below it; a larger one would run interpreted."""
+    from a5pg_spark.functions_native import encode_native
+    from a5pg_spark.operators.spatial_join import spatial_join
+    from a5pg_spark.operators.tiling import cell_mosaic
+    from a5pg_spark.sources.polygons import from_feature_collection
+
+    pts = spark.range(5000).selectExpr(
+        "id AS pid", "CAST(id % 360 AS DOUBLE) - 180.0 AS lon",
+        "CAST(id % 160 AS DOUBLE) / 2.0 - 40.0 AS lat")
+    square = [[[-30.0, -30.0], [30.0, -30.0], [30.0, 30.0], [-30.0, 30.0], [-30.0, -30.0]]]
+    polys = from_feature_collection(spark, {"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {"part": "sq"},
+         "geometry": {"type": "Polygon", "coordinates": square}}]})
+    assert spatial_join(pts, polys, res=8).count() > 0
+    tiles = encode_native(pts, "lon", "lat", 12, "cell").selectExpr(
+        "cell", "1L AS n_pixels", "CAST(pid % 255 AS DOUBLE) AS sum_value",
+        "CAST(pid % 255 AS DOUBLE) AS min_value",
+        "CAST(pid % 255 AS DOUBLE) AS max_value", "pid % 7 AS image_id")
+    assert cell_mosaic(tiles, 6).count() > 0
+    sizes = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_GENERATED_METHOD_BYTECODE_SIZE().getSnapshot()
+    assert 0 < sizes.getMax() < 8000, sizes.getMax()

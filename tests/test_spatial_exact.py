@@ -181,7 +181,7 @@ def exact_layer(spark, tmp_path_factory):
     # admits it, and not its near misses
     pin = (-60.0, 10.0)
     bad = [(np.nan, 53.0), (160.0, np.nan), (np.nan, np.nan), (np.nan, 52.9),
-           (None, 53.0), (160.0, None), (None, None)]
+           (None, 53.0), (160.0, None), (None, None), (None, 52.0)]
     for x, y in [pin, (-60.0 + 1e-9, 10.0), (-60.0, 10.0 - 1e-9), *bad]:
         lon.append(x)
         lat.append(y)
@@ -254,9 +254,8 @@ def test_spatial_join_exact_edge_inputs(spark, exact_layer):
 
 
 def test_box_filter_drops_nan_rows(spark, exact_layer):
-    """No NaN coordinate passes the box filter, so none reaches the encode:
-    the latitude-only band of the wrap ring tests lon for NaN.  (A NULL lon
-    passes that band and encodes to a NULL cell, which joins nothing.)"""
+    """No NaN or NULL coordinate passes the box filter, so none reaches the
+    encode: the latitude-only band of the wrap ring tests lon for both."""
     from a5pg_spark.operators import spatial_join as SJ
 
     feats = [(p, g) for p, g in exact_layer["feats"].items()]
@@ -265,6 +264,8 @@ def test_box_filter_drops_nan_rows(spark, exact_layer):
         SJ._mbr_filter(SJ._edge_rows(feats), lon, lat))
     assert kept.count() > 0
     assert kept.filter(F.isnan(lon) | F.isnan(lat)).collect() == []
+    # the fixture's (NULL, 52.0) row lies in the wrap ring's band
+    assert kept.filter(lon.isNull() | lat.isNull()).collect() == []
 
 
 def test_spatial_join_empty_layer(spark, exact_layer):
