@@ -6,8 +6,8 @@
 
 Importing this module reads no input file.  The elephant layer
 (``sources/polygons.ELEPHANT_SQL``) is read only when
-``spatial_join_elephant`` or ``a5_dissolve_export`` runs, and when
-``oracle_sql()`` builds their two oracles.
+``spatial_join_elephant`` or ``a5_dissolve_export`` runs, and when their
+two oracles are read from ``oracle_sql()``.
 
 Conventions shared by both sides (so value-hashes match):
 * synthetic valid A5 cells from integer keys (the parquet corpus has no
@@ -21,7 +21,7 @@ Conventions shared by both sides (so value-hashes match):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -1904,11 +1904,10 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority
 # deterministic synthetic route segments: endpoint A from the key, endpoint
 # B = A + a small (±1°, ±0.4°) key-derived delta — identical text in both
 # engines, so the lerped sample points agree bit-for-bit.
-# SF bound (r05 ADVICE): c_custkey * 987654321986 overflows int64 at
-# custkey >= ~9.3e6 (TPC-H SF >= ~62) — Spark (ANSI off) wraps silently
-# where DuckDB raises, so the oracle pair is only valid below that scale;
-# the driver's scale factors (<= ~10) stay well clear.  The expression text
-# is frozen with the oracle, so the bound is documented rather than fixed.
+# SF bound: c_custkey * 987654321986 overflows int64 above _SEG_MAX_KEY
+# (~9.3e6, TPC-H SF >= ~62), where Spark with ANSI off would wrap silently
+# and DuckDB raises.  The expression text is frozen with the oracle, so
+# _q_route_cells checks the keys instead (_guard_seg_keys).
 _SEG_BASE = """
   SELECT c_custkey AS rid,
          ((c_custkey * 2654435761) % 358000000) / 1e6 - 179.0 AS lon1,
@@ -1917,6 +1916,22 @@ _SEG_BASE = """
          ((c_custkey * 69069) % 800001) / 1e6 - 0.4 AS dlat
   FROM customer
 """
+_SEG_MAX_KEY = (2**63 - 1) // 987654321986
+
+
+def _guard_seg_keys(seg: DataFrame) -> DataFrame:
+    """``seg`` with its ``rid`` (c_custkey) checked as the query runs: a key
+    above _SEG_MAX_KEY fails the query with an error that names the bound.
+    A per-row check, not an extra job over ``customer``."""
+    from pyspark.sql import functions as F
+
+    rid = F.col("rid")
+    msg = F.concat(F.lit("a5_route_cells: c_custkey "), rid.cast("string"),
+                   F.lit(f" exceeds {_SEG_MAX_KEY}, above which c_custkey * "
+                         "987654321986 overflows int64 (TPC-H SF >= ~62)"))
+    return seg.withColumn("rid", F.when(rid > _SEG_MAX_KEY, F.raise_error(msg)).otherwise(rid))
+
+
 _SEG_SQL = f"""
   SELECT rid, lon1, lat1, lon1 + dlon AS lon2, lat1 + dlat AS lat2
   FROM ({_SEG_BASE})
@@ -1942,7 +1957,7 @@ def _q_route_cells(spark, sf_dir):
     # Threshold 1 MB, not the 3 MB default: each input row explodes into 33
     # encodes, so the per-byte compute weight is ~30x a plain scan's (the
     # sf1.0 customer file is 2.9 MB and must fan; sf0.1's 0.3 MB must not).
-    seg = fan_out_scan(spark.sql(_SEG_SQL), min_input_bytes=1024 * 1024)
+    seg = fan_out_scan(_guard_seg_keys(spark.sql(_SEG_SQL)), min_input_bytes=1024 * 1024)
     return route_cell_stats(
         seg, "rid", "lon1", "lat1", "lon2", "lat2", res=7, samples=32
     ).orderBy("rid")
@@ -3299,12 +3314,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return out
 
 
-def oracle_sql() -> dict[str, str]:
-    """All 59 DuckDB oracles.  The two over the elephant layer are built
-    here, on each call, so importing this module reads no input file; where
-    the layer is absent they raise its ``FileNotFoundError``."""
-    return {
-        **ORACLES_SQL,
-        "spatial_join_elephant": _spatial_join_oracle_sql(),
-        "a5_dissolve_export": _dissolve_oracle_sql(),
-    }
+class _Oracles(Mapping):
+    """The 59 DuckDB oracles, read-only, in catalog order.  The two over
+    the elephant layer are built when read, so listing the keys reads no
+    file; where the layer is absent, reading either raises its
+    ``FileNotFoundError``."""
+
+    _BUILT_ON_READ = {"spatial_join_elephant": _spatial_join_oracle_sql,
+                      "a5_dissolve_export": _dissolve_oracle_sql}
+
+    def __getitem__(self, name: str) -> str:
+        build = self._BUILT_ON_READ.get(name)
+        return build() if build else ORACLES_SQL[name]
+
+    def __iter__(self) -> Iterator[str]:
+        yield from ORACLES_SQL
+        yield from self._BUILT_ON_READ
+
+    def __len__(self) -> int:
+        return len(ORACLES_SQL) + len(self._BUILT_ON_READ)
+
+
+def oracle_sql() -> Mapping[str, str]:
+    """All 59 DuckDB oracles (see :class:`_Oracles`)."""
+    return _Oracles()

@@ -12,17 +12,33 @@ import numpy as np
 
 from . import bits
 from .dodecahedron import D_V, FACE_AXES, VERTICES
-from .hilbert import point_to_s, s_to_triangle
+from .hilbert import ONE, point_to_s, s_to_triangle
 from .projection import (
     TRI_APEX,
     TRI_ENTRY,
     TRI_EXIT,
     forward,
+    forward_xyz,
     inverse,
     xyz_to_lonlat,
 )
 
 I64_MAX = np.uint64(0x7FFFFFFFFFFFFFFF)
+# the projection and the bisection loop stream ~20 arrays per point, and a
+# 16 Ki chunk keeps that working set (~2.5 MB) in L2 (131 Ki chunks go
+# DRAM-bound and measured ~2× the CPU per point)
+CHUNK = 16384
+
+# Certified row runs (raster_to_cell, DESIGN.md §7.1).  Bounds on the encode
+# along one pixel row (fixed latitude, longitude λ in radians) at
+# sector-frame radius r ≥ R_EX, measured on 2M sphere-uniform points and
+# 9k points against 160-bit mpmath:
+RUN = 16              # lattice stride along a row
+R_EX = 1e-3           # face-centre exclusion: the sector frame is singular at r = 0
+C1 = 1.25             # |dp/dλ| ≤ C1 sector units (measured 1.21)
+C2 = 0.6              # |α″|, |γ″| ≤ C2 / r in units of ONE (measured r·|α″| ≤ 0.56)
+E0, E1 = 1e-14, 1e-15  # float error of α, γ ≤ E0 + E1 / r (measured 4.6e-15, 9.3e-16)
+SAFETY = 100
 
 
 def lonlat_to_cell(lon, lat, res, strict_i64: bool = False) -> np.ndarray:
@@ -65,21 +81,113 @@ def lonlat_to_cell(lon, lat, res, strict_i64: bool = False) -> np.ndarray:
 def _encode(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     """Finite (N,) lon/lat → unsigned cell ids at one resolution."""
     out = np.empty(lon.shape[0], dtype=np.uint64)
-    # chunked: the projection and the bisection loop stream ~20 arrays per
-    # point, and a 16 Ki chunk keeps that working set (~2.5 MB) in L2
-    # (131 Ki chunks go DRAM-bound and measured ~2× the CPU per point)
-    chunk = 16384
     p = np.uint64(59 - 2 * res)
-    for lo in range(0, lon.shape[0], chunk):
-        face, q, x, y = forward(lon[lo:lo + chunk], lat[lo:lo + chunk])
+    for lo in range(0, lon.shape[0], CHUNK):
+        face, q, x, y = forward(lon[lo:lo + CHUNK], lat[lo:lo + CHUNK])
         if res == 0:
-            out[lo:lo + chunk] = (face.astype(np.uint64) << np.uint64(58)) | np.uint64(1 << 57)
+            out[lo:lo + CHUNK] = (face.astype(np.uint64) << np.uint64(58)) | np.uint64(1 << 57)
             continue
-        ids = (5 * face + q).astype(np.uint64) << np.uint64(58)
-        ids |= point_to_s(x, y, res) << (p + np.uint64(1))
-        ids |= np.uint64(1) << p
-        out[lo:lo + chunk] = ids
+        out[lo:lo + CHUNK] = _ids(face, q, point_to_s(x, y, res), p)
     return out
+
+
+def _ids(face, q, s, p) -> np.ndarray:
+    """Unsigned cell ids from face, quintant and Hilbert S; ``p`` is the
+    resolution marker's bit, 59 − 2·res."""
+    ids = (5 * face + q).astype(np.uint64) << np.uint64(58)
+    ids |= s << (p + np.uint64(1))
+    ids |= np.uint64(1) << p
+    return ids
+
+
+def run_margin(span, x_end, res: int) -> np.ndarray:
+    """Final weight that certifies a row run (DESIGN.md §7.1): SAFETY × the
+    bound, in final-weight units, on how far the run's pixels stray from
+    the chord between its ends; ``span`` is the run's longitude span in
+    radians and ``x_end`` the smaller sector x of its ends.  Infinite where
+    the run may come within R_EX of the face centre."""
+    r = x_end - C1 * span
+    rc = np.maximum(r, R_EX)
+    dev = span * span / 8 * C2 / rc + 2 * (E0 + E1 / rc)
+    return np.where(r >= R_EX, SAFETY * 2.0 ** res * (dev * ONE + 1), np.inf)
+
+
+def raster_to_cell(lon0, lat0, mesh_x, mesh_y, res: int) -> np.ndarray:
+    """Cell ids (k, h, w) of k pixel grids: pixel (i, r, c) lies at
+    (lon0[i] + mesh_x[c], lat0[i] + mesh_y[r]).  Equal, id for id, to
+    :func:`lonlat_to_cell` on the broadcast grids.
+
+    Each row is encoded on a lattice (every RUN-th pixel and the last).  The
+    pixels between two lattice pixels take the left one's id when both have
+    the same id, lie outside the face-centre exclusion and have every final
+    weight above :func:`run_margin`; a run that fails is halved at an
+    encoded midpoint until its pieces pass or have no pixel between their
+    ends.  Trig is per column and per row, and the floats are those of
+    :func:`lonlat_to_cell` (same NumPy ufuncs on the same inputs).
+    """
+    lon0 = np.asarray(lon0, dtype=np.float64)
+    lat0 = np.asarray(lat0, dtype=np.float64)
+    mesh_x = np.asarray(mesh_x, dtype=np.float64)
+    mesh_y = np.asarray(mesh_y, dtype=np.float64)
+    k, h, w = len(lon0), len(mesh_y), len(mesh_x)
+    lon = lon0[:, None] + mesh_x[None, :]  # (k, w)
+    lat = lat0[:, None] + mesh_y[None, :]  # (k, h)
+    step = np.diff(mesh_x)
+    if (not 1 <= res <= bits.MAX_RES or w < 2 or not np.isfinite(lon).all()
+            or not np.isfinite(lat).all() or not ((step >= 0).all() or (step <= 0).all())):
+        return lonlat_to_cell(np.broadcast_to(lon[:, None, :], (k, h, w)),
+                              np.broadcast_to(lat[:, :, None], (k, h, w)), res)
+    step = np.deg2rad(np.abs(step).max())
+    lonr, latr = np.deg2rad(lon).ravel(), np.deg2rad(lat).ravel()
+    cos_lon, sin_lon = np.cos(lonr), np.sin(lonr)
+    cos_lat, sin_lat = np.cos(latr), np.sin(latr)
+    p = np.uint64(59 - 2 * res)
+
+    n = k * h * w
+    ids = np.empty(n, dtype=np.uint64)  # pixel f = (i·h + r)·w + c
+
+    def encode(f):
+        """Encode pixels ``f`` into ``ids`` → (min final weight, sector x)."""
+        wmin = np.empty(len(f), dtype=np.int64)
+        xs = np.empty(len(f))
+        for lo in range(0, len(f), CHUNK):
+            fc = f[lo:lo + CHUNK]
+            row = fc // w
+            img = row // h
+            col = img * w + fc - row * w
+            c = cos_lat[row]
+            v = np.stack([c * cos_lon[col], c * sin_lon[col], sin_lat[row]], axis=-1)
+            face, q, x, y = forward_xyz(v)
+            s, wmin[lo:lo + CHUNK] = point_to_s(x, y, res, weights=True)
+            ids[fc] = _ids(face, q, s, p)
+            xs[lo:lo + CHUNK] = x
+        return wmin, xs
+
+    lattice = (np.arange(0, n, w)[:, None] + np.r_[0:w - 1:RUN, w - 1]).ravel()
+    known = np.zeros(n, dtype=bool)
+    known[lattice] = True
+    wmin, xs = encode(lattice)
+    left = np.flatnonzero(lattice % w != w - 1)
+    # one run per pair of neighbouring encoded pixels in a row: its ends and
+    # their min final weights and sector x
+    run = (lattice[left], lattice[left + 1], wmin[left], wmin[left + 1], xs[left], xs[left + 1])
+    while len(run[0]):
+        a, b, wa, wb, xa, xb = run
+        same = np.flatnonzero(ids[a] == ids[b])
+        ok = b - a < 2
+        ok[same] |= (np.minimum(wa[same], wb[same])
+                     > run_margin((b[same] - a[same]) * step, np.minimum(xa[same], xb[same]), res))
+        a, b, wa, wb, xa, xb = (t[~ok] for t in run)
+        m = (a + b) >> 1
+        known[m] = True
+        wm, xm = encode(m)
+        run = tuple(np.concatenate(t) for t in ((a, m), (m, b), (wa, wm), (wm, wb), (xa, xm), (xm, xb)))
+    # every pixel not encoded lies inside a certified run: it takes the id
+    # of the nearest encoded pixel on its left
+    src = np.where(known.reshape(k * h, w), np.arange(w), 0)
+    np.maximum.accumulate(src, axis=1, out=src)
+    src += np.arange(0, n, w)[:, None]
+    return ids[src].view(np.int64).reshape(k, h, w)
 
 
 def _decode(cells) -> tuple:

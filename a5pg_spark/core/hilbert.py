@@ -41,9 +41,11 @@ WX = ONE / 2 / TRI_EXIT[0]
 WY = ONE / 2 / TRI_EXIT[1]
 
 
-def point_to_s(px, py, res: int) -> np.ndarray:
+def point_to_s(px, py, res: int, weights: bool = False):
     """Sierpiński index (2·(res−1) bits) of each sector-frame point within
     the canonical quintant triangle; px/py are finite (N,) float64 arrays.
+    With ``weights`` also returns min(α′, β′, γ′), the point's smallest
+    integer weight in its final triangle (0 on the triangle's boundary).
 
     The weights α and γ are rounded half-even once to multiples of 1/ONE
     and clamped to the triangle (α, γ ≥ 0 and α + γ ≤ ONE).  The loop then
@@ -77,7 +79,14 @@ def point_to_s(px, py, res: int) -> np.ndarray:
         b -= u
         d ^= m
         d -= m
-    return s.view(np.uint64)
+    if not weights:
+        return s.view(np.uint64)
+    # α′ + γ′ = ONE − β′ and |D| = |α′ − γ′|, so min(α′, γ′) = (ONE − β′ − |D|)/2
+    np.abs(d, out=u)
+    np.subtract(ONE, b, out=m)
+    m -= u
+    m >>= 1
+    return s.view(np.uint64), np.minimum(m, b, out=m)
 
 
 def s_to_triangle(s, res: int, entry, apex, exit_):

@@ -97,8 +97,11 @@ def forward(lon_deg, lat_deg):
     """lon/lat (deg) → (face, quintant, x, y) with (x, y) in the quintant
     sector frame: origin at face center, +x toward the quintant's edge
     midpoint, the quintant spanning planar azimuth [−π/5, π/5]."""
-    v = lonlat_to_xyz(lon_deg, lat_deg)
-    v = np.atleast_2d(v)
+    return forward_xyz(np.atleast_2d(lonlat_to_xyz(lon_deg, lat_deg)))
+
+
+def forward_xyz(v: np.ndarray) -> tuple:
+    """Unit vectors (N, 3) → (face, quintant, x, y), as :func:`forward`."""
     face = nearest_face(v)
     # component-wise rotation (9 scalar gathers) — ~3× cheaper than gathering
     # a (n,3,3) matrix stack for einsum

@@ -3,8 +3,13 @@
 
 ``mapInPandas`` iterator-of-batches keeps memory bounded: each Arrow batch of
 (image_id, bytes, w, h, fmt, phash) is decoded (vectorized codecs,
-sources/images.py), pixels are georeferenced around the capture point, encoded
-to cells in one NumPy call, and pre-aggregated *within the batch* (map-side
+sources/images.py), and the images of one shape are encoded to cells together
+by ``cells.raster_to_cell``.  It takes the pixel grid as the capture points
+plus one row of column offsets and one column of row offsets, encodes a
+lattice of each image row, and gives the pixels between two lattice pixels
+their cell only where a certificate proves the row stays inside it (DESIGN.md
+§7.1), so most pixels are never encoded and every id equals the per-pixel
+encode's.  The pixels are then pre-aggregated *within the batch* (map-side
 combine) before the shuffle — the per-cell partial aggregates are what crosses
 the wire, never raw pixels.  At 100 TB this is the difference between
 shuffling ~10^15 pixels and ~10^12 partial rows.
@@ -51,7 +56,8 @@ def pixels_to_cells(
     distance in degrees (images are anchored at their capture point)."""
 
     SUB_BATCH = 512  # images per kernel pass — bounds the per-worker working
-    # set (~30 MB) so N workers don't churn gigabytes of fresh pages per batch
+    # set (~38 MB peak on the benchmark's images: ids, values and the combine)
+    # so N workers don't churn gigabytes of fresh pages per batch
 
     def tile(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for big in batches:
@@ -66,32 +72,26 @@ def pixels_to_cells(
 
 def tile_batch(pdf: pd.DataFrame, res: int, pixel_deg: float) -> pd.DataFrame | None:
     """One batch of images → its ``TILE_SCHEMA`` rows (None for no images)."""
-    # decode is per-image (variable shapes); everything downstream is
-    # vectorized across ALL pixels of the batch in single NumPy calls
+    # decode is per-image (variable shapes); the encode is one call per
+    # image shape and the combine one pass over ALL pixels of the batch
     imgs = [decode_image(bytes(r.bytes), r.fmt) for r in pdf.itertuples()]
     if not imgs:
         return None
     lon0, lat0 = capture_point(pdf.phash.to_numpy())
-    # group images by shape: coordinate grids are built with ONE broadcast
-    # per (h, w) group instead of per image
+    # group images by shape: one raster encode per (h, w) group
     by_shape: dict = {}
     for i, im in enumerate(imgs):
         by_shape.setdefault(im.shape, []).append(i)
-    parts_idx, parts_lon, parts_lat, parts_val = [], [], [], []
+    parts_idx, parts_ids, parts_val = [], [], []
     for (h, w), idxs in by_shape.items():
         idxs = np.asarray(idxs)
-        k = len(idxs)
         mesh_x = (np.arange(w) - w / 2.0) * pixel_deg  # (w,)
         mesh_y = (h / 2.0 - np.arange(h)) * pixel_deg  # (h,)
-        gl = (lon0[idxs][:, None, None] + mesh_x[None, None, :])
-        ga = (lat0[idxs][:, None, None] + mesh_y[None, :, None])
-        parts_lon.append(np.broadcast_to(gl, (k, h, w)).reshape(-1))
-        parts_lat.append(np.broadcast_to(ga, (k, h, w)).reshape(-1))
+        parts_ids.append(_cells.raster_to_cell(lon0[idxs], lat0[idxs], mesh_x, mesh_y, res).reshape(-1))
         parts_val.append(np.stack([imgs[i] for i in idxs]).reshape(-1).astype(np.float64))
         parts_idx.append(np.repeat(idxs, h * w))
-    img_idx = np.concatenate(parts_idx)
-    ids = _cells.lonlat_to_cell(np.concatenate(parts_lon), np.concatenate(parts_lat), res)
-    gi, gc, n, s, mn, mx = combine_pixels(img_idx, ids, np.concatenate(parts_val))
+    gi, gc, n, s, mn, mx = combine_pixels(np.concatenate(parts_idx), np.concatenate(parts_ids),
+                                          np.concatenate(parts_val))
     return pd.DataFrame({"image_id": pdf.image_id.to_numpy()[gi], "cell": gc, "n_pixels": n,
                          "sum_value": s, "min_value": mn, "max_value": mx})
 

@@ -4,6 +4,7 @@ cover broadcast of the spatial join, and the driver-window query ordering."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_fan_out_scan_is_row_neutral_and_gated(spark, tmp_path):
@@ -86,3 +87,20 @@ def test_queries_window_order_covers_unchecked():
     assert set(names) == set(E.oracle_sql())
     # everything previously unchecked now sits inside the 50-row window
     assert all(n in set(names[:50]) for n in E._CHECK_FIRST)
+
+
+def test_elephant_oracles_raise_on_read_without_the_layer():
+    """Listing the oracles reads no file; reading either elephant oracle
+    without the elephant layer raises the error that names the file."""
+    import os
+
+    import __spark_entry__ as E
+    from a5pg_spark.sources.polygons import ELEPHANT_SQL
+
+    if os.path.exists(ELEPHANT_SQL):
+        pytest.skip(f"the elephant layer is present: {ELEPHANT_SQL}")
+    oracles = E.oracle_sql()
+    assert list(oracles)[-2:] == ["spatial_join_elephant", "a5_dissolve_export"]
+    for name in ("spatial_join_elephant", "a5_dissolve_export"):
+        with pytest.raises(FileNotFoundError, match="elephant_a5_cells.sql"):
+            oracles[name]

@@ -223,3 +223,121 @@ def test_tile_batch_equals_one_pass_combine(repeat):
     for col, want in (("cell", gc), ("n_pixels", n), ("sum_value", s),
                       ("min_value", mn), ("max_value", mx)):
         assert np.array_equal(got[col].to_numpy(), want), col
+
+
+def _edge_centres():
+    """(lon, lat) image centres where the encode is hardest: on a face edge,
+    on a quintant edge, on a dodecahedron vertex, at and within 1e-3 rad of
+    a face centre, next to both poles and across lon ±180."""
+    from a5pg_spark.core.dodecahedron import FACE_AXES, VERTICES
+    from a5pg_spark.core.projection import xyz_to_lonlat
+
+    def unit(v):
+        return v / np.linalg.norm(v)
+
+    pairs = [(i, j) for i in range(12) for j in range(i + 1, 12)
+             if abs(FACE_AXES[i] @ FACE_AXES[j] - 1 / np.sqrt(5)) < 1e-9]
+    on_face_edge = [unit(FACE_AXES[i] + FACE_AXES[j]) for i, j in pairs[:3]]
+    vertex = VERTICES[np.argmax(VERTICES @ FACE_AXES[3])]
+    on_quintant_edge = [unit(FACE_AXES[3] + vertex), unit(FACE_AXES[7] + VERTICES[
+        np.argmax(VERTICES @ FACE_AXES[7])])]
+    lon, lat = xyz_to_lonlat(np.stack(on_face_edge + on_quintant_edge + [vertex, FACE_AXES[3]]))
+    near_centre = (lon[-1], lat[-1] + np.degrees(5e-4))
+    more = [near_centre, (33.3, 89.99), (-120.0, -89.99), (179.9999, 10.0), (-179.9999, -20.0)]
+    return (np.r_[lon, [p[0] for p in more]], np.r_[lat, [p[1] for p in more]])
+
+
+@pytest.mark.parametrize("pixel_deg", [1e-5, 1e-4, 1e-3])
+@pytest.mark.parametrize("res", [1, 8, 14, 20])
+def test_raster_to_cell_equals_per_pixel_on_edge_images(res, pixel_deg):
+    """The certified-run raster encode gives every pixel of images placed
+    across face, quintant and vertex edges, at face centres, at the poles
+    and across the antimeridian the id of the per-pixel encode."""
+    from a5pg_spark.core import cells
+
+    lon0, lat0 = _edge_centres()
+    k = len(lon0)
+    for h, w in ((24, 32), (48, 64)):
+        mesh_x = (np.arange(w) - w / 2.0) * pixel_deg
+        mesh_y = (h / 2.0 - np.arange(h)) * pixel_deg
+        want = cells.lonlat_to_cell(
+            np.broadcast_to(lon0[:, None, None] + mesh_x[None, None, :], (k, h, w)),
+            np.broadcast_to(lat0[:, None, None] + mesh_y[None, :, None], (k, h, w)), res)
+        got = cells.raster_to_cell(lon0, lat0, mesh_x, mesh_y, res)
+        assert np.array_equal(got, want)
+
+
+@pytest.mark.parametrize("res", [14, 16, 18])
+def test_raster_to_cell_equals_per_pixel_on_benchmark_images(res):
+    """Held-out benchmark images at res 14 and 16, and at res 18, where a
+    cell is only a few pixels wide and most runs are split."""
+    from a5pg_spark.core import cells
+    from perfbench import inputs
+
+    rows = inputs.image_rows(7, 300)
+    lon0, lat0 = I.capture_point(rows.phash.to_numpy())
+    for (h, w), g in rows.groupby(["h", "w"]).indices.items():
+        mesh_x = (np.arange(w) - w / 2.0) * inputs.PIXEL_DEG
+        mesh_y = (h / 2.0 - np.arange(h)) * inputs.PIXEL_DEG
+        k = len(g)
+        want = cells.lonlat_to_cell(
+            np.broadcast_to(lon0[g][:, None, None] + mesh_x[None, None, :], (k, h, w)),
+            np.broadcast_to(lat0[g][:, None, None] + mesh_y[None, :, None], (k, h, w)), res)
+        assert np.array_equal(cells.raster_to_cell(lon0[g], lat0[g], mesh_x, mesh_y, res), want)
+
+
+@pytest.mark.parametrize("res", [1, 5, 9])
+def test_point_to_s_final_weights_are_barycentric(res):
+    """``point_to_s(weights=True)`` returns the point's smallest barycentric
+    weight in its final triangle, in units of ONE."""
+    from a5pg_spark.core.hilbert import ONE, point_to_s, s_to_triangle
+    from a5pg_spark.core.projection import TRI_APEX, TRI_ENTRY, TRI_EXIT
+
+    rng = np.random.default_rng(res)
+    x = rng.uniform(0.0, TRI_EXIT[0], 2000)
+    y = rng.uniform(-1.0, 1.0, 2000) * x * TRI_EXIT[1] / TRI_EXIT[0]
+    s, wmin = point_to_s(x, y, res, weights=True)
+    assert np.array_equal(s, point_to_s(x, y, res))
+    P, Q, R = s_to_triangle(s, res, TRI_ENTRY, TRI_APEX, TRI_EXIT)
+
+    def area(a, b, c):
+        return (b[:, 0] - a[:, 0]) * (c[:, 1] - a[:, 1]) - (b[:, 1] - a[:, 1]) * (c[:, 0] - a[:, 0])
+
+    p = np.stack([x, y], axis=1)
+    bary = np.stack([area(p, Q, R), area(P, p, R), area(P, Q, p)]) / area(P, Q, R)
+    assert np.abs(bary.min(axis=0) - wmin / ONE).max() < 1e-12
+
+
+def test_run_margin_bounds_the_chord_deviation():
+    """On 200 benchmark images, how far each row strays from the chord
+    between two pixels RUN (and 4) apart, in the entry/exit weights of one
+    face and quintant, carried to final weights by the 2^res gradient
+    bound, stays below run_margin / SAFETY: the margin is the measured
+    bound times SAFETY, not a value tuned to pass."""
+    from numpy.lib.stride_tricks import sliding_window_view
+
+    from a5pg_spark.core import cells, projection
+    from a5pg_spark.core.hilbert import WX, WY
+    from perfbench import inputs
+
+    res = 14
+    for n in (4, cells.RUN):
+        worst = 0.0
+        for r in inputs.image_rows(1, 200).itertuples():
+            if r.w <= n:
+                continue
+            face, q, x, y = projection.forward(*inputs.pixel_lonlat(r))
+            shape = (int(r.h), int(r.w))
+            frac = np.arange(1, n) / n
+            dev = 0.0
+            for wt in (x * WX - y * WY, x * WX + y * WY):
+                win = sliding_window_view(wt.reshape(shape), n + 1, axis=1)
+                chord = win[..., :1] + (win[..., -1:] - win[..., :1]) * frac
+                dev = np.maximum(dev, np.abs(win[..., 1:-1] - chord).max(axis=-1))
+            key = sliding_window_view((5 * face + q).reshape(shape), n + 1, axis=1)
+            xs = sliding_window_view(x.reshape(shape), n + 1, axis=1)
+            margin = cells.run_margin(n * np.deg2rad(inputs.PIXEL_DEG),
+                                      np.minimum(xs[..., 0], xs[..., -1]), res)
+            ok = (key == key[..., :1]).all(axis=-1) & np.isfinite(margin)
+            worst = max(worst, (dev * 2.0**res / margin)[ok].max())
+        assert 0 < worst < 1 / cells.SAFETY, (n, worst)

@@ -5,6 +5,7 @@ segments touch few, Hilbert-local cells), and the degenerate segment."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from a5pg_spark.operators.trajectories import (
     route_cell_stats,
@@ -74,3 +75,21 @@ def test_degenerate_segment_is_one_cell(spark):
         seg, "rid", "lon1", "lat1", "lon2", "lat2", 10, samples=32
     ).collect()
     assert row.n_cells == 1 and row.min_cell == row.max_cell
+
+
+def test_route_segment_keys_guard_int64(spark):
+    """a5_route_cells' segment text multiplies c_custkey by 987654321986 in
+    int64: the largest key whose product fits passes the guard, the next
+    fails the query with an error that names the bound (Spark with ANSI off
+    would wrap it silently)."""
+    from pyspark.errors import PySparkException
+
+    import __spark_entry__ as E
+
+    top = E._SEG_MAX_KEY
+    assert top * 987654321986 <= 2**63 - 1 < (top + 1) * 987654321986
+    ok = E._guard_seg_keys(spark.createDataFrame([(1,), (top,)], "rid long"))
+    assert [r.rid for r in ok.collect()] == [1, top]
+    bad = E._guard_seg_keys(spark.createDataFrame([(1,), (top + 1,)], "rid long"))
+    with pytest.raises(PySparkException, match=f"{top + 1} exceeds {top}"):
+        bad.collect()
