@@ -61,11 +61,12 @@ def _prep(spark: SparkSession, sf_dir: str) -> None:
 def _peek_embedding_dim(sf_dir: str) -> int:
     """Embedding width from ONE parquet value via pyarrow (driver-local, ~ms;
     the list width is not in the footer schema, so read a single row)."""
-    import pyarrow.parquet as pa_pq
+    import pyarrow.dataset as pa_ds
 
-    pf = pa_pq.ParquetFile(f"{sf_dir}/embeddings.parquet")
-    batch = next(pf.iter_batches(batch_size=1, columns=["embedding"]))
-    return len(batch.column(0)[0])
+    # a dataset reads the single-file and the directory layout alike
+    table = pa_ds.dataset(f"{sf_dir}/embeddings.parquet", format="parquet").head(
+        1, columns=["embedding"])
+    return len(table.column(0)[0])
 
 
 # deterministic capture-point derivation (identical text in both dialects)
@@ -648,17 +649,15 @@ ORACLES_SQL["embed_knn_bruteforce"] = """
 def _q_embed_knn(spark, sf_dir):
     """embed_knn_bruteforce with the corpus fan-out applied only when the
     embeddings input is big enough to amortize the exchange (same 3 MB gate
-    as plans/partitioning.fan_out_scan; the SQL text is otherwise exactly
+    as plans/partitioning.fan_out_scan, over the same sum of the scan's
+    input files; the SQL text is otherwise exactly
     QUERIES_SQL['embed_knn_bruteforce'])."""
-    import os as _os
+    from a5pg_spark.plans.partitioning import _local_input_bytes
 
     _prep(spark, sf_dir)
     sql = QUERIES_SQL["embed_knn_bruteforce"]
-    try:
-        big = _os.path.getsize(f"{sf_dir}/embeddings.parquet") >= 3 * 1024 * 1024
-    except OSError:
-        big = True
-    if big:
+    nbytes = _local_input_bytes(spark.table("embeddings"))
+    if nbytes is None or nbytes >= 3 * 1024 * 1024:
         sql = sql.replace("__RP__", str(spark.sparkContext.defaultParallelism))
     else:
         sql = sql.replace("/*+ REPARTITION(__RP__) */", "")
@@ -3306,11 +3305,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     every = {name: _q(sql) for name, sql in QUERIES_SQL.items()}
     every.update(_OPERATOR_QUERIES)
     out = {name: every.pop(name) for name in _CHECK_FIRST}
-    for name in _CHECK_LAST:
-        every.pop(name)
+    last = {name: every.pop(name) for name in _CHECK_LAST}
     out.update(every)
-    out.update({name: _q(QUERIES_SQL[name]) if name in QUERIES_SQL
-                else _OPERATOR_QUERIES[name] for name in _CHECK_LAST})
+    out.update(last)
     return out
 
 

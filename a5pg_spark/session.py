@@ -3,10 +3,14 @@
 ``get_spark`` builds the engine's session: Arrow for the NumPy kernels, a
 capped Arrow batch so image-bytes batches fit executor memory, AQE with
 skew-join splitting for hot cells, shuffle partitions sized to the cores,
-the JVM flags of the driver, and the encode kernel's jar.  ``SQL_CONF``
-holds the SQL values that can also be set on a running session; ``get_spark``
-puts them in its builder and ``__spark_entry__._prep`` sets them on a session
-it did not make, so both read the same values.
+the JVM flags of the driver, the encode kernel's jar, and the Python worker
+daemon ``a5pg_spark.worker_daemon``.  ``SQL_CONF`` holds the SQL values that
+can also be set on a running session; ``get_spark`` puts them in its builder
+and ``__spark_entry__._prep`` sets them on a session it did not make, so both
+read the same values.  ``spark.python.daemon.module`` is a static conf, read
+when the context starts, so ``_prep`` cannot set it: a session the engine did
+not make keeps the stock ``pyspark.daemon`` and, before CPython 3.12, its
+~0.2 s of CPU per Python task (DESIGN.md §7.2).
 """
 
 from __future__ import annotations
@@ -83,6 +87,13 @@ def get_spark(
     """The engine's session, with the encode kernel (``a5pg_spark/jvm``)
     registered as ``a5_encode_jvm``."""
     conf = dict(extra_conf or {})
+    # Python workers get the JVM's PYTHONPATH, and the JVM inherits this
+    # process's: with the package's parent on it, the daemon module imports
+    # from any cwd, not only one where ``python -m`` finds a5pg_spark
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
     # the jar must be on spark.jars before the JVM starts, so it is built first
     conf["spark.jars"] = ",".join(filter(None, [conf.get("spark.jars"), jvm.build_jar()]))
     cpus = host_cpus()
@@ -133,6 +144,9 @@ def get_spark(
         # spatial_join plan build made ~1,400 round trips with it, 240-570
         # without.  Errors still carry the JVM's message and plan context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # workers fork from a daemon that stops each task re-reading
+        # pyspark.zip's directory (a5pg_spark/worker_daemon.py)
+        .config("spark.python.daemon.module", "a5pg_spark.worker_daemon")
     )
     for k, v in {**SQL_CONF, **conf}.items():
         b = b.config(k, v)

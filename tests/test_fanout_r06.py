@@ -3,6 +3,8 @@ cover broadcast of the spatial join, and the driver-window query ordering."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -104,3 +106,72 @@ def test_elephant_oracles_raise_on_read_without_the_layer():
     for name in ("spatial_join_elephant", "a5_dissolve_export"):
         with pytest.raises(FileNotFoundError, match="elephant_a5_cells.sql"):
             oracles[name]
+
+
+def test_queries_order_is_pinned_and_keeps_the_popped_values(monkeypatch):
+    """The correctness gate checks the first 50 names, so the order is pinned whole.
+    Each trailing query is the value ``queries()`` popped, so an operator
+    query wins over SQL text of the same name there as everywhere else."""
+    import __spark_entry__ as E
+
+    assert list(E.queries()) == [
+        "a5_route_cells", "sample_documents", "rel_bucketed_join",
+        "sketch_quantile_prices", "events_range_join", "embed_ann_srp",
+        "embed_ann_ivf", "dedup_embedding_pairs", "images_tiling_mosaic",
+        "a5_parent_rollup", "a5_children_expand", "a5_contains_semijoin",
+        "a5_tile_pyramid", "a5_boundary_vertices", "a5_encode_points_rollup",
+        "rel_agg_pricing", "rel_join_segment_revenue", "rel_window_user_topk",
+        "embed_knn_bruteforce", "images_phash_neardup", "images_knn_capture",
+        "audio_features", "video_frame_stats", "snapshot_pruned_scan",
+        "snapshot_zorder_scan", "snapshot_compaction", "snapshot_stage_resume",
+        "stream_ingest_snapshot", "stream_dedup_firstseen", "stream_cell_counts",
+        "images_resize_stats", "images_jfif_recode", "rasterize_cells",
+        "a5_geojson_export", "a5_dissolve_export", "spatial_join_elephant",
+        "knn_probe_cities", "dedup_minhash_pairs", "dedup_components",
+        "dedup_simhash_pairs", "dedup_ngram_jaccard", "text_annotate_agg",
+        "text_winnow_fingerprint", "events_sessionize", "events_asof_join",
+        "events_session_window", "events_pivot_daily", "sketch_hll_users",
+        "sketch_cms_heavy_hitters", "rel_bloom_pruned_join",
+        "a5_num_cells_area", "a5_res0_cells", "a5_uncompact_cover",
+        "a5_compact_roundtrip", "a5_roundtrip_quality", "a5_resolution_histogram",
+        "dedup_exact_docs", "text_lang_stats", "skew_salted_join",
+    ]
+    ends = {name: object() for name in E._CHECK_FIRST + E._CHECK_LAST}
+    monkeypatch.setattr(E, "_OPERATOR_QUERIES", {**E._OPERATOR_QUERIES, **ends})
+    got = E.queries()
+    assert all(got[name] is fn for name, fn in ends.items())
+
+
+def test_embed_knn_gate_sums_a_directory_layout(spark, sf_dir, tmp_path):
+    """The fan-out gate sums the scan's input files, so a parquet directory
+    is sized by its parts, not by its ~4 KB inode; the rows do not change."""
+    import shutil
+
+    import __spark_entry__ as E
+
+    def layout(name, parts):
+        d = tmp_path / name
+        (d / "embeddings.parquet").mkdir(parents=True)
+        for t in E.TABLES:
+            if t != "embeddings":
+                (d / f"{t}.parquet").symlink_to(f"{sf_dir}/{t}.parquet")
+        for i in range(parts):
+            shutil.copy(f"{sf_dir}/embeddings.parquet",
+                        d / "embeddings.parquet" / f"part-{i:05d}.parquet")
+        return str(d)
+
+    def fans_out(df):
+        return "Repartition" in df._jdf.queryExecution().analyzed().toString()
+
+    part = os.path.getsize(f"{sf_dir}/embeddings.parquet")
+    try:
+        plain = E._q_embed_knn(spark, sf_dir)
+        one = E._q_embed_knn(spark, layout("one", 1))
+        assert not fans_out(plain) and not fans_out(one)
+        assert one.collect() == plain.collect()
+        # enough parts to pass the 3 MB gate
+        many = E._q_embed_knn(spark, layout("many", -(-3 * 1024 * 1024 // part)))
+        assert fans_out(many)
+    finally:
+        # the tmp layouts replaced the session's views: register sf_dir again
+        E._REGISTERED.clear()
