@@ -12,7 +12,7 @@ import numpy as np
 
 from . import bits
 from .dodecahedron import D_V, FACE_AXES, VERTICES
-from .hilbert import ONE, point_to_s, s_to_triangle
+from .hilbert import ONE, WX, WY, point_to_s, s_to_triangle
 from .projection import (
     TRI_APEX,
     TRI_ENTRY,
@@ -20,6 +20,7 @@ from .projection import (
     forward,
     forward_xyz,
     inverse,
+    lonlat_to_xyz,
     xyz_to_lonlat,
 )
 
@@ -29,16 +30,22 @@ I64_MAX = np.uint64(0x7FFFFFFFFFFFFFFF)
 # DRAM-bound and measured ~2× the CPU per point)
 CHUNK = 16384
 
-# Certified row runs (raster_to_cell, DESIGN.md §7.1).  Bounds on the encode
-# along one pixel row (fixed latitude, longitude λ in radians) at
-# sector-frame radius r ≥ R_EX, measured on 2M sphere-uniform points and
-# 9k points against 160-bit mpmath:
-RUN = 16              # lattice stride along a row
-R_EX = 1e-3           # face-centre exclusion: the sector frame is singular at r = 0
-C1 = 1.25             # |dp/dλ| ≤ C1 sector units (measured 1.21)
-C2 = 0.6              # |α″|, |γ″| ≤ C2 / r in units of ONE (measured r·|α″| ≤ 0.56)
-E0, E1 = 1e-14, 1e-15  # float error of α, γ ≤ E0 + E1 / r (measured 4.6e-15, 9.3e-16)
+# Raster runs (raster_runs, DESIGN.md §7.1).  A tile's sector points are
+# modelled by a biquadratic through 3×3 projected anchors.  Bounds in one
+# face-quintant frame extended 0.05 past its triangle, measured by
+# tools/measure_run_bounds.py on 4.4M points (its C3 stencil and E checked
+# against 160-bit mpmath):
+C1 = 1.4              # |dp/dλ|, |dp/dφ| ≤ C1 sector units per radian (measured 1.34)
+C3 = 7.0              # pure third derivatives of α, γ in λ and φ ≤ C3 / r² in units
+                      # of ONE (measured r²·|∂³| ≤ 6.37)
+E0, E1 = 3e-14, 1e-15  # float error of α, γ ≤ E0 + E1 / r, with the rounding of a
+                       # pixel's lon/lat (measured 5.7e-15 and r·err ≤ 7.5e-16)
+R_MODEL = 1e-3        # face-centre exclusion: the C3 / r² bound grows toward r = 0
 SAFETY = 100
+TILE_MARGIN = 1e-3    # an image whose margin exceeds this share of ONE is split
+# the final weights' change along a digit path is 2^(res−1)·J^turn·(Δα, Δγ):
+# rows (a, b, c, d) of J^turn, mapping (Δα, Δγ) to (aΔα + bΔγ, cΔα + dΔγ)
+_TURN = np.array([[1, 0, 0, 1], [0, -1, 1, 0], [-1, 0, 0, -1], [0, 1, -1, 0]], dtype=np.float64)
 
 
 def lonlat_to_cell(lon, lat, res, strict_i64: bool = False) -> np.ndarray:
@@ -100,94 +107,230 @@ def _ids(face, q, s, p) -> np.ndarray:
     return ids
 
 
-def run_margin(span, x_end, res: int) -> np.ndarray:
-    """Final weight that certifies a row run (DESIGN.md §7.1): SAFETY × the
-    bound, in final-weight units, on how far the run's pixels stray from
-    the chord between its ends; ``span`` is the run's longitude span in
-    radians and ``x_end`` the smaller sector x of its ends.  Infinite where
-    the run may come within R_EX of the face centre."""
-    r = x_end - C1 * span
-    rc = np.maximum(r, R_EX)
-    dev = span * span / 8 * C2 / rc + 2 * (E0 + E1 / rc)
-    return np.where(r >= R_EX, SAFETY * 2.0 ** res * (dev * ONE + 1), np.inf)
+def model_bound(hx, hy, r):
+    """SAFETY × the bound, in units of ONE, on how far a tile's modelled
+    first weights stray from the ones the per-pixel encode computes.  The
+    tile's 3×3 anchors are evenly spaced over half-spans ``hx`` and ``hy``
+    (radians of λ and φ) and every point of the tile lies at sector radius
+    ≥ ``r``.  A quadratic through three nodes strays by ≤ max|f‴|·h³/(9√3);
+    the second axis's error is carried through the first by the nodes'
+    Lebesgue constant 1.25; the pixel's and the anchors' float errors add
+    3·E(r)."""
+    return SAFETY * (C3 / (r * r) * (hx ** 3 + 1.25 * hy ** 3) / (9 * np.sqrt(3))
+                     + 3 * (E0 + E1 / r))
+
+
+def _step(mesh) -> float:
+    """The step of an evenly spaced mesh of ≥ 3 offsets, else 0."""
+    if len(mesh) < 3:
+        return 0.0
+    d = (mesh[-1] - mesh[0]) / (len(mesh) - 1)
+    even = np.abs(mesh - (mesh[0] + np.arange(len(mesh)) * d)).max() <= 1e-9 * abs(d)
+    return float(d) if even else 0.0
+
+
+def _spans(first, length):
+    """Concatenated ranges [first, first + length)."""
+    return np.repeat(first - np.cumsum(length) + length, length) + np.arange(length.sum())
+
+
+def _runs(f, cell, first):
+    """Runs of the per-pixel ids ``cell`` of flat pixels ``f``: one starts at
+    every ``first`` pixel and wherever the id changes."""
+    cut = first.copy()
+    cut[1:] |= cell[1:] != cell[:-1]
+    return f[cut], cell[cut]
+
+
+def _split(img, n, h, w):
+    """Tiles (image, r0, rows, c0, cols) of ``img``, each cut n × n."""
+    nn = np.repeat(n, n * n)
+    t = _spans(np.zeros_like(n), n * n)
+    a, b = t // nn, t % nn
+    r0, c0 = a * h // nn, b * w // nn
+    return np.repeat(img, n * n), r0, (a + 1) * h // nn - r0, c0, (b + 1) * w // nn - c0
+
+
+def _fit(tiles, lon0, lat0, mesh_x, mesh_y, dx, dy, res):
+    """Project each tile's 3×3 anchors (first, middle and last row and
+    column) → (modelled, origin, x, y, bound, cuts): whether the model holds
+    on the tile, its 5·face + quintant, the anchors' sector x and y
+    (T, 3, 3) by (row, column), :func:`model_bound` on the tile, and the
+    cuts per axis that would bring the certificate's margin below
+    TILE_MARGIN·ONE and the tile's extent below r/4 (for speed only)."""
+    img, r0, nr, c0, nc = tiles
+    node = np.array([0.0, 0.5, 1.0])
+    lat = (lat0[img] + mesh_y[0])[:, None] + (r0[:, None] + node * (nr - 1)[:, None]) * dy
+    lon = (lon0[img] + mesh_x[0])[:, None] + (c0[:, None] + node * (nc - 1)[:, None]) * dx
+    shape = (len(img), 3, 3)
+    face, q, x, y = forward_xyz(lonlat_to_xyz(np.broadcast_to(lon[:, None, :], shape),
+                                              np.broadcast_to(lat[:, :, None], shape)).reshape(-1, 3))
+    origin = (5 * face + q).reshape(-1, 9)
+    hx = np.deg2rad(abs(dx)) * (nc - 1) / 2   # half-spans, radians
+    hy = np.deg2rad(abs(dy)) * (nr - 1) / 2
+    r = np.hypot(x, y).reshape(-1, 9)
+    r_min = r.min(axis=1)
+    # every point of the tile lies within hx/2 and hy/2 of an anchor
+    r_lo = r_min - C1 * (hx + hy) / 2
+    extent = 2 * C1 * (hx + hy)
+    bound = model_bound(hx, hy, np.maximum(r_lo, R_MODEL))
+    modelled = (origin == origin[:, :1]).all(axis=1) & (r_lo >= R_MODEL) & (extent <= r_lo / 4)
+    r_est = np.maximum(r_min, R_MODEL)
+    interp = model_bound(hx, hy, r_est) - model_bound(0.0, 0.0, r_est)
+    cuts = np.ceil(np.maximum(np.cbrt(2.0 ** res * interp / TILE_MARGIN), 4 * extent / r_est))
+    cuts = np.clip(cuts, 1, np.maximum(np.minimum(nr, nc) // 8, 1)).astype(np.int64)
+    cuts[r.max(axis=1) < R_MODEL] = 1   # no tile of it could leave the exclusion
+    return modelled, origin[:, 0], x.reshape(shape), y.reshape(shape), bound, cuts
+
+
+def _row_model(X, Y, i, nr, nc) -> tuple:
+    """Per tile row: the biquadratic through its tile's anchors ``X``, ``Y``
+    (n, 3, 3) restricted to row offset ``i`` of ``nr`` rows, as
+    ((x0, x1, x2), (y0, y1, y2)) with x = x0 + x1·j + x2·j² at column
+    offset j of ``nc`` columns."""
+    tau = (i / ((nr - 1) / 2) - 1)[:, None]
+    half = (nc - 1) / 2
+    coef = []
+    for Z in (X, Y):
+        lo, mid, hi = Z[:, 0], Z[:, 1], Z[:, 2]   # at the column nodes
+        F = mid + tau * ((hi - lo) / 2 + tau * (hi - 2 * mid + lo) / 2)
+        d1, d2 = (F[:, 2] - F[:, 0]) / 2, (F[:, 2] - 2 * F[:, 1] + F[:, 0]) / 2
+        coef.append((F[:, 0], (d1 - 2 * d2) / half, d2 / half ** 2))
+    return tuple(coef)
+
+
+def raster_runs(lon0, lat0, mesh_x, mesh_y, res: int) -> tuple:
+    """Runs of equal cell ids over k pixel grids: pixel (i, r, c) lies at
+    (lon0[i] + mesh_x[c], lat0[i] + mesh_y[r]) and has flat index
+    (i·h + r)·w + c.  Returns (start, cell), int64: the runs' first pixels,
+    ascending from 0, and their ids; a run ends where the next starts and
+    never crosses a row.  Every pixel's id equals :func:`lonlat_to_cell`'s
+    on the broadcast grids (DESIGN.md §7.1).
+
+    Each image (or each of its n × n tiles, where its margin needs it)
+    projects 3×3 anchors; where all nine share a face and quintant and the
+    tile stays outside the face-centre exclusion, the tile's sector points
+    are the biquadratic through them, within :func:`model_bound`.  Each row
+    of the tile is walked run by run: one :func:`hilbert.point_to_s` on the
+    modelled point of the run's first pixel gives its cell, final weights
+    and turn, hence each final weight as a quadratic along the row, and the
+    run ends at the last pixel where all three stay above the margin.  A
+    first pixel below the margin, and every pixel of a tile the model does
+    not hold on, take :func:`lonlat_to_cell`.
+    """
+    lon0, lat0, mesh_x, mesh_y = (np.asarray(a, dtype=np.float64)
+                                  for a in (lon0, lat0, mesh_x, mesh_y))
+    k, h, w = len(lon0), len(mesh_y), len(mesh_x)
+    lon = lon0[:, None] + mesh_x  # (k, w), the floats lonlat_to_cell gets
+    lat = lat0[:, None] + mesh_y  # (k, h)
+    dx, dy = _step(mesh_x), _step(mesh_y)
+    if not (1 <= res <= bits.MAX_RES and dx and dy
+            and np.isfinite(lon).all() and np.isfinite(lat).all()):
+        cell = lonlat_to_cell(np.broadcast_to(lon[:, None, :], (k, h, w)),
+                              np.broadcast_to(lat[:, :, None], (k, h, w)), res)
+        f = np.arange(k * h * w)
+        return _runs(f, cell.ravel(), f % w == 0)
+
+    def exact(f):
+        row = f // w
+        return lonlat_to_cell(lon[row // h, f - row * w], lat[row // h, row % h], res)
+
+    whole = np.zeros(k, dtype=np.int64)
+    tiles = (np.arange(k), whole, whole + h, whole, whole + w)
+    fit = _fit(tiles, lon0, lat0, mesh_x, mesh_y, dx, dy, res)
+    one = fit[-1] == 1
+    if not one.all():
+        cut = _split(tiles[0][~one], fit[-1][~one], h, w)
+        tiles = tuple(np.concatenate([a[one], b]) for a, b in zip(tiles, cut))
+        fit = tuple(np.concatenate([a[one], b]) for a, b in
+                    zip(fit, _fit(cut, lon0, lat0, mesh_x, mesh_y, dx, dy, res)))
+    img, r0, nr, c0, nc = tiles
+    modelled, origin, X, Y, bound, _ = fit
+    margin = 2.0 ** res * (ONE * bound + SAFETY)
+
+    # one segment per row of a tile
+    tile = np.repeat(np.arange(len(img)), nr)
+    row = _spans(r0, nr)
+    first = (img[tile] * h + row) * w + c0[tile]
+    m = modelled[tile]
+    start, cell = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.uint64)]
+    if not m.all():
+        f = _spans(first[~m], nc[tile[~m]])
+        lead = np.zeros(len(f), dtype=bool)
+        lead[np.cumsum(nc[tile[~m]]) - nc[tile[~m]]] = True
+        a, b = _runs(f, exact(f).view(np.uint64), lead)
+        start.append(a)
+        cell.append(b)
+
+    # walk the modelled segments, all at once, one run per round
+    t, first = tile[m], first[m]
+    (x0, x1, x2), (y0, y1, y2) = _row_model(X[t], Y[t], row[m] - r0[t], nr[t], nc[t])
+    last, mar = nc[t] - 1, margin[t]
+    p = np.uint64(59 - 2 * res)
+    base = (origin[t].astype(np.uint64) << np.uint64(58)) | (np.uint64(1) << p)
+    scale = 2.0 ** (res - 1)
+    seg = np.arange(len(t))
+    j = np.zeros(len(t), dtype=np.int64)
+    single = [np.empty(0, dtype=np.int64)]
+    while len(seg):
+        jf = j.astype(np.float64)
+        s, wt, turn = point_to_s(x0[seg] + jf * (x1[seg] + jf * x2[seg]),
+                                 y0[seg] + jf * (y1[seg] + jf * y2[seg]), res, weights="all")
+        ok = np.minimum(np.minimum(wt[0], wt[1]), wt[2]) >= mar[seg]
+        single.append(first[seg[~ok]] + j[~ok])
+        o, jo = seg[ok], jf[ok]
+        # slope and curvature of the first weights along the row, turned
+        # into the final weights' (α′, β′, γ′)
+        sx, sy = x1[o] + 2 * jo * x2[o], y1[o] + 2 * jo * y2[o]
+        R = _TURN[turn[ok]] * scale
+        quad = []
+        for u, v in ((sx, sy), (x2[o], y2[o])):
+            da, dg = u * WX - v * WY, u * WX + v * WY
+            ra, rg = R[:, 0] * da + R[:, 1] * dg, R[:, 2] * da + R[:, 3] * dg
+            quad.append((ra, -ra - rg, rg))
+        mo = mar[o]
+        run = (last[o] - j[ok]).astype(np.float64)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            for i in range(3):
+                B, A, C = quad[0][i], quad[1][i], wt[i][ok] - mo
+                disc = B * B - 4 * A * C
+                sq = np.sqrt(np.maximum(disc, 0.0))
+                # first t > 0 with A·t² + B·t + C < 0, by the stable root
+                cross = np.where(B < 0, 2 * C / (sq - B), (-B - sq) / (2 * A))
+                cross = np.where((disc >= 0) & ((B < 0) | (A < 0)), cross, np.inf)
+                run = np.minimum(run, np.floor(cross))
+        run = run.astype(np.int64)
+        while True:   # the last pixel must pass, whatever the root's rounding
+            rf = run.astype(np.float64)
+            low = np.zeros(len(run), dtype=bool)
+            for i in range(3):
+                low |= wt[i][ok] + rf * (quad[0][i] + rf * quad[1][i]) < mo
+            if not low.any():
+                break
+            run[low] -= 1
+        start.append(first[o] + j[ok])
+        cell.append(base[o] | (s[ok] << (p + np.uint64(1))))
+        step = np.ones(len(seg), dtype=np.int64)
+        step[ok] = run + 1
+        j += step
+        keep = j <= last[seg]
+        seg, j = seg[keep], j[keep]
+    f = np.concatenate(single)
+    if len(f):
+        start.append(f)
+        cell.append(exact(f).view(np.uint64))
+    start, cell = np.concatenate(start), np.concatenate(cell)
+    order = np.argsort(start, kind="stable")
+    return start[order], cell[order].view(np.int64)
 
 
 def raster_to_cell(lon0, lat0, mesh_x, mesh_y, res: int) -> np.ndarray:
-    """Cell ids (k, h, w) of k pixel grids: pixel (i, r, c) lies at
-    (lon0[i] + mesh_x[c], lat0[i] + mesh_y[r]).  Equal, id for id, to
-    :func:`lonlat_to_cell` on the broadcast grids.
-
-    Each row is encoded on a lattice (every RUN-th pixel and the last).  The
-    pixels between two lattice pixels take the left one's id when both have
-    the same id, lie outside the face-centre exclusion and have every final
-    weight above :func:`run_margin`; a run that fails is halved at an
-    encoded midpoint until its pieces pass or have no pixel between their
-    ends.  Trig is per column and per row, and the floats are those of
-    :func:`lonlat_to_cell` (same NumPy ufuncs on the same inputs).
-    """
-    lon0 = np.asarray(lon0, dtype=np.float64)
-    lat0 = np.asarray(lat0, dtype=np.float64)
-    mesh_x = np.asarray(mesh_x, dtype=np.float64)
-    mesh_y = np.asarray(mesh_y, dtype=np.float64)
+    """Cell ids (k, h, w) of k pixel grids, as :func:`raster_runs` gives
+    them: pixel (i, r, c) lies at (lon0[i] + mesh_x[c], lat0[i] + mesh_y[r]).
+    Equal, id for id, to :func:`lonlat_to_cell` on the broadcast grids."""
     k, h, w = len(lon0), len(mesh_y), len(mesh_x)
-    lon = lon0[:, None] + mesh_x[None, :]  # (k, w)
-    lat = lat0[:, None] + mesh_y[None, :]  # (k, h)
-    step = np.diff(mesh_x)
-    if (not 1 <= res <= bits.MAX_RES or w < 2 or not np.isfinite(lon).all()
-            or not np.isfinite(lat).all() or not ((step >= 0).all() or (step <= 0).all())):
-        return lonlat_to_cell(np.broadcast_to(lon[:, None, :], (k, h, w)),
-                              np.broadcast_to(lat[:, :, None], (k, h, w)), res)
-    step = np.deg2rad(np.abs(step).max())
-    lonr, latr = np.deg2rad(lon).ravel(), np.deg2rad(lat).ravel()
-    cos_lon, sin_lon = np.cos(lonr), np.sin(lonr)
-    cos_lat, sin_lat = np.cos(latr), np.sin(latr)
-    p = np.uint64(59 - 2 * res)
-
-    n = k * h * w
-    ids = np.empty(n, dtype=np.uint64)  # pixel f = (i·h + r)·w + c
-
-    def encode(f):
-        """Encode pixels ``f`` into ``ids`` → (min final weight, sector x)."""
-        wmin = np.empty(len(f), dtype=np.int64)
-        xs = np.empty(len(f))
-        for lo in range(0, len(f), CHUNK):
-            fc = f[lo:lo + CHUNK]
-            row = fc // w
-            img = row // h
-            col = img * w + fc - row * w
-            c = cos_lat[row]
-            v = np.stack([c * cos_lon[col], c * sin_lon[col], sin_lat[row]], axis=-1)
-            face, q, x, y = forward_xyz(v)
-            s, wmin[lo:lo + CHUNK] = point_to_s(x, y, res, weights=True)
-            ids[fc] = _ids(face, q, s, p)
-            xs[lo:lo + CHUNK] = x
-        return wmin, xs
-
-    lattice = (np.arange(0, n, w)[:, None] + np.r_[0:w - 1:RUN, w - 1]).ravel()
-    known = np.zeros(n, dtype=bool)
-    known[lattice] = True
-    wmin, xs = encode(lattice)
-    left = np.flatnonzero(lattice % w != w - 1)
-    # one run per pair of neighbouring encoded pixels in a row: its ends and
-    # their min final weights and sector x
-    run = (lattice[left], lattice[left + 1], wmin[left], wmin[left + 1], xs[left], xs[left + 1])
-    while len(run[0]):
-        a, b, wa, wb, xa, xb = run
-        same = np.flatnonzero(ids[a] == ids[b])
-        ok = b - a < 2
-        ok[same] |= (np.minimum(wa[same], wb[same])
-                     > run_margin((b[same] - a[same]) * step, np.minimum(xa[same], xb[same]), res))
-        a, b, wa, wb, xa, xb = (t[~ok] for t in run)
-        m = (a + b) >> 1
-        known[m] = True
-        wm, xm = encode(m)
-        run = tuple(np.concatenate(t) for t in ((a, m), (m, b), (wa, wm), (wm, wb), (xa, xm), (xm, xb)))
-    # every pixel not encoded lies inside a certified run: it takes the id
-    # of the nearest encoded pixel on its left
-    src = np.where(known.reshape(k * h, w), np.arange(w), 0)
-    np.maximum.accumulate(src, axis=1, out=src)
-    src += np.arange(0, n, w)[:, None]
-    return ids[src].view(np.int64).reshape(k, h, w)
+    start, cell = raster_runs(lon0, lat0, mesh_x, mesh_y, res)
+    return np.repeat(cell, np.diff(start, append=k * h * w)).reshape(k, h, w)
 
 
 def _decode(cells) -> tuple:

@@ -41,11 +41,16 @@ WX = ONE / 2 / TRI_EXIT[0]
 WY = ONE / 2 / TRI_EXIT[1]
 
 
-def point_to_s(px, py, res: int, weights: bool = False):
+def point_to_s(px, py, res: int, weights: bool | str = False):
     """Sierpiński index (2·(res−1) bits) of each sector-frame point within
     the canonical quintant triangle; px/py are finite (N,) float64 arrays.
-    With ``weights`` also returns min(α′, β′, γ′), the point's smallest
+    With ``weights=True`` also returns min(α′, β′, γ′), the point's smallest
     integer weight in its final triangle (0 on the triangle's boundary).
+    With ``weights="all"`` also returns the three weights (α′, β′, γ′) and
+    the path's turn k ∈ 0..3: along the same digit path the final weights
+    change by 2^(res−1)·J^k·(Δα, Δγ) for a change (Δα, Δγ) of the first
+    weights, J the right-angle turn (a, c) ↦ (−c, a), and β′ by minus the
+    sum (DESIGN.md §7.1).
 
     The weights α and γ are rounded half-even once to multiples of 1/ONE
     and clamped to the triangle (α, γ ≥ 0 and α + γ ≤ ONE).  The loop then
@@ -69,8 +74,14 @@ def point_to_s(px, py, res: int, weights: bool = False):
     s = np.zeros(d.shape[0], dtype=np.int64)
     m = np.empty_like(d)
     u = np.empty_like(d)
-    for _ in range(2 * (res - 1)):
+    # each level's gradient map is D0 = [[1, −1], [−1, −1]] or D1 = [[−1, −1],
+    # [−1, 1]] on (α, γ); a level pair multiplies by 2·J^(d₁ − d₂), so the
+    # turn counts first digits up and second digits down
+    turn = np.zeros_like(d) if weights == "all" else None
+    for level in range(2 * (res - 1)):
         np.right_shift(d, 63, out=m)
+        if turn is not None:
+            (np.subtract if level % 2 == 0 else np.add)(turn, m, out=turn)
         np.abs(d, out=u)
         s += s
         s -= m
@@ -81,6 +92,10 @@ def point_to_s(px, py, res: int, weights: bool = False):
         d -= m
     if not weights:
         return s.view(np.uint64)
+    if turn is not None:
+        # α′ + γ′ = ONE − β′ and D = α′ − γ′
+        gamma = (ONE - b - d) >> 1
+        return s.view(np.uint64), (gamma + d, b, gamma), turn & 3
     # α′ + γ′ = ONE − β′ and |D| = |α′ − γ′|, so min(α′, γ′) = (ONE − β′ − |D|)/2
     np.abs(d, out=u)
     np.subtract(ONE, b, out=m)

@@ -4,15 +4,15 @@
 ``mapInPandas`` iterator-of-batches keeps memory bounded: each Arrow batch of
 (image_id, bytes, w, h, fmt, phash) is decoded (vectorized codecs,
 sources/images.py), and the images of one shape are encoded to cells together
-by ``cells.raster_to_cell``.  It takes the pixel grid as the capture points
-plus one row of column offsets and one column of row offsets, encodes a
-lattice of each image row, and gives the pixels between two lattice pixels
-their cell only where a certificate proves the row stays inside it (DESIGN.md
-§7.1), so most pixels are never encoded and every id equals the per-pixel
-encode's.  The pixels are then pre-aggregated *within the batch* (map-side
-combine) before the shuffle — the per-cell partial aggregates are what crosses
-the wire, never raw pixels.  At 100 TB this is the difference between
-shuffling ~10^15 pixels and ~10^12 partial rows.
+by ``cells.raster_runs``.  It takes the pixel grid as the capture points plus
+one row of column offsets and one column of row offsets, models each image's
+sector points from nine projected anchors, and walks each row from one
+cell's exit to the next, so it returns runs of pixels with one cell each
+(DESIGN.md §7.1) and every id equals the per-pixel encode's.  The pixels
+are reduced per run and the runs pre-aggregated *within the batch*
+(map-side combine) before the shuffle — the per-cell partial aggregates are
+what crosses the wire, never raw pixels.  At 100 TB this is the difference
+between shuffling ~10^15 pixels and ~10^12 partial rows.
 """
 
 from __future__ import annotations
@@ -53,11 +53,15 @@ def pixels_to_cells(
 ) -> DataFrame:
     """images(image_id, bytes, w, h, fmt, phash, …) → per-(image, cell) pixel
     aggregates at resolution ``res``.  ``pixel_deg`` is the ground sample
-    distance in degrees (images are anchored at their capture point)."""
+    distance in degrees (images are anchored at their capture point); it
+    must be finite and positive."""
+    if not (np.isfinite(pixel_deg) and pixel_deg > 0):
+        raise ValueError(f"pixel_deg must be a finite number > 0, got {pixel_deg!r}")
 
-    SUB_BATCH = 512  # images per kernel pass — bounds the per-worker working
-    # set (~38 MB peak on the benchmark's images: ids, values and the combine)
-    # so N workers don't churn gigabytes of fresh pages per batch
+    SUB_BATCH = 1000  # images per kernel pass — bounds the per-worker working
+    # set (13.6 MB traced peak per pass on the benchmark's images: pixels,
+    # runs and the combine; 7.0 MB at 512) so N workers don't churn
+    # gigabytes of fresh pages per batch
 
     def tile(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for big in batches:
@@ -73,54 +77,39 @@ def pixels_to_cells(
 def tile_batch(pdf: pd.DataFrame, res: int, pixel_deg: float) -> pd.DataFrame | None:
     """One batch of images → its ``TILE_SCHEMA`` rows (None for no images)."""
     # decode is per-image (variable shapes); the encode is one call per
-    # image shape and the combine one pass over ALL pixels of the batch
+    # image shape, and the pixels are reduced once per run of one cell
     imgs = [decode_image(bytes(r.bytes), r.fmt) for r in pdf.itertuples()]
     if not imgs:
         return None
     lon0, lat0 = capture_point(pdf.phash.to_numpy())
-    # group images by shape: one raster encode per (h, w) group
     by_shape: dict = {}
     for i, im in enumerate(imgs):
         by_shape.setdefault(im.shape, []).append(i)
-    parts_idx, parts_ids, parts_val = [], [], []
+    parts = []
     for (h, w), idxs in by_shape.items():
         idxs = np.asarray(idxs)
         mesh_x = (np.arange(w) - w / 2.0) * pixel_deg  # (w,)
         mesh_y = (h / 2.0 - np.arange(h)) * pixel_deg  # (h,)
-        parts_ids.append(_cells.raster_to_cell(lon0[idxs], lat0[idxs], mesh_x, mesh_y, res).reshape(-1))
-        parts_val.append(np.stack([imgs[i] for i in idxs]).reshape(-1).astype(np.float64))
-        parts_idx.append(np.repeat(idxs, h * w))
-    gi, gc, n, s, mn, mx = combine_pixels(np.concatenate(parts_idx), np.concatenate(parts_ids),
-                                          np.concatenate(parts_val))
+        start, cell = _cells.raster_runs(lon0[idxs], lat0[idxs], mesh_x, mesh_y, res)
+        px = np.stack([imgs[i] for i in idxs]).reshape(-1)
+        parts.append((idxs[start // (h * w)], cell, np.diff(start, append=len(px)),
+                      np.add.reduceat(px, start, dtype=np.float64),
+                      np.minimum.reduceat(px, start), np.maximum.reduceat(px, start)))
+    gi, gc, n, s, mn, mx = combine_runs(*(np.concatenate(c) for c in zip(*parts)))
     return pd.DataFrame({"image_id": pdf.image_id.to_numpy()[gi], "cell": gc, "n_pixels": n,
-                         "sum_value": s, "min_value": mn, "max_value": mx})
+                         "sum_value": s, "min_value": mn.astype(np.float64),
+                         "max_value": mx.astype(np.float64)})
 
 
-def _run_starts(img: np.ndarray, cell: np.ndarray) -> np.ndarray:
-    """Indices where a run of equal (img, cell) begins."""
-    cut = np.empty(len(img), dtype=bool)
-    cut[:1] = True
-    np.not_equal(cell[1:], cell[:-1], out=cut[1:])
-    cut[1:] |= img[1:] != img[:-1]
-    return np.flatnonzero(cut)
-
-
-def combine_pixels(img: np.ndarray, cell: np.ndarray, vals: np.ndarray) -> tuple:
-    """Map-side combine: per distinct (img, cell), sorted by (img, cell) →
-    (img, cell, n, sum, min, max).
-
-    Pixels arrive in raster order per image and a cell spans many adjacent
-    pixels, so runs of equal (img, cell) are reduced first and only the
-    runs are sorted and reduced again.  Exact: min and max do not depend on
-    order, and the sums add integer pixel values far below 2^53."""
-    r = _run_starts(img, cell)
-    n = np.diff(np.append(r, len(img)))
-    s = np.add.reduceat(vals, r)
-    mn = np.minimum.reduceat(vals, r)
-    mx = np.maximum.reduceat(vals, r)
-    order = np.lexsort((cell[r], img[r]))
-    gi, gc, n, s, mn, mx = (a[order] for a in (img[r], cell[r], n, s, mn, mx))
-    g = _run_starts(gi, gc)
+def combine_runs(img: np.ndarray, cell: np.ndarray, n: np.ndarray, s: np.ndarray,
+                 mn: np.ndarray, mx: np.ndarray) -> tuple:
+    """Map-side combine: runs of pixels (image, cell, count, sum, min, max)
+    → the same per distinct (image, cell), sorted by (image, cell).  Exact:
+    min and max do not depend on order, and the sums add integer pixel
+    values far below 2^53."""
+    order = np.lexsort((cell, img))
+    gi, gc, n, s, mn, mx = (a[order] for a in (img, cell, n, s, mn, mx))
+    g = np.flatnonzero(np.r_[True, (gi[1:] != gi[:-1]) | (gc[1:] != gc[:-1])])
     return (gi[g], gc[g], np.add.reduceat(n, g), np.add.reduceat(s, g),
             np.minimum.reduceat(mn, g), np.maximum.reduceat(mx, g))
 

@@ -308,36 +308,147 @@ def test_point_to_s_final_weights_are_barycentric(res):
     assert np.abs(bary.min(axis=0) - wmin / ONE).max() < 1e-12
 
 
-def test_run_margin_bounds_the_chord_deviation():
-    """On 200 benchmark images, how far each row strays from the chord
-    between two pixels RUN (and 4) apart, in the entry/exit weights of one
-    face and quintant, carried to final weights by the 2^res gradient
-    bound, stays below run_margin / SAFETY: the margin is the measured
-    bound times SAFETY, not a value tuned to pass."""
-    from numpy.lib.stride_tricks import sliding_window_view
+@pytest.mark.parametrize("res", [1, 2, 5, 14, 20])
+def test_point_to_s_turn_carries_the_final_weights(res):
+    """``point_to_s(weights="all")``: for two points of one final triangle,
+    the final weights differ by 2^(res−1)·J^turn applied to the difference
+    of the rounded first weights, exactly (DESIGN.md §7.1)."""
+    from a5pg_spark.core.cells import _TURN
+    from a5pg_spark.core.hilbert import WX, WY, point_to_s
+    from a5pg_spark.core.projection import TRI_EXIT
 
+    rng = np.random.default_rng(res)
+    x = rng.uniform(0.05, TRI_EXIT[0], 5000)
+    y = rng.uniform(-1.0, 1.0, 5000) * x * TRI_EXIT[1] / TRI_EXIT[0]
+    eps = 1e-3 * 2.0 ** -res
+    x2, y2 = x + rng.uniform(-eps, eps, 5000), y + rng.uniform(-eps, eps, 5000)
+    s, w, turn = point_to_s(x, y, res, weights="all")
+    s2, w2, _ = point_to_s(x2, y2, res, weights="all")
+    assert np.array_equal(s, point_to_s(x, y, res))
+    assert np.array_equal(np.min(w, axis=0), point_to_s(x, y, res, weights=True)[1])
+    inside = (s == s2) & (np.min(w, axis=0) > 0) & (np.min(w2, axis=0) > 0)
+    assert inside.mean() > 0.99
+
+    def first(px, py):
+        return (np.rint(px * WX - py * WY).astype(np.int64),
+                np.rint(px * WX + py * WY).astype(np.int64))
+
+    (a, g), (a2, g2) = first(x, y), first(x2, y2)
+    R = _TURN[turn].astype(np.int64) << (res - 1)
+    da, dg = a2 - a, g2 - g
+    ra, rg = R[:, 0] * da + R[:, 1] * dg, R[:, 2] * da + R[:, 3] * dg
+    for got, want in zip((w2[0] - w[0], w2[1] - w[1], w2[2] - w[2]), (ra, -ra - rg, rg)):
+        assert np.array_equal(got[inside], want[inside])
+
+
+@pytest.mark.parametrize("pixel_deg", [1e-4, 1e-3, 1e-2])
+def test_model_bound_covers_the_first_weights(pixel_deg):
+    """On 200 benchmark images, the largest gap between each pixel's
+    modelled first weights (the biquadratic through its image's 3×3
+    anchors) and the ones the per-pixel encode computes stays below
+    model_bound / SAFETY: the margin is the measured bound times SAFETY,
+    not a value tuned to pass."""
     from a5pg_spark.core import cells, projection
-    from a5pg_spark.core.hilbert import WX, WY
+    from a5pg_spark.core.hilbert import ONE, WX, WY
     from perfbench import inputs
 
-    res = 14
-    for n in (4, cells.RUN):
-        worst = 0.0
-        for r in inputs.image_rows(1, 200).itertuples():
-            if r.w <= n:
-                continue
-            face, q, x, y = projection.forward(*inputs.pixel_lonlat(r))
-            shape = (int(r.h), int(r.w))
-            frac = np.arange(1, n) / n
-            dev = 0.0
-            for wt in (x * WX - y * WY, x * WX + y * WY):
-                win = sliding_window_view(wt.reshape(shape), n + 1, axis=1)
-                chord = win[..., :1] + (win[..., -1:] - win[..., :1]) * frac
-                dev = np.maximum(dev, np.abs(win[..., 1:-1] - chord).max(axis=-1))
-            key = sliding_window_view((5 * face + q).reshape(shape), n + 1, axis=1)
-            xs = sliding_window_view(x.reshape(shape), n + 1, axis=1)
-            margin = cells.run_margin(n * np.deg2rad(inputs.PIXEL_DEG),
-                                      np.minimum(xs[..., 0], xs[..., -1]), res)
-            ok = (key == key[..., :1]).all(axis=-1) & np.isfinite(margin)
-            worst = max(worst, (dev * 2.0**res / margin)[ok].max())
-        assert 0 < worst < 1 / cells.SAFETY, (n, worst)
+    rows = inputs.image_rows(1, 200)
+    lon0, lat0 = I.capture_point(rows.phash.to_numpy())
+    worst, checked = 0.0, 0
+    for (h, w), g in rows.groupby(["h", "w"]).indices.items():
+        mesh_x = (np.arange(w) - w / 2.0) * pixel_deg
+        mesh_y = (h / 2.0 - np.arange(h)) * pixel_deg
+        k = len(g)
+        zero = np.zeros(k, dtype=np.int64)
+        tiles = (np.arange(k), zero, zero + h, zero, zero + w)
+        modelled, origin, X, Y, bound, _ = cells._fit(
+            tiles, lon0[g], lat0[g], mesh_x, mesh_y, cells._step(mesh_x), cells._step(mesh_y), 14)
+        img = np.repeat(np.arange(k), h)
+        row = np.tile(np.arange(h), k)
+        (x0, x1, x2), (y0, y1, y2) = cells._row_model(X[img], Y[img], row, zero[img] + h,
+                                                      zero[img] + w)
+        j = np.arange(w)
+        mx = x0[:, None] + j * (x1[:, None] + j * x2[:, None])   # (k·h, w)
+        my = y0[:, None] + j * (y1[:, None] + j * y2[:, None])
+        face, q, x, y = projection.forward(
+            np.broadcast_to(lon0[g][:, None, None] + mesh_x, (k, h, w)).reshape(-1),
+            np.broadcast_to(lat0[g][:, None, None] + mesh_y[:, None], (k, h, w)).reshape(-1))
+        x, y = x.reshape(k * h, w), y.reshape(k * h, w)
+        gap = np.maximum(np.abs((mx - x) * WX - (my - y) * WY),
+                         np.abs((mx - x) * WX + (my - y) * WY)) / ONE
+        same = (5 * face + q).reshape(k * h, w) == origin[img][:, None]
+        ok = modelled[img][:, None] & same
+        ratio = gap / (bound[img] / cells.SAFETY)[:, None]
+        worst = max(worst, ratio[ok].max())
+        checked += ok.sum()
+    assert checked > 0.9 * sum(int(r.w) * int(r.h) for r in rows.itertuples())
+    assert 0 < worst < 1, worst
+
+
+def test_raster_runs_work_counts():
+    """The run kernel projects at most 2% of the pixels (nine anchors per
+    image and the per-pixel fallbacks) and bisects at most 8% (one per run
+    and the fallbacks) on 400 benchmark images at res 14; the per-pixel
+    encode does both for every pixel.  A margin or fallback that stays exact
+    but walks far more than it should fails here."""
+    from a5pg_spark.core import cells, projection
+    from perfbench import inputs
+
+    count = {"project": 0, "bisect": 0}
+
+    def counted(fn, key):
+        def wrap(v, *a, **kw):
+            count[key] += len(v)
+            return fn(v, *a, **kw)
+        return wrap
+
+    rows = inputs.image_rows(1, 400)
+    lon0, lat0 = I.capture_point(rows.phash.to_numpy())
+    n = 0
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cells, "forward_xyz", counted(cells.forward_xyz, "project"))
+        mp.setattr(projection, "forward_xyz", counted(projection.forward_xyz, "project"))
+        mp.setattr(cells, "point_to_s", counted(cells.point_to_s, "bisect"))
+        for (h, w), g in rows.groupby(["h", "w"]).indices.items():
+            mesh_x = (np.arange(w) - w / 2.0) * inputs.PIXEL_DEG
+            mesh_y = (h / 2.0 - np.arange(h)) * inputs.PIXEL_DEG
+            cells.raster_runs(lon0[g], lat0[g], mesh_x, mesh_y, 14)
+            n += len(g) * h * w
+    assert 0 < count["project"] <= 0.02 * n, count["project"] / n
+    assert 0 < count["bisect"] <= 0.08 * n, count["bisect"] / n
+
+
+@pytest.mark.parametrize("pixel_deg", [1e-4, 1e-3])
+def test_raster_to_cell_equals_per_pixel_on_large_images(pixel_deg):
+    """384×512-pixel images, larger than the benchmark's: one across a
+    quintant edge, which at 1e-3° is cut into tiles with a model each, and
+    one over a face centre.  Tiles that straddle the edge or reach the
+    face-centre exclusion fall back to the per-pixel encode."""
+    from a5pg_spark.core import cells
+    from a5pg_spark.core.dodecahedron import FACE_AXES, VERTICES
+    from a5pg_spark.core.projection import xyz_to_lonlat
+
+    vertex = VERTICES[np.argmax(VERTICES @ FACE_AXES[5])]
+    edge = FACE_AXES[5] + vertex
+    lon0, lat0 = xyz_to_lonlat(np.stack([edge / np.linalg.norm(edge), FACE_AXES[5]]))
+    lat0 = lat0 + np.array([0.0, 30 * pixel_deg])
+    h, w = 384, 512
+    mesh_x = (np.arange(w) - w / 2.0) * pixel_deg
+    mesh_y = (h / 2.0 - np.arange(h)) * pixel_deg
+    zero = np.zeros(2, dtype=np.int64)
+    cuts = cells._fit((np.arange(2), zero, zero + h, zero, zero + w), lon0, lat0, mesh_x,
+                      mesh_y, cells._step(mesh_x), cells._step(mesh_y), 14)[-1]
+    assert (cuts[0] > 1) == (pixel_deg == 1e-3)
+    for res in (14, 20):
+        want = cells.lonlat_to_cell(
+            np.broadcast_to(lon0[:, None, None] + mesh_x[None, None, :], (2, h, w)),
+            np.broadcast_to(lat0[:, None, None] + mesh_y[None, :, None], (2, h, w)), res)
+        assert np.array_equal(cells.raster_to_cell(lon0, lat0, mesh_x, mesh_y, res), want)
+
+
+@pytest.mark.parametrize("pixel_deg", [float("nan"), float("inf"), 0.0, -1e-4])
+def test_pixels_to_cells_rejects_bad_pixel_deg(pixel_deg):
+    """A pixel size that is not finite and positive fails on the driver,
+    naming the argument, before any task starts."""
+    with pytest.raises(ValueError, match="pixel_deg"):
+        tiling.pixels_to_cells(None, 14, pixel_deg)
