@@ -124,8 +124,8 @@ VERTICES = _vertices()
 # Per-face quintant layout: quintant q spans local azimuths
 # [alpha_f + 72q, alpha_f + 72(q+1)) where alpha_f is the local azimuth of the
 # face's first vertex.  (k_offset, sign) below select which vertex is "first"
-# and the azimuth direction; they are CALIBRATED against the golden origins
-# (tools/calibrate_orientation.py) — faces with no golden keep defaults.
+# and the azimuth direction; they were CALIBRATED against the golden origins
+# by a one-off tool, since removed — faces with no golden keep defaults.
 # Filled in by calibration; see QUINTANT_TABLE below.
 
 
@@ -140,7 +140,7 @@ def _vertex_azimuths(face: int) -> np.ndarray:
 
 
 # (k_offset into the sorted vertex-azimuth list, azimuth sign) per face.
-# Calibrated by tools/calibrate_orientation.py against the golden origins
+# Calibrated against the golden origins by a one-off tool, since removed
 # (margins in deg: f0 0.008, f1 7.1, f3 28.6, f4 9.3, f6 17.3); faces without
 # goldens default to (0, +1).  Verified in tests/test_projection_goldens.py.
 QUINTANT_TABLE = {f: (0, +1) for f in range(12)}

@@ -1,1 +1,1 @@
-from . import lineage, partitioning  # noqa: F401
+from . import partitioning  # noqa: F401

@@ -467,10 +467,8 @@ def run_stage(
     job can audit row/cell/byte conservation across stages without scanning
     data.
 
-    ``plans.lineage.run_stage`` is the PATH-level sibling (inputs are opaque
-    strings hashed into the checkpoint id); this form is preferred when the
-    inputs are snapshot tables, because new input commits auto-invalidate
-    the resume.
+    This is the engine's one checkpoint-resume API: inputs are snapshot
+    tables, so a new input commit invalidates the resume by itself.
     """
     in_snaps = {}
     dfs = {}

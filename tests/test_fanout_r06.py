@@ -78,22 +78,24 @@ def test_spatial_join_slim_cover_same_result(spark):
 
 def test_queries_window_order_covers_unchecked():
     """The driver checks the FIRST 50 queries: the 9 previously-unchecked
-    ones must lead, the 9 rotated-out ones must trail, and the full catalog
-    plus its oracles must stay intact."""
+    ones must lead, and the full catalog plus its oracles must stay intact."""
     import __spark_entry__ as E
 
     names = list(E.queries())
     assert len(names) == 59
-    assert names[:9] == E._CHECK_FIRST
-    assert names[-9:] == E._CHECK_LAST
     assert set(names) == set(E.oracle_sql())
-    # everything previously unchecked now sits inside the 50-row window
-    assert all(n in set(names[:50]) for n in E._CHECK_FIRST)
+    # everything previously unchecked sits inside the 50-row window
+    assert names[:9] == [
+        "a5_route_cells", "sample_documents", "rel_bucketed_join",
+        "sketch_quantile_prices", "events_range_join", "embed_ann_srp",
+        "embed_ann_ivf", "dedup_embedding_pairs", "images_tiling_mosaic",
+    ]
 
 
 def test_elephant_oracles_raise_on_read_without_the_layer():
-    """Listing the oracles reads no file; reading either elephant oracle
-    without the elephant layer raises the error that names the file."""
+    """Listing the oracles or testing a name reads no file; reading either
+    elephant oracle without the elephant layer raises the error that names
+    the file."""
     import os
 
     import __spark_entry__ as E
@@ -102,16 +104,16 @@ def test_elephant_oracles_raise_on_read_without_the_layer():
     if os.path.exists(ELEPHANT_SQL):
         pytest.skip(f"the elephant layer is present: {ELEPHANT_SQL}")
     oracles = E.oracle_sql()
-    assert list(oracles)[-2:] == ["spatial_join_elephant", "a5_dissolve_export"]
+    assert len(list(oracles)) == 59
     for name in ("spatial_join_elephant", "a5_dissolve_export"):
+        assert name in oracles
         with pytest.raises(FileNotFoundError, match="elephant_a5_cells.sql"):
             oracles[name]
+    assert "spatial_join" not in oracles
 
 
-def test_queries_order_is_pinned_and_keeps_the_popped_values(monkeypatch):
-    """The correctness gate checks the first 50 names, so the order is pinned whole.
-    Each trailing query is the value ``queries()`` popped, so an operator
-    query wins over SQL text of the same name there as everywhere else."""
+def test_queries_order_is_pinned():
+    """The correctness gate checks the first 50 names, so the order is pinned whole."""
     import __spark_entry__ as E
 
     assert list(E.queries()) == [
@@ -136,10 +138,17 @@ def test_queries_order_is_pinned_and_keeps_the_popped_values(monkeypatch):
         "a5_compact_roundtrip", "a5_roundtrip_quality", "a5_resolution_histogram",
         "dedup_exact_docs", "text_lang_stats", "skew_salted_join",
     ]
-    ends = {name: object() for name in E._CHECK_FIRST + E._CHECK_LAST}
-    monkeypatch.setattr(E, "_OPERATOR_QUERIES", {**E._OPERATOR_QUERIES, **ends})
-    got = E.queries()
-    assert all(got[name] is fn for name, fn in ends.items())
+
+
+def test_registry_rejects_a_duplicate_name():
+    """Each query is declared once: a second entry of a name raises when
+    the registry is built, so no entry can silently shadow another."""
+    import __spark_entry__ as E
+
+    run = E.queries()["a5_res0_cells"]
+    with pytest.raises(ValueError, match="a5_res0_cells"):
+        E._registry(("a5_res0_cells", run, "SELECT 1"),
+                    ("a5_res0_cells", run, "SELECT 2"))
 
 
 def test_embed_knn_gate_sums_a_directory_layout(spark, sf_dir, tmp_path):

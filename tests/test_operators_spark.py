@@ -1,5 +1,5 @@
 """Operator-layer tests: spatial join, kNN, dedup, similarity, text,
-partitioning, lineage — against NumPy ground truth and planted fixtures."""
+partitioning — against NumPy ground truth and planted fixtures."""
 
 import json
 import os
@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from a5pg_spark.core import bits
 from a5pg_spark.operators import dedup, geometry as G, knn, similarity, spatial_join, text
-from a5pg_spark.plans import lineage, partitioning
+from a5pg_spark.plans import partitioning
 from a5pg_spark.sources import polygons as polysrc
 
 
@@ -329,28 +329,6 @@ class TestPlans:
                                                         num_partitions=8)
         assert out.count() == 1000
         assert set(out.columns) == {"cell", "v"}
-
-    def test_lineage_idempotent_resume(self, spark, tmp_path):
-        calls = {"n": 0}
-
-        def build():
-            calls["n"] += 1
-            return spark.sql("SELECT a5_synth_cell(id, 6) AS cell FROM range(0, 100)")
-
-        p = str(tmp_path / "stage1")
-        df1 = lineage.run_stage(spark, "s1", build, p, inputs=["range"],
-                                config={"res": 6})
-        assert df1.count() == 100 and calls["n"] == 1
-        df2 = lineage.run_stage(spark, "s1", build, p, inputs=["range"],
-                                config={"res": 6})
-        assert df2.count() == 100 and calls["n"] == 1  # resumed, not rebuilt
-        m = json.load(open(f"{p}/_lineage.json"))
-        assert m["rows"] == 100 and m["metrics"]["cells"] is not None
-        assert m["partitions"] and all("rows" in x for x in m["partitions"])
-        # changed config → rebuild
-        lineage.run_stage(spark, "s1", build, p, inputs=["range"],
-                          config={"res": 7})
-        assert calls["n"] == 2
 
 
 class TestStreaming:
