@@ -9,8 +9,8 @@ correctness gate compares the two at sf0.01;
 
 Importing this module reads no input file: an oracle that a builder makes
 is built when it is read.  ``embed_ann_ivf``'s builder reads the embeddings
-of the scale factor it is built for (its centroids).  The elephant layer
-(``sources/polygons.ELEPHANT_SQL``) is read only when
+of the scale factor it is built for (its centroids).  The committed
+elephant layer (``sources/polygons.ELEPHANT_GEOJSON``) is read only when
 ``spatial_join_elephant`` or ``a5_dissolve_export`` runs, and when their
 two oracles are read.
 
@@ -1071,26 +1071,31 @@ _A5_COMPACT_ROUNDTRIP_ORACLE = f"""
 """
 
 
+def _elephant_x30() -> dict:
+    """The elephant layer scaled 30× about (0, 0), so the global point cloud
+    hits it: a fresh dict on every call, for the query and its oracle."""
+    from a5pg_spark.sources import polygons as P
+
+    def scale(c):
+        return [scale(v) for v in c] if isinstance(c[0], list) else [c[0] * 30, c[1] * 30]
+
+    fc = P.elephant_feature_collection()
+    for f in fc["features"]:
+        f["geometry"]["coordinates"] = scale(f["geometry"]["coordinates"])
+    return fc
+
+
 def _q_spatial_join_elephant(spark, sf_dir):
     """Point-in-polygon spatial join of derived capture points against the
-    elephant polygon layer (scaled 30× so the global point cloud hits it);
-    deterministic counts per part.  The oracle is the same even-odd PIP."""
+    elephant polygon layer (``_elephant_x30``); deterministic counts per
+    part.  The oracle is the same even-odd PIP."""
     _prep(spark, sf_dir)
-    import json as _json
-
     import pyspark.sql.functions as F
 
     from a5pg_spark.operators.spatial_join import spatial_join
     from a5pg_spark.sources import polygons as P
 
-    fc = P.elephant_feature_collection()
-    for f in fc["features"]:
-        g = f["geometry"]
-        if g["type"] == "Polygon":
-            g["coordinates"] = [[[x * 30, y * 30] for x, y in r] for r in g["coordinates"]]
-        else:
-            g["coordinates"] = [g["coordinates"][0] * 30, g["coordinates"][1] * 30]
-    polys = P.from_feature_collection(spark, fc)
+    polys = P.from_feature_collection(spark, _elephant_x30())
     from a5pg_spark.plans.partitioning import fan_out_scan
 
     # r06: fan the slim point rows out to all cores before the 25-projection
@@ -1128,11 +1133,8 @@ def _spatial_join_oracle_sql() -> str:
     ray-cast PIP over the same (x30-scaled) edge list, embedded as literals.
     The engine's cover stage is a pure candidate filter (covers are exact
     supersets), so ground truth is plain PIP per part."""
-    from a5pg_spark.sources import polygons as P
-
-    fc = P.elephant_feature_collection()
     rows = []
-    for f in fc["features"]:
+    for f in _elephant_x30()["features"]:
         part = f["properties"]["part"]
         g = f["geometry"]
         if g["type"] == "Polygon":
@@ -1148,8 +1150,8 @@ def _spatial_join_oracle_sql() -> str:
                     if a[0] == b[0] and a[1] == b[1]:
                         continue
                     rows.append(
-                        f"('{part}', {float(a[0]) * 30!r}, {float(a[1]) * 30!r}, "
-                        f"{float(b[0]) * 30!r}, {float(b[1]) * 30!r})"
+                        f"('{part}', {float(a[0])!r}, {float(a[1])!r}, "
+                        f"{float(b[0])!r}, {float(b[1])!r})"
                     )
     vals = ",\n      ".join(rows)
     return f"""

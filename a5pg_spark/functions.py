@@ -106,22 +106,6 @@ SQL_BODIES = {
 }
 
 
-def duckdb_sql_bodies() -> dict:
-    """The same function bodies as DuckDB CREATE MACRO statements — the
-    driver's oracle runs these so Spark and DuckDB evaluate identical ANSI
-    bit arithmetic."""
-    out = {}
-    for name, body in SQL_BODIES.items():
-        sig, ret = body.split(" RETURNS ", 1)
-        _, expr = ret.split(" RETURN ", 1)
-        args = sig.strip("()")
-        argnames = ", ".join(a.strip().split(" ")[0] for a in args.split(","))
-        e = expr
-        # dialect deltas: Spark DIV → //, shiftleft/shiftrightunsigned → << / >>
-        out[name] = (name, argnames, e)
-    return out
-
-
 # Registered after the pandas UDFs (they reference them).  DEFAULT parameters
 # let reference SQL port verbatim: a5_cell_to_boundary(id) / (id, closed) /
 # (id, closed, segments) all resolve (the reference overloads these arities,

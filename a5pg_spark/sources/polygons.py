@@ -6,20 +6,20 @@ typed rows → persisted table)."""
 from __future__ import annotations
 
 import json
-import re
+import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-ELEPHANT_SQL = "/root/reference/tests/elephant_a5_cells.sql"
+ELEPHANT_GEOJSON = os.path.join(os.path.dirname(__file__), "elephant.geojson")
 
 
 def elephant_feature_collection() -> dict:
-    """The exact 5-feature elephant FeatureCollection embedded in the
-    reference test (3 polygons + 2 point eyes near (0, 0))."""
-    sql = open(ELEPHANT_SQL).read()
-    m = re.search(r"'(\{\"type\":\"FeatureCollection\".*?\})'::jsonb", sql, re.S)
-    return json.loads(m.group(1))
+    """The 5-feature elephant FeatureCollection committed beside this module
+    (3 concave polygons, one with a hole, + 2 point eyes near (0, 0); how it
+    was authored is FIXTURES.md §2).  Each call returns a fresh dict."""
+    with open(ELEPHANT_GEOJSON) as f:
+        return json.load(f)
 
 
 def from_feature_collection(spark: SparkSession, fc: dict,

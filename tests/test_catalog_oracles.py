@@ -15,9 +15,8 @@ import numpy as np
 import pytest
 
 import __spark_entry__ as E
-from a5pg_spark.sources.polygons import ELEPHANT_SQL
-
-ELEPHANT_QUERIES = {"spatial_join_elephant", "a5_dissolve_export"}
+from a5pg_spark.sources.polygons import ELEPHANT_GEOJSON
+from test_reference_paths import REFERENCE_ROOT
 
 
 @pytest.fixture(scope="module")
@@ -37,8 +36,6 @@ def _sorted(df):
 
 @pytest.mark.parametrize("name", list(E.queries()))
 def test_query_equals_its_oracle(spark, sf_dir, duck, name):
-    if name in ELEPHANT_QUERIES and not os.path.exists(ELEPHANT_SQL):
-        pytest.skip(f"reference corpus not available: {ELEPHANT_SQL}")
     got = _sorted(E.queries()[name](spark, sf_dir).toPandas())
     want = _sorted(duck.execute(E.oracle_sql(sf_dir)[name]).fetchdf())
     assert list(got.columns) == list(want.columns)
@@ -59,12 +56,14 @@ def test_query_equals_its_oracle(spark, sf_dir, duck, name):
 _IMPORT_PROBE = """
 import os, sys
 
-roots = tuple(os.path.join(r, "") for r in sys.argv[1:])
+layer, *roots = sys.argv[1:]
+roots = tuple(os.path.join(r, "") for r in roots)
 hits = []
 
 
 def names_a_root(v):
-    return isinstance(v, (str, bytes)) and os.fsdecode(v).startswith(roots)
+    return isinstance(v, (str, bytes)) and (
+        os.fsdecode(v).startswith(roots) or os.fsdecode(v) == layer)
 
 
 def audit(event, args):
@@ -79,19 +78,27 @@ def profile(frame, event, arg):
 
 sys.addaudithook(audit)
 sys.setprofile(profile)
-import __spark_entry__  # noqa: E402,F401
+import __spark_entry__  # noqa: E402
+oracles = __spark_entry__.oracle_sql()
+assert len(list(oracles)) == 59
+assert "spatial_join_elephant" in oracles and "a5_dissolve_export" in oracles
+assert "spatial_join" not in oracles
 sys.setprofile(None)
 assert not hits, hits
 """
 
 
 def test_import_reads_no_input_file(sf_dir):
-    """``import __spark_entry__`` opens no file under the data or reference
-    roots.  An ``open`` audit hook sees Python's own opens; pyarrow and
-    DuckDB open files in C++, which raises no audit event, so the probe
-    also records every Python call whose arguments name a path there."""
-    roots = [os.path.dirname(sf_dir), os.path.dirname(os.path.dirname(ELEPHANT_SQL))]
+    """``import __spark_entry__``, listing ``oracle_sql()`` and testing the
+    two elephant names with ``in`` open no file under the data or reference
+    roots, nor the elephant layer.  An ``open`` audit hook sees Python's own
+    opens; pyarrow and DuckDB open files in C++, which raises no audit
+    event, so the probe also records every Python call whose arguments name
+    a path there.  The layer's exact path is watched, not its directory,
+    which holds the modules the import opens."""
+    roots = [os.path.dirname(sf_dir), REFERENCE_ROOT]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r = subprocess.run([sys.executable, "-c", _IMPORT_PROBE, *roots], cwd=repo,
+    r = subprocess.run([sys.executable, "-c", _IMPORT_PROBE, ELEPHANT_GEOJSON, *roots],
+                       cwd=repo,
                        capture_output=True, text=True, timeout=300)
     assert r.returncode == 0, r.stderr[-2000:]

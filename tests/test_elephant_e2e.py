@@ -1,5 +1,6 @@
 """End-to-end elephant pipeline vs the reference's golden corpus
-(tests/elephant_cells.csv, 146 rows).
+(tests/elephant_cells.csv, 146 rows, FIXTURES.md §4) over the committed
+elephant layer (FIXTURES.md §2).
 
 The golden CSV was generated with the reference's *random* fill sampler
 (ST_GeneratePoints — tests/elephant_a5_cells.sql:73-78), so exact set
@@ -17,40 +18,28 @@ Full-id parity is blocked on the a5 crate's intra-quintant pentagon lattice
 """
 
 import csv
-import json
 import os
-import re
 
 import numpy as np
 import pytest
 
 from a5pg_spark.core import bits, cells
 from a5pg_spark.operators import geometry as G
+from a5pg_spark.sources.polygons import elephant_feature_collection
+import test_projection_goldens as goldens
 
-GOLDEN_CSV = "/root/reference/tests/elephant_cells.csv"
-ELEPHANT_SQL = "/root/reference/tests/elephant_a5_cells.sql"
-
-
-def _require(path):
-    if not os.path.exists(path):
-        pytest.skip(f"reference corpus not available: {path}")
+GOLDEN_CSV = os.path.join(os.path.dirname(__file__), "elephant_cells.csv")
 
 
 @pytest.fixture(scope="module")
 def features():
-    _require(ELEPHANT_SQL)
-    sql = open(ELEPHANT_SQL).read()
-    fc = json.loads(
-        re.search(r"'(\{\"type\":\"FeatureCollection\".*?\})'::jsonb", sql, re.S).group(1)
-    )
-    return fc["features"]
+    return elephant_feature_collection()["features"]
 
 
 @pytest.fixture(scope="module")
 def golden():
-    _require(GOLDEN_CSV)
-    rows = list(csv.DictReader(open(GOLDEN_CSV)))
-    return [(r["part"], int(r["cell_id"])) for r in rows]
+    with open(GOLDEN_CSV) as f:
+        return [(r["part"], int(r["cell_id"])) for r in csv.DictReader(f)]
 
 
 def deterministic_samples(features):
@@ -83,6 +72,9 @@ class TestElephantE2E:
             # the CSV header's ":res 11" predates a resolution renumbering)
             assert bits.res_of(c) == 10
             assert bits.origin_of(c) == 19
+        # the two eyes' ids are the independent eye goldens
+        eyes = {part: gid for *_, gid, part in goldens.TestGoldenOriginParity.EYE_GOLDENS}
+        assert {p: c for p, c in golden if p.startswith("eye")} == eyes
 
     def test_origin_parity_end_to_end(self, features, golden):
         samples = deterministic_samples(features)

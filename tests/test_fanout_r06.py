@@ -92,26 +92,6 @@ def test_queries_window_order_covers_unchecked():
     ]
 
 
-def test_elephant_oracles_raise_on_read_without_the_layer():
-    """Listing the oracles or testing a name reads no file; reading either
-    elephant oracle without the elephant layer raises the error that names
-    the file."""
-    import os
-
-    import __spark_entry__ as E
-    from a5pg_spark.sources.polygons import ELEPHANT_SQL
-
-    if os.path.exists(ELEPHANT_SQL):
-        pytest.skip(f"the elephant layer is present: {ELEPHANT_SQL}")
-    oracles = E.oracle_sql()
-    assert len(list(oracles)) == 59
-    for name in ("spatial_join_elephant", "a5_dissolve_export"):
-        assert name in oracles
-        with pytest.raises(FileNotFoundError, match="elephant_a5_cells.sql"):
-            oracles[name]
-    assert "spatial_join" not in oracles
-
-
 def test_queries_order_is_pinned():
     """The correctness gate checks the first 50 names, so the order is pinned whole."""
     import __spark_entry__ as E

@@ -2,7 +2,6 @@
 partitioning — against NumPy ground truth and planted fixtures."""
 
 import json
-import os
 
 import numpy as np
 import pandas as pd
@@ -17,8 +16,6 @@ from a5pg_spark.sources import polygons as polysrc
 
 @pytest.fixture(scope="module")
 def elephant(spark):
-    if not os.path.exists(polysrc.ELEPHANT_SQL):
-        pytest.skip(f"reference corpus not available: {polysrc.ELEPHANT_SQL}")
     return polysrc.elephant_polygons(spark)
 
 

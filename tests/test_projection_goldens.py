@@ -6,15 +6,11 @@ pentagon lattice, which is not publicly reconstructible in this environment;
 those asserts are marked xfail with measured values (DESIGN.md §4).
 """
 
-import json
-import os
-import re
-
 import numpy as np
 import pytest
 
 from a5pg_spark.core import bits, cells
-from a5pg_spark.sources.polygons import ELEPHANT_SQL
+from a5pg_spark.sources.polygons import elephant_feature_collection
 
 GOLDEN_FORWARD = [
     # lon, lat, res, reference cell id (u64), origin
@@ -41,15 +37,9 @@ class TestGoldenOriginParity:
         # expected/hex_functions.out:40 — bit-for-bit
         assert enc(0.0, 0.0, 0) & 0xFFFFFFFFFFFFFFFF == 0x0E00000000000000
 
-    @pytest.mark.skipif(not os.path.exists(ELEPHANT_SQL),
-                        reason=f"reference corpus not available: {ELEPHANT_SQL}")
     def test_elephant_origins(self):
-        sql = open(ELEPHANT_SQL).read()
-        fc = json.loads(
-            re.search(r"'(\{\"type\":\"FeatureCollection\".*?\})'::jsonb", sql, re.S).group(1)
-        )
         pts = []
-        for f in fc["features"]:
+        for f in elephant_feature_collection()["features"]:
             g = f["geometry"]
             pts += g["coordinates"][0] if g["type"] == "Polygon" else [g["coordinates"]]
         pts = np.array(pts)
