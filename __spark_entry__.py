@@ -1381,9 +1381,10 @@ ORDER BY id_a, id_b
 
 
 def _q_ngram_jaccard(spark, sf_dir):
-    """Exact n-gram Jaccard near-dup pairs via the df-pruned inverted index
-    (operators/dedup.py:ngram_jaccard_pairs) — deterministic candidates,
-    exact verify; the DuckDB oracle replicates the identical pipeline."""
+    """Exact n-gram Jaccard near-dup pairs by counted overlap
+    (operators/dedup.py:ngram_jaccard_pairs): the postings self-join counts
+    the shingles each pair shares, J = n / (|A| + |B| − n).  The DuckDB
+    oracle counts the same overlap in its own SQL."""
     _prep(spark, sf_dir)
     from a5pg_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -1400,19 +1401,16 @@ _DEDUP_NGRAM_JACCARD_ORACLE = r"""
       FROM documents
     ),
     post AS (SELECT doc_id, UNNEST(shs) AS g FROM sh),
-    rare AS (SELECT g FROM post GROUP BY g HAVING COUNT(*) <= 100),
-    pruned AS (SELECT p.doc_id, p.g FROM post p JOIN rare USING (g)),
-    cand AS (
-      SELECT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM pruned l JOIN pruned r ON l.g = r.g AND l.doc_id < r.doc_id
+    shared AS (
+      SELECT l.doc_id AS id_a, r.doc_id AS id_b, COUNT(*) AS n
+      FROM post l JOIN post r ON l.g = r.g AND l.doc_id < r.doc_id
       GROUP BY 1, 2
     )
     SELECT id_a, id_b, ROUND(j, 6) AS jaccard
     FROM (
       SELECT id_a, id_b,
-             CAST(len(list_intersect(x.shs, y.shs)) AS DOUBLE)
-               / CAST(len(list_distinct(list_concat(x.shs, y.shs))) AS DOUBLE) AS j
-      FROM cand JOIN sh x ON x.doc_id = cand.id_a JOIN sh y ON y.doc_id = cand.id_b
+             CAST(n AS DOUBLE) / CAST(len(x.shs) + len(y.shs) - n AS DOUBLE) AS j
+      FROM shared JOIN sh x ON x.doc_id = shared.id_a JOIN sh y ON y.doc_id = shared.id_b
     )
     WHERE j >= 0.5
     ORDER BY id_a, id_b
@@ -3261,9 +3259,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 class _OracleView(Mapping):
     """The catalog's DuckDB oracles by name, each built when it is read.
-    Listing the names or testing one with ``in`` builds nothing; reading
-    an elephant oracle without the elephant layer raises its
-    ``FileNotFoundError``."""
+    Listing the names or testing one with ``in`` builds nothing."""
 
     def __init__(self, sf_dir: str | None) -> None:
         self._sf_dir = sf_dir

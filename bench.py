@@ -48,10 +48,11 @@ BENCH_QUERIES = [
 
 def _host_probe(seconds: float = 1.5) -> int:
     """Single-thread pure-python spin rate — evidence of host-cap state at
-    record time (this VM applies time-varying CPU capping that is invisible
-    as steal%; see BENCH/BASELINE.md).  Quiet-window reference on this host:
-    ~25-35M loops/s; capped windows measure a fraction of that.  Recorded in
-    the JSON so a slow suite can be attributed to the window, not the plans."""
+    record time (the 32-core host of BENCH/BASELINE.md applied time-varying
+    CPU capping that is invisible as steal%).  On the 4-core host 16 samples
+    read 40-61M loops/s (most 53-61M); capped windows measure a fraction of
+    that.  Recorded in the JSON so a slow suite can be attributed to the
+    window, not the plans."""
     t0 = time.time()
     n = 0
     while time.time() - t0 < seconds:
@@ -77,7 +78,7 @@ def main() -> None:
     spark.sql("SELECT COUNT(*) FROM lineitem").collect()
     startup = time.time() - t_start
 
-    # Each query runs TWICE and the record is the min: the host applies
+    # Each query runs TWICE and the record is the min: the 32-core host applied
     # time-varying aggregate CPU capping (BENCH/BASELINE.md), so a single
     # sample convolves the plan with whatever the cap did that second —
     # min-of-2 is the better estimator of the engine (round-3 VERDICT carried

@@ -1,7 +1,9 @@
 """Operator-layer tests: spatial join, kNN, dedup, similarity, text,
 partitioning — against NumPy ground truth and planted fixtures."""
 
+import itertools
 import json
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
@@ -141,13 +143,36 @@ class TestDedup:
         assert pa == pb
 
     def test_ngram_jaccard_exact_pairs(self, spark, docs):
-        """The df-pruned inverted index finds the same verified pairs as
-        MinHash-LSH on this corpus — and deterministically (no hashing)."""
-        a = dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.5).toPandas()
+        """Counted-overlap Jaccard equals a brute-force Python-set Jaccard
+        over every pair of the planted corpus, rounded as Spark's ``round``
+        (half up).  MinHash-LSH, which is probabilistic, finds the same
+        pairs on this corpus."""
+        k = 5
+        sets = sorted((r.doc_id, {r.text[i:i + k] for i in range(max(1, len(r.text) - k + 1))})
+                      for r in docs.select("doc_id", "text").collect())
+        want = []
+        for (a, sa), (b, sb) in itertools.combinations(sets, 2):
+            n = len(sa & sb)
+            j = n / (len(sa) + len(sb) - n)
+            if j >= 0.5:
+                want.append((a, b, float(Decimal(repr(j)).quantize(
+                    Decimal("1e-6"), ROUND_HALF_UP))))
         b = dedup.ngram_jaccard_pairs(docs, jaccard_threshold=0.5).toPandas()
-        pa = sorted(zip(a.id_a, a.id_b, a.jaccard))
         pb = sorted(zip(b.id_a, b.id_b, b.jaccard))
-        assert pa == pb
+        assert pb == want and len(want) >= 2
+        a = dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.5).toPandas()
+        assert sorted(zip(a.id_a, a.id_b, a.jaccard)) == pb
+
+    def test_ngram_jaccard_identical_documents(self, spark):
+        """102 copies of one text: every shingle is in all 102 documents,
+        and every one of the 5,151 pairs is found with J = 1."""
+        df = spark.createDataFrame(
+            [(i, "the quick brown fox jumps over") for i in range(102)],
+            "doc_id long, text string")
+        pairs = dedup.ngram_jaccard_pairs(df, jaccard_threshold=0.5).toPandas()
+        assert len(pairs) == 5151
+        assert set(zip(pairs.id_a, pairs.id_b)) == set(itertools.combinations(range(102), 2))
+        assert (pairs.jaccard == 1.0).all()
 
     def test_simhash_near_dup(self, spark, docs):
         pairs = dedup.simhash_near_dup_pairs(docs, max_hamming=3).toPandas()
