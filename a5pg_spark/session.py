@@ -10,7 +10,10 @@ and ``__spark_entry__._prep`` sets them on a session it did not make, so both
 read the same values.  ``spark.python.daemon.module`` is a static conf, read
 when the context starts, so ``_prep`` cannot set it: a session the engine did
 not make keeps the stock ``pyspark.daemon`` and, before CPython 3.12, its
-~0.2 s of CPU per Python task (DESIGN.md §7.2).
+~0.2 s of CPU per Python task (DESIGN.md §7.2).  Likewise only a JVM that
+``get_spark`` starts gets the class-data-sharing archive of Spark's classes
+(``jvm/cds.py``, DESIGN.md §7.3): it is a flag on the driver's command line,
+which a running session cannot take.
 """
 
 from __future__ import annotations
@@ -35,9 +38,11 @@ for _v in ("OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS", "OMP_NUM_THREADS",
 os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
 os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 from . import jvm
+from .jvm import cds
 
 # The runtime-settable SQL values every session of the engine needs.
 SQL_CONF = {
@@ -96,6 +101,9 @@ def get_spark(
         os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
     # the jar must be on spark.jars before the JVM starts, so it is built first
     conf["spark.jars"] = ",".join(filter(None, [conf.get("spark.jars"), jvm.build_jar()]))
+    # the driver's flags for the class-data-sharing archive, and the file
+    # its JVM dumps the archive to when there is none yet
+    archive_flags, dump = cds.driver_flags()
     cpus = host_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -134,9 +142,10 @@ def get_spark(
         # kept compiling that long tail for dozens of queries (1-2 s of
         # compile CPU per 1.3 s spatial-join job after three warm-up jobs).
         # Per-row loops cross the raised thresholds within the first query.
-        .config("spark.driver.extraJavaOptions",
+        .config("spark.driver.extraJavaOptions", " ".join(filter(None, [
                 "-XX:+UseParallelGC -XX:Tier4InvocationThreshold=15000 "
-                "-XX:Tier4MinInvocationThreshold=1800 -XX:Tier4CompileThreshold=45000")
+                "-XX:Tier4MinInvocationThreshold=1800 -XX:Tier4CompileThreshold=45000",
+                archive_flags])))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _driver_memory())
         .config("spark.ui.enabled", "false")
         # PySpark records the Python call site of every Column and DataFrame
@@ -150,6 +159,9 @@ def get_spark(
     )
     for k, v in {**SQL_CONF, **conf}.items():
         b = b.config(k, v)
+    launched = SparkContext._gateway is None  # else an earlier session's JVM is reused
     spark = b.getOrCreate()
+    if launched and dump:
+        cds.publish_when_done(spark._jvm.java.lang.ProcessHandle.current().pid(), dump)
     jvm.ensure(spark)
     return spark
