@@ -21,6 +21,8 @@ from pyspark.errors import AnalysisException
 HERE = os.path.dirname(os.path.abspath(__file__))
 BUILD_DIR = os.path.join(HERE, ".build")
 CLASS, FUNCTION = "A5Encode", "a5_encode_jvm"
+# the driver JVM's compiler directives (session.DRIVER_FLAGS, DESIGN.md §7.4)
+C2_EXCLUDE = os.path.join(HERE, "c2_exclude.json")
 
 
 def _java(v) -> str:

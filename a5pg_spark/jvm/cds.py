@@ -92,8 +92,10 @@ def publish_when_done(jvm_pid: int, tmp: str) -> None:
 
 def publish(jvm_pid: int, tmp: str) -> None:
     """Once the JVM ``jvm_pid`` has exited, rename its complete dump
-    ``<stem>.<pid>.tmp`` to ``<stem>-<size>.jsa``, unless an archive for the
-    key is there already; delete an incomplete one."""
+    ``<stem>.<pid>.tmp`` to ``<stem>-<size>.jsa`` and delete an incomplete
+    one; then keep only the key's largest archive, which holds the classes of
+    the session that loaded most.  A JVM that has mapped a deleted archive
+    keeps its pages."""
     try:
         pidfd = os.pidfd_open(jvm_pid)
     except ProcessLookupError:  # exited already
@@ -105,12 +107,20 @@ def publish(jvm_pid: int, tmp: str) -> None:
     try:
         with open(tmp, "rb") as f:
             complete = f.read(4) == MAGIC
-        if complete and not glob.glob(f"{glob.escape(stem)}-*.jsa"):
+        if complete:
             os.replace(tmp, f"{stem}-{os.path.getsize(tmp)}.jsa")
         else:
             os.remove(tmp)
     except FileNotFoundError:  # the JVM dumped nothing
-        pass
+        return
+    archives = glob.glob(f"{glob.escape(stem)}-*.jsa")
+    # two publishers may run at once: each keeps the largest it sees
+    archives.sort(key=lambda p: int(p[len(stem) + 1:-4]))
+    for path in archives[:-1]:
+        try:
+            os.remove(path)
+        except FileNotFoundError:
+            pass
 
 
 if __name__ == "__main__":

@@ -12,8 +12,11 @@ when the context starts, so ``_prep`` cannot set it: a session the engine did
 not make keeps the stock ``pyspark.daemon`` and, before CPython 3.12, its
 ~0.2 s of CPU per Python task (DESIGN.md §7.2).  Likewise only a JVM that
 ``get_spark`` starts gets the class-data-sharing archive of Spark's classes
-(``jvm/cds.py``, DESIGN.md §7.3): it is a flag on the driver's command line,
-which a running session cannot take.
+(``jvm/cds.py``, DESIGN.md §7.3) and the compiler directives that keep C2
+off Spark's per-query code (``jvm/c2_exclude.json``, DESIGN.md §7.4): both
+are flags on the driver's command line, which a running session cannot take.
+A caller's ``spark.driver.extraJavaOptions`` in ``extra_conf`` is added after
+the engine's driver flags, not in place of them.
 """
 
 from __future__ import annotations
@@ -70,6 +73,28 @@ SQL_CONF = {
     # changes nothing but bucketed-table scans.
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
 }
+
+
+# The driver JVM's flags, besides the class-data-sharing archive's.
+# ParallelGC: G1's concurrent marking, started by humongous allocations,
+# landed 0.13-0.2 s of GC-thread CPU on about one query in four; ParallelGC
+# does no work outside its pauses.
+# Tier4*Threshold x3: Spark's planner, scheduler and py4j code runs a few
+# thousand times per query, so with the default thresholds C2 kept compiling
+# that long tail for dozens of queries (1-2 s of compile CPU per 1.3 s
+# spatial-join job after three warm-up jobs).  Per-row loops cross the raised
+# thresholds within the first query.
+# CompilerDirectivesFile: code that runs once per query, stage or class load
+# (ANTLR, Janino, the JDK's lambda spinning, class loading from jars, Hadoop's
+# config XML parser) is compiled by C1 only, so C2 spends set-up on per-row
+# code (jvm/c2_exclude.json, DESIGN.md §7.4).  DisplayVMOutputToStderr moves
+# HotSpot's "1 compiler directives added" off the driver's stdout.
+DRIVER_FLAGS = " ".join([
+    "-XX:+UseParallelGC -XX:Tier4InvocationThreshold=15000",
+    "-XX:Tier4MinInvocationThreshold=1800 -XX:Tier4CompileThreshold=45000",
+    f"-XX:+UnlockDiagnosticVMOptions -XX:CompilerDirectivesFile={jvm.C2_EXCLUDE}",
+    "-XX:+DisplayVMOutputToStderr",
+])
 
 
 def host_cpus() -> int:
@@ -134,18 +159,10 @@ def get_spark(
         # spark.sql.streaming.noDataMicroBatches.enabled is not set here: it
         # would change every watermarked aggregation, so only the stream that
         # needs it sets it (streaming/ingest.streaming_dedup).
-        # ParallelGC: G1's concurrent marking, started by humongous
-        # allocations, landed 0.13-0.2 s of GC-thread CPU on about one
-        # query in four; ParallelGC does no work outside its pauses.
-        # Tier4*Threshold x3: Spark's planner, scheduler and py4j code runs
-        # a few thousand times per query, so with the default thresholds C2
-        # kept compiling that long tail for dozens of queries (1-2 s of
-        # compile CPU per 1.3 s spatial-join job after three warm-up jobs).
-        # Per-row loops cross the raised thresholds within the first query.
+        # A caller's options come last: where HotSpot keeps the last
+        # occurrence of a flag, the caller's wins.
         .config("spark.driver.extraJavaOptions", " ".join(filter(None, [
-                "-XX:+UseParallelGC -XX:Tier4InvocationThreshold=15000 "
-                "-XX:Tier4MinInvocationThreshold=1800 -XX:Tier4CompileThreshold=45000",
-                archive_flags])))
+                DRIVER_FLAGS, archive_flags, conf.pop("spark.driver.extraJavaOptions", None)])))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _driver_memory())
         .config("spark.ui.enabled", "false")
         # PySpark records the Python call site of every Column and DataFrame

@@ -14,7 +14,9 @@ from unittest import mock
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TODAY = ("-XX:+UseParallelGC -XX:Tier4InvocationThreshold=15000 "
-         "-XX:Tier4MinInvocationThreshold=1800 -XX:Tier4CompileThreshold=45000")
+         "-XX:Tier4MinInvocationThreshold=1800 -XX:Tier4CompileThreshold=45000 "
+         "-XX:+UnlockDiagnosticVMOptions -XX:CompilerDirectivesFile="
+         f"{REPO}/a5pg_spark/jvm/c2_exclude.json -XX:+DisplayVMOutputToStderr")
 
 
 def _spark_home(root, conf_files) -> str:
@@ -28,7 +30,7 @@ def _spark_home(root, conf_files) -> str:
     return str(home)
 
 
-def _built(monkeypatch, tmp_path, conf_files):
+def _built(monkeypatch, tmp_path, conf_files, **kwargs):
     """get_spark's builder options, SPARK_CONF_DIR at launch and the dumps it
     asked to publish, with a fake Spark home and no JVM."""
     from pyspark.sql import SparkSession
@@ -51,7 +53,7 @@ def _built(monkeypatch, tmp_path, conf_files):
         return mock.MagicMock()
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", launch)
-    session.get_spark()
+    session.get_spark(**kwargs)
     return home, seen, published
 
 
@@ -75,6 +77,16 @@ def test_user_conf_dir_is_left_alone(monkeypatch, tmp_path):
     assert seen["SPARK_CONF_DIR"] is None
     assert seen["spark.driver.extraJavaOptions"] == TODAY
     assert published == [] and not (tmp_path / "build").exists()
+
+
+def test_callers_driver_options_follow_the_engines(monkeypatch, tmp_path):
+    """extra_conf's spark.driver.extraJavaOptions is added after the engine's
+    flags, so the caller's wins where HotSpot keeps the last occurrence."""
+    home, seen, published = _built(monkeypatch, tmp_path, [], extra_conf={
+        "spark.driver.extraJavaOptions": "-Dx=1 -XX:+UseSerialGC"})
+    opts = seen["spark.driver.extraJavaOptions"]
+    assert opts.startswith(f"{TODAY} -XX:ArchiveClassesAtExit=")
+    assert opts.endswith(" -Xlog:cds*=off -Dx=1 -XX:+UseSerialGC")
 
 
 def test_a_complete_archive_is_mapped_and_a_short_one_dropped(monkeypatch, tmp_path):
@@ -134,10 +146,18 @@ def test_publish_renames_only_a_complete_dump(tmp_path):
     tmp.write_bytes(cds.MAGIC + bytes(4092))
     cds.publish(_gone_pid(), str(tmp))
     assert os.listdir(tmp_path) == [f"{stem.name}-4096.jsa"]
-    tmp.write_bytes(cds.MAGIC + bytes(8))  # a second first session's dump
+    tmp.write_bytes(cds.MAGIC + bytes(8))  # a smaller dump of a second first session
     cds.publish(_gone_pid(), str(tmp))
     assert os.listdir(tmp_path) == [f"{stem.name}-4096.jsa"]
+    tmp.write_bytes(cds.MAGIC + bytes(8188))  # a larger one replaces the archive
+    cds.publish(_gone_pid(), str(tmp))
+    assert os.listdir(tmp_path) == [f"{stem.name}-8192.jsa"]
+    (tmp_path / "spark-4567-100.jsa").write_bytes(bytes(100))  # another key's
+    tmp.write_bytes(cds.MAGIC + bytes(4092))
+    cds.publish(_gone_pid(), str(tmp))
+    assert sorted(os.listdir(tmp_path)) == [f"{stem.name}-8192.jsa", "spark-4567-100.jsa"]
     cds.publish(_gone_pid(), str(tmp))  # the JVM dumped nothing
+    assert sorted(os.listdir(tmp_path)) == [f"{stem.name}-8192.jsa", "spark-4567-100.jsa"]
 
 
 _SESSION = textwrap.dedent("""
